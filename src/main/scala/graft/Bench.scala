@@ -30,16 +30,13 @@ import org.apache.spark.sql.SparkSession
   * `bench_out.json`) — stdout on a stalled host arrives interleaved
   * with sbt log lines, so the file is the authoritative artifact.
   *
-  * Set `SPARK_GRAFT_EXPLAIN_DIR` to also dump `explain("formatted")`
-  * per query (skipped for [[FitQueries]] — building their DataFrame
-  * runs the model fit / stream, so an explain dump would execute them
-  * twice).
+  * Plan records (bench_explain/) come from [[Profile]], not from here.
   */
 object Bench {
   /** Queries that fit an ML model, run an iterative fixpoint, or drive
-    * a full streaming pipeline (single bench run, see below; their
-    * DataFrame construction already executes jobs, so the explain dump
-    * is skipped too). */
+    * a full streaming pipeline: their DataFrame construction already
+    * executes jobs, so they are timed as a median of full runs, not
+    * warm-up plus min-of-iters (see below). */
   val FitQueries: Set[String] = Set(
     "x10_ols_ladder", "x11_kmeans_j6", "x15_scoring", "x17_ols_inference",
     "dd7_dup_groups",
@@ -209,9 +206,6 @@ object Bench {
       val p = Paths.get(sys.env.getOrElse("SPARK_GRAFT_QUIET_REF", "bench_history/QUIET_REF.json"))
       if (Files.isReadable(p)) BenchCalib.parseQuietRef(Files.readString(p)) else Map.empty
     }
-
-    val explainDir = sys.env.get("SPARK_GRAFT_EXPLAIN_DIR")
-    explainDir.foreach(d => new java.io.File(d).mkdirs())
 
     // SPARK_GRAFT_BENCH_SKIP: comma-separated query names to leave out,
     // recorded in the artifact so a reader can't mistake a filtered run
@@ -385,11 +379,6 @@ object Bench {
       val degraded = elapsedS > budgetS / 2
       val sec =
         try {
-          if (!isFit) explainDir.foreach { d =>
-            val plan = fn(spark, sfDir).queryExecution.explainString(
-              org.apache.spark.sql.execution.FormattedMode)
-            Files.writeString(Paths.get(s"$d/$name.txt"), plan)
-          }
           if (isFit && !degraded) {
             modes.put(name, "fitmed3")
             val runs = Seq.fill(3) {

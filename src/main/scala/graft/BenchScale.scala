@@ -964,7 +964,7 @@ object BenchScale {
       ("mm_imagededup", (f: Int) => {
         // mm9's ENGINE shape at ×f: the formula pixels are computed in
         // executors as Column arithmetic (the PNG codec leg is priced
-        // by mm9 itself / ProbeStreamFixed's seam; this leg measures
+        // by mm9 itself; this leg measures
         // the dedup topology — dHash packing + 4×16-bit banded
         // self-join + hamming verify — the part that must survive
         // 100×). Replicas get DISTINCT gradient families (a

@@ -2,8 +2,8 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Shared runtime plumbing for the CLI mains (Bench/Verify/Probe/
-  * ExplainFit/BenchScale/ShufflePin/InflateSf/TimeQ/DumpPlan) — one
+/** Shared runtime plumbing for the CLI mains (Bench/Verify/Profile/
+  * BenchScale/ShufflePin/InflateSf, and perfbench's Main) — one
   * definition of the local session config so a session-semantics fix
   * (e.g. a new legacy-parquet flag the fixtures need) lands everywhere
   * at once instead of drifting across copy-pasted builders. */
@@ -36,8 +36,9 @@ object LocalRun {
   }
 
   /** Number of streaming STATE partitions the engine's bounded-stream
-    * queries run with — the p8 lever the r13 ProbeStreamFixed
-    * decomposition priced: a stateful operator instantiates one state
+    * queries run with — the p8 lever the r13 stream fixed-cost
+    * decomposition priced (BASELINE.md "Streaming suite fixed cost"
+    * and "Retired probes"): a stateful operator instantiates one state
     * store per shuffle partition at a fresh checkpoint's first batch,
     * and the per-trigger commit cycle across the stores (NOT data
     * volume) dominated the streaming suite's cost at fixture scale

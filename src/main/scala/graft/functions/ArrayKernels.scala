@@ -623,8 +623,9 @@ object SortedOverlapCount {
   /** Shared by interpreted eval and generated code. Dispatches to a
     * monomorphic UnsafeArrayData walk when possible: the generic
     * ArrayData walk pays a megamorphic isNullAt + getLong dispatch
-    * PER ELEMENT, measured at ~6 µs per 2×45-element evaluation in
-    * ProbeKernel — ~20× the flat-array walk — which multiplied into
+    * PER ELEMENT, measured at ~6 µs per 2×45-element evaluation by a
+    * retired microbenchmark (BASELINE.md "Retired probes") — ~20× the
+    * flat-array walk — which multiplied into
     * minutes over dd_prefix's 350M collision rows at the 100× leg.
     * The head-only null check is sound because sortedness is already
     * the kernel's precondition and sort_array places nulls FIRST: a

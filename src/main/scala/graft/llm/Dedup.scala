@@ -169,7 +169,8 @@ object Dedup {
     * instead aggregated collision rows per pair for a count filter
     * (Sarawagi & Kirpal 2004) before a separate verify join; at the
     * 100× scale leg that pair-count exchange shuffled 550M slim rows
-    * and was 70% of leg wall-clock (133 s of 195 s, ProbePrefix),
+    * and was 70% of leg wall-clock (133 s of 195 s; BASELINE.md
+    * "Retired probes"),
     * while the array-carrying prefix exchange is bounded by PREFIX
     * rows (~10M × ~430 B) — documents meet grams, pairs never shuffle.
     *
@@ -548,9 +549,10 @@ object Dedup {
           .groupBy(col("u").as("doc"))
           .agg(min("lbl").as("lbl"),
             max(when(col("v") === col("u"), col("lbl"))).as("old"))
-        // observability hook (graft.ExplainFit): sees the round's full
-        // UN-checkpointed plan — proves each round's plan is constant-
-        // size (the localCheckpoint lineage-truncation claim)
+        // observability hook (graft.Profile's dd7/dd8 plan records):
+        // sees the round's full UN-checkpointed plan — proves each
+        // round's plan is constant-size (the localCheckpoint
+        // lineage-truncation claim)
         onRoundPlan(round, nextPlan)
         // convergence count folded into the materialization (r18): the
         // old shape paid a second job per round to re-scan the fresh

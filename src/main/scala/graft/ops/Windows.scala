@@ -113,7 +113,9 @@ object Windows {
     * their global position (zipWithIndex's one extra count pass =
     * the per-partition-offset pass of the classic two-pass rank).
     * Values are identical: id = 0-based position in key order, emitted
-    * as the same non-nullable int row_number produced. */
+    * as the same non-nullable int row_number produced; past 2^31
+    * distinct keys the id no longer fits and the job fails
+    * ([[denseRank]]) instead of wrapping negative. */
   def denseId(df: DataFrame, key: String, idCol: String): DataFrame = {
     val spark = df.sparkSession
     val sorted = df.select(col(key)).distinct()
@@ -123,10 +125,14 @@ object Windows {
       sorted.schema.fields :+ org.apache.spark.sql.types.StructField(
         idCol, org.apache.spark.sql.types.IntegerType, nullable = false))
     val rows = sorted.rdd.zipWithIndex.map { case (r, i) =>
-      org.apache.spark.sql.Row(r.get(0), i.toInt)
+      org.apache.spark.sql.Row(r.get(0), denseRank(i))
     }
     spark.createDataFrame(rows, schema)
   }
+
+  /** [[denseId]]'s global key position as its int id: throws
+    * ArithmeticException past Int.MaxValue rather than wrapping. */
+  private[ops] def denseRank(position: Long): Int = Math.toIntExact(position)
 
   /** W7: gap-based SESSIONIZATION — the classic event-analytics
     * operator (the general form of the reference's per-poll grouping):

@@ -69,7 +69,7 @@ object IngestQueries extends Q.Registry {
 
   /** Plan-observability probe: the physical plan of the last micro-
     * batch the most recent [[runToMemory]] stream executed (what
-    * [[graft.ExplainFit]] commits to bench_explain/ for st1-st3 — the
+    * [[graft.Profile]] commits to bench_explain/ for every stream — the
     * per-batch plan is where the state store and watermark machinery
     * live; the memory-table read the query returns is trivial). */
   @volatile private[graft] var lastStreamPlan: Option[String] = None
@@ -128,7 +128,8 @@ object IngestQueries extends Q.Registry {
     // conf window (capturePlanWhileActive loops until inactive), so
     // each stateful operator gets 8 state stores sized to fixture
     // state volume instead of 32 sized to the batch session's CPUs —
-    // the r13 ProbeStreamFixed p8 lever, taken where it belongs: in
+    // the r13 stream fixed-cost probe's p8 lever (BASELINE.md "Retired
+    // probes"), taken where it belongs: in
     // the stream's own definition, as a production deployment would
     graft.LocalRun.withShufflePartitions(s, graft.LocalRun.StreamStatePartitions) {
       val q = df.writeStream.format("memory").queryName(sink)

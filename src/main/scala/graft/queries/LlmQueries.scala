@@ -6189,7 +6189,7 @@ object LlmQueries extends Q.Registry {
             graft.streaming.SubstrDedupStream.step(
               s, tableDir, outDir, b, batchId, "doc_id", "text", k)
             // last capture wins = the day-2 batch (cleans against v1,
-            // the advanced table) — the plan ExplainFit commits
+            // the advanced table) — the plan graft.Profile commits
             IngestQueries.lastStreamPlan = Some(
               Dedup.duplicateSpansIncremental(
                   graft.streaming.SubstrDedupStream.tableFor(s, tableDir, batchId),

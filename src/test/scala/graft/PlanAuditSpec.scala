@@ -22,8 +22,8 @@ import org.apache.spark.sql.execution.FormattedMode
   * during DataFrame construction (model fits, fixpoint rounds, a
   * micro-batch stream run); at sf0.001 that costs seconds, and the
   * audited plan is the final result-stage plan — the per-round
-  * iterative shapes live in bench_explain/ (captured by Bench with
-  * SPARK_GRAFT_EXPLAIN_DIR).
+  * iterative shapes live in bench_explain/ (written by `runMain
+  * graft.Profile`, the one regenerate command).
   */
 class PlanAuditSpec extends SparkSpec {
   private val sfDir = "/root/testdata/sf0.001"
@@ -125,8 +125,11 @@ class PlanAuditSpec extends SparkSpec {
     // audits the committed captures themselves, so a lost broadcast
     // inside a micro-batch body fails the build the same way a batch
     // regression does. The file list is pinned to every registered
-    // st*/llm8 stream (ExplainFit's stream set) rather than discovered,
-    // so silently dropping a capture cannot shrink the sweep.
+    // st*/llm8 stream rather than discovered, so silently dropping a
+    // capture cannot shrink the sweep; and each file must carry the
+    // micro-batch section, because graft.Profile derives "stream" from
+    // the capture itself — a stream that stopped capturing would be
+    // recorded as a plain batch plan and drop out of this audit.
     val streamNames = SparkEntry.queries.keys.toSeq.sorted
       .filter(n => n.startsWith("st") && n != "st17_stream_ann_grown") ++
       Seq("llm8_stream_curation")
@@ -137,29 +140,30 @@ class PlanAuditSpec extends SparkSpec {
         s"missing committed stream plan capture $f")
       val plan = java.nio.file.Files.readString(f)
       val bad = Seq(
+        Some("no micro-batch capture section")
+          .filterNot(_ => plan.contains(Profile.MicroBatchSection)),
         Some("SortMergeJoin").filter(plan.contains),
         Some("CartesianProduct").filter(plan.contains)).flatten
       if (bad.nonEmpty) Some(s"$name: ${bad.mkString(", ")}") else None
     }
     assert(offenders.isEmpty,
-      "SMJ/cartesian in committed stream-plan captures (regenerate via " +
-        s"graft.ExplainFit after fixing the join):\n${offenders.mkString("\n")}")
+      "bad committed stream-plan captures (fix, then regenerate via " +
+        s"`runMain graft.Profile`):\n${offenders.mkString("\n")}")
   }
 
   test("every registered query has a committed bench_explain/ plan file — " +
     "the zero-SMJ sweep provably covers the whole registry") {
-    // Bench (SPARK_GRAFT_EXPLAIN_DIR) writes the non-fit plans;
-    // ExplainFit writes the fit/stream/iterative ones. tx11/tx14 fell
-    // between the two paths in r7 (83 files for 85 queries) and the
-    // committed sweep silently excluded them — this pins the full set.
+    // graft.Profile writes one file per registered query. When two
+    // tools split the registry, tx11/tx14 fell between them in r7 (83
+    // files for 85 queries) and the committed sweep silently excluded
+    // them — this pins the full set.
     val dir = new java.io.File("bench_explain")
     assert(dir.isDirectory, s"missing ${dir.getAbsolutePath}")
     val missing = SparkEntry.queries.keys.toSeq.sorted
       .filterNot(n => new java.io.File(dir, s"$n.txt").isFile)
     assert(missing.isEmpty,
       s"queries with no committed plan dump: ${missing.mkString(", ")} — " +
-        "run graft.Bench with SPARK_GRAFT_EXPLAIN_DIR=bench_explain then " +
-        "graft.ExplainFit")
+        "regenerate via `runMain graft.Profile`")
   }
 
   test("uncached scans receive pruned schemas and pushed filters through " +
