@@ -44,6 +44,7 @@ object BenchPartitioned {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
       .config("spark.ui.enabled", "false")
+      .config(LocalRun.LocalFsConf)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 

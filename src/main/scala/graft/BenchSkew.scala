@@ -48,6 +48,7 @@ object BenchSkew {
       .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
       .config("spark.sql.autoBroadcastJoinThreshold", "-1")
       .config("spark.ui.enabled", "false")
+      .config(LocalRun.LocalFsConf)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 

@@ -87,9 +87,11 @@ object IngestBatch {
     (dim, fact)
   }
 
-  /** J4: insert-only-new dim rows (etl_job.py:121-125). */
+  /** J4: insert-only-new dim rows (etl_job.py:121-125). A left-anti
+    * join keeps a row iff no existing key matches, so duplicate
+    * existing keys need no dedup (a `distinct` would add a shuffle). */
   def newDimsOnly(incoming: DataFrame, existing: DataFrame, key: String): DataFrame =
-    incoming.join(broadcast(existing.select(key).distinct()), Seq(key), "left_anti")
+    incoming.join(broadcast(existing.select(key)), Seq(key), "left_anti")
 
   /** S8 batch analog: drop replays on the warehouse unique key before
     * append (sql/init_schema.sql:17). */

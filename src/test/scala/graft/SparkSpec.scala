@@ -33,5 +33,6 @@ object SparkSpec {
     // so the test session must plan joins identically
     .config("spark.sql.requireAllClusterKeysForCoPartition", "false")
     .config("spark.ui.enabled", "false")
+    .config(LocalRun.LocalFsConf)
     .getOrCreate()
 }

@@ -73,4 +73,12 @@ class IngestBatchSpec extends SparkSpec {
       .select("station_no").as[String].collect().toSet
     assert(out === Set("a", "c"))
   }
+
+  test("anti-join upsert is unchanged by duplicated existing keys (no distinct needed)") {
+    val incoming = Seq(("a", 1), ("b", 2), ("c", 3), ("c", 4)).toDF("station_no", "x")
+    val existing = Seq("b", "b", "c", "c", "c", "z").map(k => (k, 0)).toDF("station_no", "y")
+    val out = IngestBatch.newDimsOnly(incoming, existing, "station_no")
+      .as[(String, Int)].collect().toSeq
+    assert(out === Seq(("a", 1)))
+  }
 }
