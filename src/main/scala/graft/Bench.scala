@@ -54,37 +54,31 @@ object Bench {
     "st13_stream_funnel",         // two-trigger funnel-state stream, same
     "st14_stream_funnel_late",    // four-trigger buffered funnel, same
     "st15_stream_ann_topk",       // foreachBatch ANN serving stream, same
-    "st16_stream_embedding_index", // two-trigger index-append stream (memo)
-    "st17_stream_ann_grown",      // serves st16's memo; a fresh JVM would run the stream at build
-    "st18_stream_dup_groups",     // two-trigger label-maintenance stream (memo)
-    "llm8_stream_curation",       // two-trigger composed curation stream (memo)
+    "st16_stream_embedding_index", // two-trigger index-append stream (artifact)
+    "st17_stream_ann_grown",      // serves st16's artifact; a fresh JVM would run the stream at build
+    "st18_stream_dup_groups",     // two-trigger label-maintenance stream (artifact)
+    "llm8_stream_curation",       // two-trigger composed curation stream (artifact)
     "tx11_bpe_tokenize", // BPE merge learning runs at plan build
     "tx14_quality_classifier", // IRLS fit runs at plan build
     "ss5_ivfpq_topk") // PQ codebook Lloyd fit runs at plan build
 
   /** Fit queries whose MEASURED SEMANTIC is the fit/maintenance work
-    * itself: the per-dir memos are cleared before every run so the
-    * median-of-3 prices three real runs, not one run and two cache
-    * reads. x15 is deliberately absent — its production shape is
-    * fit-once-score-many batches, so the memoized steady state IS its
-    * honest number; st17 likewise (it SERVES the grown index). st16 is
-    * present because its semantic IS the incremental maintenance
-    * stream — a memo read would price a parquet scan as a pipeline
-    * (r15 self-review). */
-  /** Per-query memo resets for the refit class — ONE structure is both
-    * the membership set and the reset dispatch (r16 self-review: a set
-    * read by name-equality if-chains drifts the moment a new refit
-    * query lands in only one of the two places). */
+    * itself, each mapped to its reset: the query's own [[Artifacts]]
+    * entry is dropped before every run so the median-of-3 prices three
+    * real runs, not one run and two registry reads. x15 is deliberately
+    * absent — its production shape is fit-once-score-many batches, so
+    * the memoized steady state IS its honest number; st17 likewise (it
+    * SERVES the grown index). st16 is present because its semantic IS
+    * the incremental maintenance stream — a registry read would price
+    * a parquet scan as a pipeline (r15 self-review). ONE structure is
+    * both the membership set and the reset dispatch (r16 self-review). */
   val RefitResets: Map[String, () => Unit] = Map(
-    "x10_ols_ladder" -> (() => queries.MlQueries.resetFitMemos()),
-    "x11_kmeans_j6" -> (() => queries.MlQueries.resetFitMemos()),
-    "st16_stream_embedding_index" ->
-      (() => queries.LlmQueries.resetIncrementalIndexMemo()),
-    "st18_stream_dup_groups" ->
-      (() => queries.LlmQueries.resetDupGroupsMemo()),
-    "llm8_stream_curation" ->
-      (() => queries.LlmQueries.resetCurationMemo()))
-  val RefitQueries: Set[String] = RefitResets.keySet
+    "x10_ols_ladder" -> "ols_ladder",
+    "x11_kmeans_j6" -> "kmeans_centroids",
+    "st16_stream_embedding_index" -> "st16_index",
+    "st18_stream_dup_groups" -> "st18_labels",
+    "llm8_stream_curation" -> "llm8_curation")
+    .map { case (query, artifact) => query -> (() => Artifacts.drop(artifact)) }
 
   /** Quiet-host reference for [[spinProbe]] (seconds) — measured on this
     * host across a quiet phase (150M xorshift64 steps: 0.31 s ± 3%; see
@@ -382,9 +376,9 @@ object Bench {
           if (isFit && !degraded) {
             modes.put(name, "fitmed3")
             val runs = Seq.fill(3) {
-              // Each reset gated on the query that owns the memo (r15
-              // ADVICE): a blanket reset would clear st16's grown-index
-              // memo during the x10/x11 refits — order-dependent only
+              // Each reset drops only its own query's artifact (r15
+              // ADVICE): a blanket reset would drop st16's grown index
+              // during the x10/x11 refits — order-dependent only
               // by accident, and a registry reorder would silently
               // force a full stream rebuild mid-bench
               RefitResets.get(name).foreach(_())

@@ -448,6 +448,7 @@ object BenchScale {
         .head().getLong(0)
     } finally {
       plpC.unpersist(blocking = false); boC.unpersist(blocking = false)
+      graft.llm.Dedup.releaseCheckpoint(plp)
     }
   }
 

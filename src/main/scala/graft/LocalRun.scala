@@ -133,66 +133,6 @@ object LocalRun {
     java.nio.file.Files.delete(tmp)
   }
 
-  /** Scratch paths whose contents a RETURNED lazy frame still reads
-    * (st7/st12 hand back a DataFrame over their staged `cleaned/` dir,
-    * so the stage root cannot be deleted at build time) — registered
-    * here and swept by ONE JVM shutdown hook, so repeated builds leak
-    * nothing past process exit (r11 ADVICE: st7/st12 left one stage
-    * tree per run behind unconditionally). */
-  private val exitScratch =
-    new java.util.concurrent.ConcurrentLinkedQueue[java.nio.file.Path]()
-  private lazy val exitHookInstalled: Unit =
-    Runtime.getRuntime.addShutdownHook(new Thread(
-      () => {
-        var p = exitScratch.poll()
-        while (p != null) {
-          try deleteRecursively(p) catch { case _: Exception => () }
-          p = exitScratch.poll()
-        }
-        slotScratch.values().forEach(r =>
-          try deleteRecursively(r) catch { case _: Exception => () })
-        slotScratch.clear()
-      },
-      "graft-scratch-sweeper"))
-
-  /** One live scratch tree per named slot: registering a new root for a
-    * slot deletes the PRIOR tree immediately, so a long-lived session
-    * re-running a staged-stream query (bench fitmed3 triples, repeated
-    * Verify calls) holds at most one stage tree per query on disk
-    * instead of accumulating one per run until JVM exit (r12 ADVICE).
-    * Safe because a slot's prior returned frame is fully consumed
-    * before the same query rebuilds. The current root of every slot is
-    * still swept by the exit hook. */
-  private val slotScratch =
-    new java.util.concurrent.ConcurrentHashMap[String, java.nio.file.Path]()
-  def deleteOnExitSlot(slot: String, root: java.nio.file.Path): Unit = {
-    exitHookInstalled
-    val prev = slotScratch.put(slot, root)
-    if (prev != null && prev != root)
-      try deleteRecursively(prev) catch { case _: Exception => () }
-    ()
-  }
-
-  /** Test seam: the current root registered under `slot`, if any. */
-  private[graft] def slotScratchCurrent(slot: String): Option[java.nio.file.Path] =
-    Option(slotScratch.get(slot))
-
-  /** Register `root` for deletion at JVM exit (idempotent to register;
-    * safe if already deleted by then). */
-  def deleteOnExit(root: java.nio.file.Path): Unit = {
-    exitHookInstalled
-    exitScratch.add(root)
-    ()
-  }
-
-  /** Test seam: paths currently queued for the exit sweep. */
-  private[graft] def exitScratchSnapshot: Seq[java.nio.file.Path] = {
-    val it = exitScratch.iterator()
-    val b = Seq.newBuilder[java.nio.file.Path]
-    while (it.hasNext) b += it.next()
-    b.result()
-  }
-
   /** Recursive delete for the temp trees the staged-stream queries
     * create (children before parents; missing files tolerated). */
   def deleteRecursively(root: java.nio.file.Path): Unit = {

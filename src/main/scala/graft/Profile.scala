@@ -22,7 +22,7 @@ import graft.queries.IngestQueries
   * then [[queries.Warm.prime]]).
   *
   * Per query it prints the plan-build seconds, then [[Runs]] measured
-  * runs timed the Bench way (the [[Bench.RefitResets]] memo reset, then
+  * runs timed the Bench way (the [[Bench.RefitResets]] artifact drop, then
   * `queryExecution.toRdd.count()`). Every build and run carries its
   * Spark job, stage and task counts, and each stream trigger it ran
   * prints its `durationMs` phases and state-store commit time.

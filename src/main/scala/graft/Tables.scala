@@ -61,44 +61,19 @@ object Tables {
       spark.conf.set(NtzKey, "false")
   }
 
-  /** Per-(session, dir, table) memo of the constructed frame. A
-    * DataFrame is an immutable plan, so handing every caller the same
-    * object is safe — and necessary for the floor: the fan-out decision
-    * below costs a full logical→physical planning pass
-    * (.rdd.getNumPartitions), which un-memoized ran again on EVERY
-    * load() call of every query (driver-side, ~tens of ms each — a
-    * measurable slice of the per-query floor at toy scale). Retention
-    * contract, stated plainly: entries live for the JVM (a weak map
-    * would be a lie — a DataFrame strongly references its session, the
-    * value-refers-to-key cycle that defeats weak keys), bounded by
-    * (sessions used × ten small plan objects); a session-churning host
-    * calls [[clearLoadMemo]]. The memo also pins the frame's resolved
-    * file listing like prime()'s cache already does — if the data
-    * directory is regenerated mid-JVM, start a new session (what every
-    * main and the driver do anyway) or clear the memo. The retention
-    * bound is additionally self-enforcing for DEAD sessions: every
-    * [[load]] sweeps entries whose SparkContext has stopped (a few map
-    * probes over tens of entries), so a host that churns per-test
-    * sessions (ForeignSessionSpec's newSession pattern) cannot
-    * accumulate frames for sessions that can no longer run them. */
-  private val loadMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, String), DataFrame]()
-
-  /** Drop memo entries owned by stopped sessions (see retention note
-    * above). A stopped context can never execute its frames again, so
-    * eviction is always safe; `removeIf` on the concurrent view is
-    * atomic per entry. */
-  private def sweepStoppedSessions(): Unit =
-    loadMemo.keySet.removeIf { case (s, _, _) => s.sparkContext.isStopped }
-
-  /** Drop every memoized frame (all sessions): for hosts that churn
-    * sessions in one JVM or regenerate data directories in place. */
-  def clearLoadMemo(): Unit = loadMemo.clear()
-
+  /** The constructed frame, built once per (session, dir, table) in
+    * [[Artifacts]]. A DataFrame is an immutable plan, so handing every
+    * caller the same object is safe, and necessary for the floor: the
+    * fan-out decision below costs a full logical→physical planning pass
+    * (.rdd.getNumPartitions), which would otherwise run on EVERY call of
+    * every query (driver-side, ~tens of ms each). The entry lives with
+    * its session and pins the frame's resolved file listing like
+    * prime()'s cache does: if the data directory is regenerated
+    * mid-JVM, start a new session (what every main and the driver do
+    * anyway). */
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {
     require(names.contains(name), s"unknown table: $name")
-    sweepStoppedSessions()
-    loadMemo.computeIfAbsent((spark, dir, name), _ => {
+    Artifacts.get(spark, dir, s"table/$name") { _ =>
       ensureReadConfs(spark)
       val raw = spark.read.parquet(s"$dir/$name.parquet")
       // ns → µs truncation — the same truncation DuckDB applies, so oracle
@@ -119,7 +94,7 @@ object Tables {
       if (fanOut(name) && typed.rdd.getNumPartitions < math.max(2, p / 2))
         typed.repartition(p)
       else typed
-    })
+    }
   }
 
   /** Mark every table's post-fan-out plan as cached so the shared scan +

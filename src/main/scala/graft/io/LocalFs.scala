@@ -7,7 +7,7 @@ import java.nio.file.attribute.PosixFilePermissions
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{ChecksumFs, DelegateToFileSystem, FileStatus, FsConstants,
-  FsServerDefaults, FSLinkResolver, Path, RawLocalFileSystem}
+  FSDataInputStream, FsServerDefaults, FSLinkResolver, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.local.LocalConfigKeys
 import org.apache.hadoop.fs.permission.FsPermission
 
@@ -89,4 +89,12 @@ class LocalFs(uri: URI, conf: Configuration) extends ChecksumFs(
     override def getServerDefaults: FsServerDefaults = LocalConfigKeys.getServerDefaults
     // each local filesystem has its own naming rules; let the OS judge
     override def isValidName(src: String): Boolean = true
-  })
+  }) {
+
+  /** `FileContext.open(p)` — how Spark's checkpoint manager reads
+    * offsets, commits and state-store deltas — reaches Hadoop's
+    * `FilterFs.open(p)`, which goes straight to the raw filesystem and
+    * never checks the `.crc`. Route it to the verifying sized open. */
+  override def open(f: Path): FSDataInputStream =
+    open(f, getServerDefaults(f).getFileBufferSize)
+}

@@ -46,7 +46,12 @@ object LangModel {
     * Returns (pairLogp (b1, b2, logp), ctxBackoff (b1, backoff)) —
     * both bounded by the bucket space, broadcast at any scale.
     * `logpTrunc` fixes the emitted values to a decimal grid so
-    * downstream sums are reproducible across engines. */
+    * downstream sums are reproducible across engines.
+    *
+    * Both tables read one `localCheckpoint`ed pair-count table, and the
+    * caller owns it: release it with [[Dedup.releaseCheckpoint]] on
+    * either returned frame once both are consumed (the
+    * [[Dedup.connectedComponents]] contract). */
   def train(targetDocs: DataFrame, idCol: String, textCol: String,
             buckets: Int, alpha: Double = 1.0,
             logpTrunc: Column => Column = identity): (DataFrame, DataFrame) = {

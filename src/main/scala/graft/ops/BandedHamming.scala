@@ -110,7 +110,7 @@ object BandedHamming {
     * plus both sides of the self-join) — callers whose batch carries
     * codec work must cache it so the decode runs once, not three times
     * (the Dedup.incrementalNearDups caller contract; mm10 does this
-    * through the cachedFrame memo).
+    * through a cached [[graft.Artifacts]] frame).
     *
     * PRECONDITION (r14 ADVICE): the batch's id set must be DISJOINT
     * from the index's — a re-submitted id would otherwise be reported

@@ -375,7 +375,10 @@ object IngestQueries extends Q.Registry {
           .hourlyStreamJoin(status, readings)
           .select(col("hour_window.start").as("hour_start"),
             col("bikes_available"), col("temperature"))
-        val stage = java.nio.file.Files.createTempDirectory("graft_st4_")
+        // partials/ outlives the returned frame's lazy read: one live
+        // stage tree per query (the st7 policy)
+        val stage = graft.Artifacts.replace(graft.Artifacts.Jvm, "", "st4_stage")(
+          _.tree(java.nio.file.Files.createTempDirectory("graft_st4_")))
         val outDir = stage.resolve("partials").toString
         // 8 state stores per join side, not 32 (the runToMemory
         // state-partition note) — the stream defines, starts and
@@ -396,8 +399,7 @@ object IngestQueries extends Q.Registry {
             .start()
           capturePlanWhileActive(q)
         }
-        // partials/ outlives the returned frame's lazy read; the
-        // checkpoint state is per-run scratch (the st7 cleanup note)
+        // the checkpoint state is per-run scratch (the st7 cleanup note)
         graft.LocalRun.deleteRecursively(stage.resolve("ckpt"))
         s.read.parquet(outDir)
           .groupBy("hour_start")

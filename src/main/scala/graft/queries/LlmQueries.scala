@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Artifacts, Tables}
 import graft.llm.{Bpe, Dedup, Importance, LangModel, Multimodal, Packing, Repetition, Sampling, Search, Similarity, TextOps}
 import graft.ops.Sketches
 
@@ -652,22 +652,20 @@ object LlmQueries extends Q.Registry {
       .filter(col("jaccard") >= 0.6)
   }
 
-  /** Per-(session, dir) memo of the CACHED verified-pairs frame: dd3
-    * emits these pairs, dd7 and dd8 group them — three queries, one
-    * pipeline. Production computes the verify ONCE and feeds every
-    * consumer (the r8 llm3/dd10 shared-materialization precedent; the
-    * reference's notebook computes df_analysis once, cell 0), so the
-    * session-lifetime cache is the honest steady state, same policy as
-    * [[graft.Tables.load]]'s memo. The pairs frame is dup-structure-
-    * sized (3 columns, one row per verified near-dup pair), orders of
-    * magnitude under the corpus — cacheable at any scale the dedup
-    * result itself is usable at. The bench_scale dd_groups/dd_star
-    * legs deliberately RE-RUN the pipeline (documented there) so the
-    * end-to-end scale cost stays measured. Goes through [[cachedFrame]]
-    * so dead-session entries are purged (the r8 ADVICE retention
-    * pathology a bare per-session map would re-introduce). */
+  /** The CACHED verified-pairs frame, one per (session, dir) in
+    * [[Artifacts]]: dd3 emits these pairs, dd7 and dd8 group them —
+    * three queries, one pipeline. Production computes the verify ONCE
+    * and feeds every consumer (the r8 llm3/dd10 shared-materialization
+    * precedent; the reference's notebook computes df_analysis once,
+    * cell 0), so the session-lifetime cache is the honest steady state,
+    * same policy as [[graft.Tables.load]]. The pairs frame is
+    * dup-structure-sized (3 columns, one row per verified near-dup
+    * pair), orders of magnitude under the corpus — cacheable at any
+    * scale the dedup result itself is usable at. The bench_scale
+    * dd_groups/dd_star legs deliberately RE-RUN the pipeline
+    * (documented there) so the end-to-end scale cost stays measured. */
   private[graft] def verifiedPairsShared(s: SparkSession, d: String): DataFrame =
-    cachedFrame(s, "verified_pairs", d)(verifiedPairs(s, d))
+    Artifacts.frame(s, d, "verified_pairs")(verifiedPairs(s, d))
 
   /** DuckDB mirror of [[verifiedPairs]] as a WITH prefix ending in the
     * `verified(doc_a, doc_b, jaccard)` CTE. */
@@ -961,45 +959,6 @@ object LlmQueries extends Q.Registry {
     * (LM training slice) and tx14 (classifier labels). */
   private val CuratedSources = Seq("src0", "src1", "src2", "src3")
 
-  /** Per-(session, site, dir) memo of cached intermediate frames.
-    * dd10/dd11/llm2 cache a corpus-row-sized frame that several plan
-    * arms share; a bare `.cache()` in the query builder pinned ANOTHER
-    * copy on every bench iteration for the session lifetime (r7 ADVICE
-    * item). The memo hands repeated runs the SAME cached plan — the
-    * x15 fit-once-score-many steady state. Dead-session retention (the
-    * r8 WeakHashMap attempt could never collect: a DataFrame value
-    * strongly references its SparkSession key, the exact pathology the
-    * WeakHashMap javadoc warns about — r8 ADVICE) is handled by EAGER
-    * PURGE instead: every access drops entries whose session's context
-    * has stopped, so a session-cycling JVM holds at most the live
-    * session's frames plus the dead ones only until the next access. */
-  private val frameMemo =
-    new java.util.HashMap[SparkSession,
-      scala.collection.mutable.Map[(String, String), DataFrame]]()
-  private[queries] def purgeStoppedSessions(
-      isStopped: SparkSession => Boolean = _.sparkContext.isStopped): Unit =
-    frameMemo.synchronized {
-      val it = frameMemo.keySet().iterator()
-      while (it.hasNext) if (isStopped(it.next())) it.remove()
-    }
-  private[queries] def frameMemoSessionCount: Int =
-    frameMemo.synchronized(frameMemo.size())
-  private def cachedFrame(s: SparkSession, site: String, d: String)
-                         (build: => DataFrame): DataFrame =
-    frameMemo.synchronized {
-      purgeStoppedSessions()
-      val perSession = {
-        val m = frameMemo.get(s)
-        if (m != null) m
-        else {
-          val fresh = scala.collection.mutable.Map.empty[(String, String), DataFrame]
-          frameMemo.put(s, fresh)
-          fresh
-        }
-      }
-      perSession.getOrElseUpdate((site, d), build.cache())
-    }
-
   /** Materialize `df` hash-partitioned by `key` and hand back a frame
     * whose LogicalRDD still CARRIES that partitioning (r18): the
     * one-exchange pipelines (tx21/llm4) hash the corpus by doc id
@@ -1014,24 +973,35 @@ object LlmQueries extends Q.Registry {
     * session-global, same serial contract as withShufflePartitions).
     * Always inside the timed region — the builder runs per measured
     * iteration. At cluster scale this is a key-clustered stage write
-    * (Iceberg hash distribution-mode); release with
-    * [[graft.llm.Dedup.releaseCheckpoint]] semantics — callers here
-    * return plans that still read it, so it lives until the next
-    * run's build (bounded: one per query per session). */
-  private def partitionedCheckpoint(s: SparkSession, df: DataFrame,
-                                    key: String): DataFrame =
-    graft.LocalRun.withConf(s, "spark.sql.adaptive.enabled", "false")(
-      df.repartition(col(key)).localCheckpoint(true))
+    * (Iceberg hash distribution-mode). Callers return plans that still
+    * read it, so it lives in [[Artifacts]] under (session, dir, name)
+    * until the next build replaces and releases it (bounded: one per
+    * query per session). */
+  private def partitionedCheckpoint(s: SparkSession, d: String, name: String,
+                                    df: DataFrame, key: String): DataFrame =
+    Artifacts.replace(s, d, name)(_.checkpoint(
+      graft.LocalRun.withConf(s, "spark.sql.adaptive.enabled", "false")(
+        df.repartition(col(key)).localCheckpoint(true))))
 
-  /** Per-dir memo of the fitted quality classifier (64 hashed buckets,
-    * 4 IRLS iterations) — the share-the-fit contract: the Spark query
-    * and the generated oracle read the same coefficients in the same
-    * JVM. */
-  private val logitMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, graft.ml.Logistic.LogitFit]()
+  /** tx12/llm2's [[LangModel.train]] (trunc-6 tables) under
+    * (session, dir, name): its pair-count checkpoint lives until the
+    * next build replaces and releases it. */
+  private def trainedLm(s: SparkSession, d: String, name: String,
+                        target: DataFrame, buckets: Int): (DataFrame, DataFrame) =
+    Artifacts.replace(s, d, name) { own =>
+      val lm = LangModel.train(target, "doc_id", "text", buckets, alpha = 1.0,
+        logpTrunc = Fmt.t6)
+      own.checkpoint(lm._1)
+      lm
+    }
+
+  /** The fitted quality classifier (64 hashed buckets, 4 IRLS
+    * iterations), fitted once per dir — the share-the-fit contract: the
+    * Spark query and the generated oracle read the same coefficients in
+    * the same JVM. */
   private val LogitBuckets = 64
   private[queries] def fittedQualityModel(s: SparkSession, d: String): graft.ml.Logistic.LogitFit =
-    logitMemo.computeIfAbsent(d, _ => {
+    Artifacts.get(Artifacts.Jvm, d, "quality_model") { _ =>
       val docs = Tables.documents(s, d)
       val labeled = graft.ml.Logistic
         .hashedFeatures(docs, "doc_id", "text", LogitBuckets)
@@ -1039,24 +1009,23 @@ object LlmQueries extends Q.Registry {
           col("source").isin(CuratedSources: _*).cast("double").as("__y")),
           Seq("doc_id"))
       graft.ml.Logistic.fitIrls(labeled, "feats", "__y", p = LogitBuckets)
-    })
-  /** Per-dir memo of the trained PQ codebooks (ss5): M=8 subspaces ×
-    * ks=16 codewords, local Lloyd fit on the 256 md5-smallest vectors
-    * ([[Similarity.pqTrainCodebooks]]) — share-the-fit: the ss5 query
-    * and its generated oracle read the same trunc-6 literals. */
-  private val pqMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[(Int, Int, Array[Double])]]()
+    }
+  /** The trained PQ codebooks (ss5), trained once per dir: M=8
+    * subspaces × ks=16 codewords, local Lloyd fit on the 256
+    * md5-smallest vectors ([[Similarity.pqTrainCodebooks]]) —
+    * share-the-fit: the ss5 query and its generated oracle read the
+    * same trunc-6 literals. */
   private[queries] val PqM = 8
   private[queries] val PqSubDim = 8
   private val PqKs = 16
   private val PqSampleN = 256
   private val PqNProbe = 3
   private def trainedPqCodebooks(s: SparkSession, d: String): Seq[(Int, Int, Array[Double])] =
-    pqMemo.computeIfAbsent(d, _ =>
+    Artifacts.get(Artifacts.Jvm, d, "pq_codebooks")(_ =>
       Similarity.pqTrainCodebooks(Tables.embeddings(s, d), "vec_id",
         "embedding", PqM, PqSubDim, PqKs, PqSampleN))
 
-  /** Per-dir memo of the PERSISTED int8 corpus table (ss9/st15 — the
+  /** The PERSISTED int8 corpus table, one per dir (ss9/st15 — the
     * ss6 storage claim made real, r13 verdict ask #1): the quantized
     * corpus (vec_id, q8 ARRAY<TINYINT>, scale FLOAT — the production
     * storage schema; cosine never reads scale, so column pruning drops
@@ -1065,14 +1034,12 @@ object LlmQueries extends Q.Registry {
     * fit-once-serve-many, the x15 posture. [[Similarity.int8Quantize]]
     * is deterministic and tinyint survives parquet exactly, so reads
     * are hash-identical to in-session quantization (ss9 proves it by
-    * sharing ss7's oracle). The tree is swept at JVM exit; the memo
-    * key is the data dir, so a session recycle re-reads the same
-    * table — the path outlives any one session. */
-  private val int8DirMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+    * sharing ss7's oracle). The tree is swept at JVM exit; the key is
+    * the data dir, so a session recycle re-reads the same table — the
+    * path outlives any one session. */
   private[queries] def persistedInt8Dir(s: SparkSession, d: String): String =
-    int8DirMemo.computeIfAbsent(d, _ => {
-      val stage = java.nio.file.Files.createTempDirectory("graft_int8_")
+    Artifacts.get(Artifacts.Jvm, d, "int8_corpus") { own =>
+      val stage = own.tree(java.nio.file.Files.createTempDirectory("graft_int8_"))
       val table = stage.resolve("int8_corpus").toString
       Tables.embeddings(s, d)
         .select(col("vec_id"),
@@ -1080,9 +1047,8 @@ object LlmQueries extends Q.Registry {
             Similarity.int8Scale(col("embedding"))).as("q8"),
           Similarity.int8Scale(col("embedding")).cast("float").as("scale"))
         .write.mode("overwrite").parquet(table)
-      graft.LocalRun.deleteOnExit(stage)
       table
-    })
+    }
 
   /** The label-mean trunc-6 'trained' centroids every IVF query shares
     * (ss2/ss5/ss8/ss10/ss11): each element truncated to 6 decimals so
@@ -1095,7 +1061,7 @@ object LlmQueries extends Q.Registry {
     .agg(array((0 until 64).map(i =>
       Fmt.trunc(avg(element_at(col("embedding"), i + 1)), 6)): _*).as("cent_vec"))
 
-  /** Per-dir memo of the PERSISTED IVF/PQ index (ss10/ss11 — the r14
+  /** The PERSISTED IVF/PQ index, one per dir (ss10/ss11 — the r14
     * verdict's top structural ask: ss9 persisted the VECTORS; the
     * production ANN shape also stores the INDEX and serves from it).
     * Written once per JVM per data dir, four tables under one stage:
@@ -1123,12 +1089,10 @@ object LlmQueries extends Q.Registry {
     * IvfStorePruningSpec pins the pruned partition count and the
     * PartitionFilters line. centroids/ and codebook/ are
     * broadcast-tiny by construction. */
-  private val ivfDirMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
   private[queries] def persistedIvfDir(s: SparkSession, d: String): String =
-    ivfDirMemo.computeIfAbsent(d, _ => {
+    Artifacts.get(Artifacts.Jvm, d, "ivf_index") { own =>
       import s.implicits._
-      val stage = java.nio.file.Files.createTempDirectory("graft_ivf_")
+      val stage = own.tree(java.nio.file.Files.createTempDirectory("graft_ivf_"))
       val emb = Tables.embeddings(s, d)
       val cents = labelCentroids(emb)
       cents.write.mode("overwrite").parquet(stage.resolve("centroids").toString)
@@ -1149,9 +1113,8 @@ object LlmQueries extends Q.Registry {
           carry = Seq("cell"))
         .write.mode("overwrite").partitionBy("cell")
         .parquet(stage.resolve("codes").toString)
-      graft.LocalRun.deleteOnExit(stage)
       stage.toString
-    })
+    }
 
   /** st16/st17's planted arrival batches — the embedding analog of
     * dd11/mm10's two-tier replays, derived from the base corpus so the
@@ -1261,7 +1224,7 @@ object LlmQueries extends Q.Registry {
        |ORDER BY batch_id, matched_side, new_id, matched_id""".stripMargin
   }
 
-  /** Per-dir memo of the GROWN embedding index (st16/st17 — r14
+  /** The GROWN embedding index, one per dir (st16/st17 — r14
     * verdict ask #3, the last missing incremental form): a REAL
     * two-trigger file stream delivers the planted batches; each
     * micro-batch quantizes map-side, reports near-dup pairs against
@@ -1276,15 +1239,12 @@ object LlmQueries extends Q.Registry {
     *   idx/base, idx/batch=0, idx/batch=1   — the grown index
     *   pairs/batch=0, pairs/batch=1         — the per-batch reports
     * st16 reads pairs/, st17 serves ss7's chain from idx/ — both from
-    * ONE stream run per (JVM, dir). */
-  private val embIdxMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  /** Bench refit hook (st16 ∈ Bench.RefitQueries): clear the memo so
-    * each timed run pays the real maintenance stream, not a memo read. */
-  private[graft] def resetIncrementalIndexMemo(): Unit = embIdxMemo.clear()
+    * ONE stream run per (JVM, dir). st16's refit reset drops the entry
+    * and its tree, so each timed run pays the real maintenance stream,
+    * not a registry read. */
   private[queries] def grownEmbIndexDir(s: SparkSession, d: String): String =
-    embIdxMemo.computeIfAbsent(d, _ => {
-      val stage = java.nio.file.Files.createTempDirectory("graft_st16_")
+    Artifacts.get(Artifacts.Jvm, d, "st16_index") { own =>
+      val stage = own.tree(java.nio.file.Files.createTempDirectory("graft_st16_"))
       val emb = Tables.embeddings(s, d)
       def q8of(c: org.apache.spark.sql.Column) =
         Similarity.int8Quantize(c, Similarity.int8Scale(c))
@@ -1335,12 +1295,8 @@ object LlmQueries extends Q.Registry {
       graft.LocalRun.deleteRecursively(inDir)
       graft.LocalRun.deleteRecursively(arr)
       graft.LocalRun.deleteRecursively(stage.resolve("ckpt"))
-      // one live tree per slot: a refit rebuild (Bench median-of-3)
-      // deletes the prior run's tree NOW instead of accumulating one
-      // per rebuild until JVM exit (the st7/st12 cleanup policy)
-      graft.LocalRun.deleteOnExitSlot("st16_stage", stage)
       stage.toString
-    })
+    }
 
   /** llm8's planted crawl-arrival batches: (doc_id, src_id, text)
     * records derived from the documents table by pure id/word
@@ -1408,7 +1364,7 @@ object LlmQueries extends Q.Registry {
     crossTrim.unionAll(prober).unionAll(twin)
   }
 
-  /** Per-dir memo of the STREAMING END-TO-END curation pipeline
+  /** The STREAMING END-TO-END curation pipeline, run once per dir
     * (llm8 — r15 verdict ask #8, the stretch: the production crawl
     * loop composed from the incremental forms that now all exist):
     * each arriving micro-batch of (doc_id, src_id, text) records runs
@@ -1426,13 +1382,10 @@ object LlmQueries extends Q.Registry {
     * are batchId-keyed overwrites, the gram table is advanced
     * in-session (the st7 form; st12 is the durable-table variant of
     * the same step). */
-  private val curationMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private[graft] def resetCurationMemo(): Unit = curationMemo.clear()
   private[queries] def curationDir(s: SparkSession, d: String): String =
-    curationMemo.computeIfAbsent(d, _ => {
+    Artifacts.get(Artifacts.Jvm, d, "llm8_curation") { own =>
       val k = 8
-      val stage = java.nio.file.Files.createTempDirectory("graft_llm8_")
+      val stage = own.tree(java.nio.file.Files.createTempDirectory("graft_llm8_"))
       val docs = Tables.documents(s, d)
       val emb = Tables.embeddings(s, d)
       def q8of(c: org.apache.spark.sql.Column) =
@@ -1440,7 +1393,7 @@ object LlmQueries extends Q.Registry {
       emb.select(col("vec_id"), col("embedding"),
           q8of(col("embedding")).as("q8"))
         .write.mode("overwrite").parquet(stage.resolve("idx/base").toString)
-      val baseTable = cachedFrame(s, "st7_gram_table", d)(
+      val baseTable = Artifacts.frame(s, d, "st7_gram_table")(
         Dedup.gramCounts(docs, "doc_id", "text", k))
       var table = baseTable
       // replay guard (r16 ADVICE): out/ and idx/ are batchId-keyed
@@ -1550,9 +1503,8 @@ object LlmQueries extends Q.Registry {
       graft.LocalRun.deleteRecursively(inDir)
       graft.LocalRun.deleteRecursively(arr)
       graft.LocalRun.deleteRecursively(stage.resolve("ckpt"))
-      graft.LocalRun.deleteOnExitSlot("llm8_stage", stage)
       stage.toString
-    })
+    }
 
   /** st18's planted pair-arrival batches, derived from the documents
     * table by pure id arithmetic so the oracle regenerates them in
@@ -1692,7 +1644,7 @@ object LlmQueries extends Q.Registry {
       .join(broadcast(p), Seq(probeCol)))
   }
 
-  /** Per-dir memo of the INCREMENTALLY MAINTAINED dup-group labels
+  /** The INCREMENTALLY MAINTAINED dup-group labels, one run per dir
     * (st18 — r15 verdict ask #4, the production form of dd7): dd7's
     * (doc → component-min group_id) table is persisted once as
     * labels/base; each foreachBatch then relabels ONLY the components
@@ -1712,12 +1664,9 @@ object LlmQueries extends Q.Registry {
     * store (Delta/Hudi) would turn into point lookups at 100 TB.
     * Final labels hash-match batch dd7 over the UNION of all pairs
     * seen — the oracle states exactly that closure. */
-  private val dupLabelsMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private[graft] def resetDupGroupsMemo(): Unit = dupLabelsMemo.clear()
   private[graft] def grownDupLabelsDir(s: SparkSession, d: String): String =
-    dupLabelsMemo.computeIfAbsent(d, _ => {
-      val stage = java.nio.file.Files.createTempDirectory("graft_st18_")
+    Artifacts.get(Artifacts.Jvm, d, "st18_labels") { own =>
+      val stage = own.tree(java.nio.file.Files.createTempDirectory("graft_st18_"))
       writeLabelDirs(s, Dedup.connectedComponents(
           verifiedPairsShared(s, d).select("doc_a", "doc_b"),
           "doc_a", "doc_b"),
@@ -1789,9 +1738,8 @@ object LlmQueries extends Q.Registry {
       graft.LocalRun.deleteRecursively(inDir)
       graft.LocalRun.deleteRecursively(arr)
       graft.LocalRun.deleteRecursively(stage.resolve("ckpt"))
-      graft.LocalRun.deleteOnExitSlot("st18_stage", stage)
       stage.toString
-    })
+    }
 
   /** mm9/mm10's deterministic grayscale fixture: pixel (x, y) of the
     * image derived from `src` (gradient slopes src mod 7/11, constant
@@ -1892,20 +1840,17 @@ object LlmQueries extends Q.Registry {
     * h_lo, h_hi) = [[graft.ops.BandedHamming.withBands]]' output, so
     * an incremental batch equi-joins it directly and the existing
     * images are never re-decoded. Swept at JVM exit. */
-  private val imageIndexMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def mm10ImageIndexDir(s: SparkSession): String =
-    imageIndexMemo.computeIfAbsent("static", _ => {
-      val stage = java.nio.file.Files.createTempDirectory("graft_mm10_")
+    Artifacts.get(Artifacts.Jvm, "", "mm10_image_index") { own =>
+      val stage = own.tree(java.nio.file.Files.createTempDirectory("graft_mm10_"))
       val table = stage.resolve("dhash_bands").toString
       graft.ops.BandedHamming
         .withBands(imageHashes(s, (1L to 80L).map(i => (i, i, 0))),
           "h_lo", "h_hi")
         .select("band", "band_val", "doc_id", "h_lo", "h_hi")
         .write.mode("overwrite").parquet(table)
-      graft.LocalRun.deleteOnExit(stage)
       table
-    })
+    }
 
   /** The PERSISTED energy-fingerprint band index of mm12's existing
     * audio corpus (clips 1-60, mm11's base population) — the mm10
@@ -1916,20 +1861,17 @@ object LlmQueries extends Q.Registry {
     * fingerprints, written once per JVM; the existing clips' WAV
     * payloads are never re-decoded by an incremental batch. Swept at
     * JVM exit. */
-  private val audioIndexMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def mm12AudioIndexDir(s: SparkSession): String =
-    audioIndexMemo.computeIfAbsent("static", _ => {
-      val stage = java.nio.file.Files.createTempDirectory("graft_mm12_")
+    Artifacts.get(Artifacts.Jvm, "", "mm12_audio_index") { own =>
+      val stage = own.tree(java.nio.file.Files.createTempDirectory("graft_mm12_"))
       val table = stage.resolve("afp_bands").toString
       graft.ops.BandedHamming
         .withBands(audioHashes(s, (1L to 60L).map(i => (i, i, 0))),
           "h_lo", "h_hi")
         .select("band", "band_val", "doc_id", "h_lo", "h_hi")
         .write.mode("overwrite").parquet(table)
-      graft.LocalRun.deleteOnExit(stage)
       table
-    })
+    }
   /** Resolve the (active session, primed dir) pair a GENERATED oracle's
     * fit needs, or warn that this JVM falls back to the weaker
     * rows-only driver check — the shared head of every share-the-fit
@@ -2150,14 +2092,12 @@ object LlmQueries extends Q.Registry {
        |       floor((avg(ppl)) * 1e6 + 1e-6) / 1e6 AS avg_ppl
        |FROM sel GROUP BY lang ORDER BY lang""".stripMargin
 
-  /** Per-dir memo of learned BPE merges (top-2000 word histogram, 24
-    * merges) — the MlQueries share-the-fit contract: Verify runs the
-    * Spark query and generates the oracle in the same JVM, so both
+  /** Learned BPE merges (top-2000 word histogram, 24 merges), learned
+    * once per dir — the MlQueries share-the-fit contract: Verify runs
+    * the Spark query and generates the oracle in the same JVM, so both
     * read the identical merge table no matter how ties fell. */
-  private val bpeMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[Bpe.Merge]]()
   private[queries] def learnedMerges(s: SparkSession, d: String): Seq[Bpe.Merge] =
-    bpeMemo.computeIfAbsent(d, _ =>
+    Artifacts.get(Artifacts.Jvm, d, "bpe_merges")(_ =>
       Bpe.learn(
         Bpe.wordHistogram(Tables.documents(s, d).select(lower(col("text")).as("text")),
           "text", topK = 2000),
@@ -2218,7 +2158,7 @@ object LlmQueries extends Q.Registry {
     // would otherwise re-run the centroid aggregate + cross join +
     // argmin window. (vec_id, embedding, cell) is corpus-row-sized
     // but narrow — the dd3 cache-the-banded-frame precedent.
-    val assigned = cachedFrame(s, "dd10_assigned", d)(
+    val assigned = Artifacts.frame(s, d, "dd10_assigned")(
       Similarity.assignCells(
         corpus.select("vec_id", "embedding"),
         "vec_id", "embedding", centroids, "cell", "cent_vec"))
@@ -2227,7 +2167,7 @@ object LlmQueries extends Q.Registry {
     // state — without this the dominant within-cell pairwise-cosine
     // stage executed once per arm (r8 review; the committed llm3 plan
     // showed the hi-lo join twice)
-    cachedFrame(s, "semantic_dups_out", d)(
+    Artifacts.frame(s, d, "semantic_dups_out")(
       Dedup.semanticDups(assigned, "vec_id", "embedding", "cell",
         tau = 0.9, simTrunc = Fmt.t6))
   }
@@ -3646,7 +3586,11 @@ object LlmQueries extends Q.Registry {
           .boundedTableStream(s, d, "embeddings.parquet")
           .filter(col("vec_id") % 100 === 0)
           .select(col("vec_id").as("q_id"), col("embedding").as("q_vec"))
-        val stage = java.nio.file.Files.createTempDirectory("graft_st15_")
+        // topk/ outlives the returned frame's lazy read: one live stage
+        // tree per query, replaced (and the prior deleted) by the next
+        // build, the rest swept at JVM exit (the st7/st12 policy)
+        val stage = Artifacts.replace(Artifacts.Jvm, "", "st15_stage")(
+          _.tree(java.nio.file.Files.createTempDirectory("graft_st15_")))
         val outDir = stage.resolve("topk").toString
         val q = qStream.writeStream
           .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
@@ -3666,9 +3610,6 @@ object LlmQueries extends Q.Registry {
           .start()
         IngestQueries.capturePlanWhileActive(q)
         graft.LocalRun.deleteRecursively(stage.resolve("ckpt"))
-        // topk/ outlives the returned frame's lazy read — one live
-        // stage tree per query name (the st7/st12 cleanup policy)
-        graft.LocalRun.deleteOnExitSlot("st15_stage", stage)
         s.read.parquet(outDir)
           .select(col("query_id"), col("neighbor_id"),
             Fmt.trunc(col("cos_sim"), 4).as("cos_sim"), col("rank"))
@@ -3904,7 +3845,7 @@ object LlmQueries extends Q.Registry {
   private val ss7OracleSql: String =
     ss7ChainSql("SELECT vec_id, embedding FROM embeddings", "vec_id % 100 = 0")
 
-  /** Per-dir memo of the WORKLOAD-PLANNED shortlist depth (ss12 — r14
+  /** The WORKLOAD-PLANNED shortlist depth, planned once per dir (ss12 — r14
     * verdict ask #5: int8ShortlistFor was tooling-only; this wires the
     * planner into a SERVED query). The plan measures the true-neighbor
     * quantized-rank CDF on a bounded md5 sample OF THE QUERY WORKLOAD
@@ -3917,17 +3858,15 @@ object LlmQueries extends Q.Registry {
   private[graft] val PlannedK = 5
   private[graft] val PlannedTarget = 0.95
   private[graft] val PlannedSampleN = 8
-  private val shortlistMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, Integer]()
   private[graft] def plannedShortlist(s: SparkSession, d: String): Int =
-    shortlistMemo.computeIfAbsent(d, _ => {
+    Artifacts.get(Artifacts.Jvm, d, "planned_shortlist") { _ =>
       val emb = Tables.embeddings(s, d)
       val workload = emb.filter(col("vec_id") % 100 === 0)
         .select(col("vec_id").as("q_id"), col("embedding").as("q_vec"))
       val ranks = Similarity.int8TrueNeighborRanks(emb, "vec_id", "embedding",
         workload, "q_id", "q_vec", PlannedK, PlannedSampleN)
-      Int.box(Similarity.int8ShortlistFor(ranks, PlannedK, PlannedTarget))
-    }).intValue
+      Similarity.int8ShortlistFor(ranks, PlannedK, PlannedTarget)
+    }
 
   /** ss8's full-chain restatement, shared verbatim by ss10 (serving
     * from the persisted IVF index must reproduce the in-session-index
@@ -4022,15 +3961,15 @@ object LlmQueries extends Q.Registry {
         "within the probed cells, and ss7's refine arithmetic. LlmSpec " +
         "pins recall@3 vs the exact-within-cells ss2 ranking. The " +
         "in-session index (centroid fit + cell assignment + " +
-        "quantization) builds ONCE through the cachedFrame memo (r15 " +
+        "quantization) builds ONCE as a cached session artifact (r15 " +
         "verdict ask #6, the llm4/x15 fit-once-score-many precedent): " +
         "repeated runs price the SERVE, not a per-run index rebuild — " +
         "the build-from-nothing and stored-table costs are ss2/ss7's " +
         "and ss10's rows respectively.",
       (s, d) => {
         val emb = Tables.embeddings(s, d)
-        val centroids = cachedFrame(s, "ss8_centroids", d)(labelCentroids(emb))
-        val cellQuant = cachedFrame(s, "ss8_cell_quant", d)(
+        val centroids = Artifacts.frame(s, d, "ss8_centroids")(labelCentroids(emb))
+        val cellQuant = Artifacts.frame(s, d, "ss8_cell_quant")(
           Similarity.assignCells(emb, "vec_id", "embedding",
               centroids, "cell", "cent_vec")
             .select(col("vec_id"), col("cell"),
@@ -4540,7 +4479,7 @@ object LlmQueries extends Q.Registry {
         // beyond one document's length; at cluster scale the
         // checkpoint is a doc_id-clustered stage write. Inside the
         // timed region (the builder runs per measured iteration).
-        val pages = partitionedCheckpoint(s,
+        val pages = partitionedCheckpoint(s, d, "tx21_pages",
           Tables.documents(s, d).select(col("doc_id"),
             concat_ws("\n\n", col("text"), para2, para3).as("page")),
           "doc_id")
@@ -5069,7 +5008,7 @@ object LlmQueries extends Q.Registry {
           (1L to 80L).map(i => (i, i, 0)) ++
             (101L to 110L).map(i => (i, 8 * (i - 100), 1)) ++
             (121L to 125L).map(i => (i, i - 120, 0))
-        val hashes = cachedFrame(s, "mm9_hashes", d)(imageHashes(s, ids))
+        val hashes = Artifacts.frame(s, d, "mm9_hashes")(imageHashes(s, ids))
         graft.ops.BandedHamming
           .selfPairs(hashes, "doc_id", "h_lo", "h_hi", 6)
           .orderBy("doc_a", "doc_b")
@@ -5157,7 +5096,7 @@ object LlmQueries extends Q.Registry {
         // arms, and the batch's codec work must run once, not thrice.
         // freshBatch (idempotent replay, r14 ADVICE) sits INSIDE the
         // cache so its anti-join also runs once, not per arm.
-        val nw = cachedFrame(s, "mm10_new_hashes", d)(
+        val nw = Artifacts.frame(s, d, "mm10_new_hashes")(
           graft.ops.BandedHamming.freshBatch(
             s.read.parquet(mm10ImageIndexDir(s)),
             imageHashes(s, newIds), "doc_id"))
@@ -5259,7 +5198,7 @@ object LlmQueries extends Q.Registry {
         val junk = Seq(
           (131L, Array[Byte](9, 9, 9, 9)),
           (132L, Multimodal.pcm16Wav(8000, 2, Array.fill[Short](128)(7))))
-        val hashes = cachedFrame(s, "mm11_hashes", d)(
+        val hashes = Artifacts.frame(s, d, "mm11_hashes")(
           audioHashes(s, ids))
         val junkHashes = {
           val px = Multimodal
@@ -5361,7 +5300,7 @@ object LlmQueries extends Q.Registry {
         // arms, and the batch's codec work must run once, not thrice.
         // freshBatch (idempotent replay) sits INSIDE the cache so its
         // anti-join also runs once, not per arm (the mm10 contract).
-        val nw = cachedFrame(s, "mm12_new_hashes", d)(
+        val nw = Artifacts.frame(s, d, "mm12_new_hashes")(
           graft.ops.BandedHamming.freshBatch(
             s.read.parquet(mm12AudioIndexDir(s)),
             audioHashes(s, newIds), "doc_id"))
@@ -5732,8 +5671,7 @@ object LlmQueries extends Q.Registry {
         val docs = Tables.documents(s, d)
         val B = 256
         val target = docs.filter(col("source").isin("src0", "src1", "src2", "src3"))
-        val (pairLogp, ctxBackoff) =
-          LangModel.train(target, "doc_id", "text", B, alpha = 1.0, logpTrunc = Fmt.t6)
+        val (pairLogp, ctxBackoff) = trainedLm(s, d, "tx12_lm", target, B)
         LangModel.scoreDocs(docs, "doc_id", "text", pairLogp, ctxBackoff,
           B, floorLogp = math.log(1.0 / B))
           .select(col("doc_id"), col("n_bigrams"),
@@ -5837,7 +5775,7 @@ object LlmQueries extends Q.Registry {
         // description promises: cache it so micro-batches join the
         // materialized signatures instead of re-shingling the corpus
         // text per trigger (r8 review)
-        val ex = cachedFrame(s, "st6_ex_sigs", d)(
+        val ex = Artifacts.frame(s, d, "st6_ex_sigs")(
           Dedup.signDocs(Tables.documents(s, d), "doc_id", "text",
               MinhashK, Bands, RowsPerBand)
             .select(col("doc_id").as("matched_doc"), col("sig").as("old_sig"),
@@ -5900,10 +5838,15 @@ object LlmQueries extends Q.Registry {
         // mod-times: the file source takes one file per micro-batch,
         // oldest first — a real two-trigger replay, not a simulation
         val (stage, inDir) = stageArrivalDays(Seq(batch1, batch2), "graft_st7_")
+        // the stage root will hold cleaned/, which the returned lazy
+        // frame reads — one live tree per query: registering this run's
+        // root deletes the previous run's tree NOW (its frame is
+        // consumed), and JVM exit sweeps the current one (r11 + r12 ADVICE)
+        Artifacts.replace(Artifacts.Jvm, "", "st7_stage")(_.tree(stage))
         // the persisted index: corpus gram counts, built once per
         // (session, dir) — micro-batches join the MATERIALIZED table,
         // never re-explode corpus text (the st6 signature-table note)
-        val baseTable = cachedFrame(s, "st7_gram_table", d)(
+        val baseTable = Artifacts.frame(s, d, "st7_gram_table")(
           Dedup.gramCounts(docs, "doc_id", "text", k))
         var table = baseTable
         val outDir = stage.resolve("cleaned").toString
@@ -5935,11 +5878,6 @@ object LlmQueries extends Q.Registry {
         // fitmed3 runs, plan audits, verify) don't accumulate /tmp trees
         graft.LocalRun.deleteRecursively(inDir)
         graft.LocalRun.deleteRecursively(stage.resolve("ckpt"))
-        // the stage root still holds cleaned/, which the returned lazy
-        // frame reads — one slot per query: registering this run's root
-        // deletes the previous run's tree NOW (its frame is consumed)
-        // and sweeps the current one at JVM exit (r11 + r12 ADVICE)
-        graft.LocalRun.deleteOnExitSlot("st7_stage", stage)
         s.read.parquet(outDir).orderBy("doc_id")
       },
       Some(substrIncrementalSql)),
@@ -6095,12 +6033,12 @@ object LlmQueries extends Q.Registry {
         val cms = IngestQueries.runToMemory(s, agg, "st11_out_", "complete")
         graft.LocalRun.deleteRecursively(stage)
         // batch rebuild: the merge-identity arm (streamed ≡ batch).
-        // cachedFrame: the corpus tokenization feeds TWO independent
+        // cached artifact: the corpus tokenization feeds TWO independent
         // plan arms (batchCms by (r, bucket), exact by tok) with no
-        // shareable exchange — the dd10/dd11/llm2 memo shape (r11
+        // shareable exchange — the dd10/dd11/llm2 shape (r11
         // review; an uncached frame would pay the corpus scan+split
         // twice per run)
-        val toks = cachedFrame(s, "st11_toks", d)(
+        val toks = Artifacts.frame(s, d, "st11_toks")(
           Tables.documents(s, d)
             .select(explode(TextOps.words(col("text"))).as("tok")))
         val batchCms = toks.select(col("tok"), rowIdx)
@@ -6176,6 +6114,9 @@ object LlmQueries extends Q.Registry {
         val docs = Tables.documents(s, d)
         val (batch1, batch2, schema) = substrDedupBatches(docs)
         val (stage, inDir) = stageArrivalDays(Seq(batch1, batch2), "graft_st12_")
+        // cleaned/ stays readable for the returned lazy frame: one live
+        // tree per query, the st7 policy
+        Artifacts.replace(Artifacts.Jvm, "", "st12_stage")(_.tree(stage))
         val tableDir = stage.resolve("gram_table").toString
         val outDir = stage.resolve("cleaned").toString
         graft.streaming.SubstrDedupStream.initGramTable(
@@ -6207,10 +6148,6 @@ object LlmQueries extends Q.Registry {
         graft.LocalRun.deleteRecursively(stage.resolve("ckpt"))
         graft.LocalRun.deleteRecursively(
           java.nio.file.Paths.get(tableDir))
-        // cleaned/ stays readable for the returned lazy frame; one
-        // slot per query — this run's registration deletes the prior
-        // run's tree, JVM exit sweeps the last (r11 + r12 ADVICE)
-        graft.LocalRun.deleteOnExitSlot("st12_stage", stage)
         s.read.parquet(outDir)
           .select("doc_id", "n_tokens", "n_removed_tokens", "clean_text")
           .orderBy("doc_id")
@@ -6236,7 +6173,7 @@ object LlmQueries extends Q.Registry {
         val ex = Dedup.signDocs(docs, "doc_id", "text", MinhashK, Bands, RowsPerBand)
         // cache: incrementalNearDups reads the signed batch through
         // three plan arms (vs-existing + both sides of the self-join)
-        val nw = cachedFrame(s, "dd11_signed_batch", d)(
+        val nw = Artifacts.frame(s, d, "dd11_signed_batch")(
           Dedup.signDocs(newBatch, "doc_id", "text", MinhashK, Bands, RowsPerBand))
         Dedup.incrementalNearDups(ex, "doc_id", nw, "doc_id",
           simThreshold = 0.5, simTrunc = Fmt.t6)
@@ -6322,11 +6259,10 @@ object LlmQueries extends Q.Registry {
           .filter(col("clean_text").isNotNull)
           .select(col("doc_id"), col("clean_text").as("text"))
           .join(base.select("doc_id", "lang", "source"), Seq("doc_id"))
-        val safe = cachedFrame(s, "llm2_safe", d)( // feeds LM training, scoring, and the mixture
+        val safe = Artifacts.frame(s, d, "llm2_safe")( // feeds LM training, scoring, and the mixture
           cleaned.withColumn("text", TextOps.redactPii(col("text"))))
-        val (plp, bo) = LangModel.train(
-          safe.filter(col("source").isin(CuratedSources: _*)),
-          "doc_id", "text", B, alpha = 1.0, logpTrunc = Fmt.t6)
+        val (plp, bo) = trainedLm(s, d, "llm2_lm",
+          safe.filter(col("source").isin(CuratedSources: _*)), B)
         val scored = LangModel
           .scoreDocs(safe, "doc_id", "text", plp, bo, B, math.log(1.0 / B))
           .withColumn("ppl",
@@ -6389,11 +6325,11 @@ object LlmQueries extends Q.Registry {
         // arrays costs more than recomputing them); at corpus scale the
         // same single-materialization is a staged parquet write between
         // pipeline stages, which is exactly what the chain's stage
-        // boundary means. Routed through cachedFrame (not a bare
-        // .cache()) so the memo — not CacheManager plan
+        // boundary means. Routed through Artifacts.frame (not a bare
+        // .cache()) so the registry — not CacheManager plan
         // canonicalization — guarantees ONE entry across repeated
         // builds, and dead sessions purge it (r13 ADVICE).
-        val cleaned = cachedFrame(s, "llm4_cleaned", d)(
+        val cleaned = Artifacts.frame(s, d, "llm4_cleaned")(
           Dedup.duplicateSpans(planted, "doc_id", "text", k = 8)
             .filter(col("clean_text").isNotNull)
             .select(col("doc_id"), col("clean_text").as("text"))
@@ -6409,7 +6345,7 @@ object LlmQueries extends Q.Registry {
         // re-shuffling derived rows per arm; the narrow (doc_id, text)
         // projection keeps the ws arrays out of the shuffle (the
         // verifiedPairs lesson).
-        val pages = partitionedCheckpoint(s,
+        val pages = partitionedCheckpoint(s, d, "llm4_pages",
           cleaned.select(col("doc_id"), col("text")), "doc_id")
         val joined = qm
           .join(Repetition.topGramCharsMulti(pages, "doc_id",
@@ -6510,7 +6446,7 @@ object LlmQueries extends Q.Registry {
         // (tokens + both gram arms), and the extraction codec is the
         // chain's only per-byte stage — it must run once, not thrice
         // (r14 self-review; the incrementalNearDups caller contract)
-        val extracted = cachedFrame(s, "llm5_extracted", d)(
+        val extracted = Artifacts.frame(s, d, "llm5_extracted")(
           Multimodal.extractTextBatched(
               base.select(col("doc_id"), payload.as("payload")),
               "doc_id", "payload")
@@ -6567,13 +6503,13 @@ object LlmQueries extends Q.Registry {
         // reads them through both join arms
         val imgIds: Seq[(Long, Long, Int)] = (0L until 500L by 10).map(i =>
           if (i % 30 == 20) (i, i - 10, 1) else (i, i, 0))
-        val ih = cachedFrame(s, "llm6_img_hashes", d)(imageHashes(s, imgIds))
+        val ih = Artifacts.frame(s, d, "llm6_img_hashes")(imageHashes(s, imgIds))
         val imagePairs = graft.ops.BandedHamming
           .selfPairs(ih, "doc_id", "h_lo", "h_hi", 6)
           .select("doc_a", "doc_b")
         // the union edge set is read through two arms by the component
         // loop (u->v and v->u) — cache it, not the heavy upstreams
-        val edges = cachedFrame(s, "llm6_edges", d)(
+        val edges = Artifacts.frame(s, d, "llm6_edges")(
           textPairs.unionByName(imagePairs)
             .dropDuplicates("doc_a", "doc_b"))
         val groups = Dedup.connectedComponents(edges, "doc_a", "doc_b")

@@ -123,22 +123,26 @@ class LocalFsSpec extends SparkSpec {
         val out = fc.create(p, EnumSet.of(CreateFlag.CREATE, CreateFlag.OVERWRITE))
         try out.write(bytes) finally out.close()
       }
-      // the sized open: Hadoop's FilterFs.open(p) skips ChecksumFs's
-      // verifying reader (in the stock LocalFs too)
-      def read(p: Path): Array[Byte] = {
-        val in = fc.open(p, 4096)
+      def readWith(open: Path => java.io.InputStream)(p: Path): Array[Byte] = {
+        val in = open(p)
         try in.readAllBytes() finally in.close()
       }
+      val read = readWith(fc.open(_, 4096)) _
+      // the one-arg open Spark's checkpoint manager uses: stock Hadoop's
+      // FilterFs.open(p) skips ChecksumFs's verifying reader
+      val readOneArg = readWith(fc.open(_)) _
       write(dst, Array[Byte](1, 2, 3))
       write(tmp, payload)
       fc.rename(tmp, dst, Options.Rename.OVERWRITE)
       assert(Files.exists(dir.resolve(".1.delta.crc")))
       assert(!Files.exists(dir.resolve("..1.delta.tmp.crc")))
       assert(read(dst).sameElements(payload))
+      assert(readOneArg(dst).sameElements(payload))
 
       val raf = new RandomAccessFile(dir.resolve("1.delta").toFile, "rw")
       try { raf.seek(100); raf.write(payload(100) ^ 0xff) } finally raf.close()
       intercept[ChecksumException](read(dst))
+      intercept[ChecksumException](readOneArg(dst))
     } finally LocalRun.deleteRecursively(dir)
   }
 
