@@ -33,6 +33,11 @@ object LocalRun {
       .config(LocalFsConf)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
+    // a deliberate checkpoint release (Dedup.releaseCheckpoint, each
+    // connected-components round) is not a fault: keep its "lineage has
+    // been truncated" warning out of the log
+    org.apache.logging.log4j.core.config.Configurator.setLevel(
+      "org.apache.spark.rdd.MapPartitionsRDD", org.apache.logging.log4j.Level.ERROR)
     s
   }
 

@@ -5,15 +5,15 @@ import java.nio.file.{Files, Path, Paths}
 import scala.collection.mutable.{ArrayBuffer, LinkedHashMap}
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
-  SparkListenerStageCompleted, SparkListenerTaskEnd}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent,
+  SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.FormattedMode
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.graftbridge.ListenerBridge
 import org.apache.spark.sql.streaming.{StreamingQueryListener, StreamingQueryProgress}
 
 import graft.llm.Dedup
-import graft.queries.IngestQueries
 
 /** The one way to profile a query: `runMain graft.Profile [query…]`
   * profiles the named queries, or every registered query in sorted
@@ -29,9 +29,15 @@ import graft.queries.IngestQueries
   *
   * It writes each query's plan record to `bench_explain/<name>.txt` by
   * one rule:
-  *  - a query whose build ran a bounded stream (it set
-  *    [[IngestQueries.lastStreamPlan]]) records that micro-batch
-  *    capture, then the final read;
+  *  - a query whose build ran a bounded stream records the last
+  *    source-scanning micro-batch plus its nested executions, then the
+  *    final read. The listener sees every SQL execution start: a
+  *    micro-batch is a root execution whose description carries the
+  *    batch string of a stream the build started (`runId = …`), its
+  *    nested executions are the ones it rooted (a memory sink's
+  *    `collect`; a foreachBatch body's writes, caches and counts), and
+  *    only a batch whose plan scans a file source ([[FileScan]])
+  *    qualifies — not the trailing `<empty>`-source batch;
   *  - dd7/dd8 record the first and last round plan from the
   *    connected-components `onRoundPlan` hook over dd3's verified
   *    pairs, then the final labels plan;
@@ -47,14 +53,26 @@ object Profile {
   /** Measured runs per query; the build is timed separately. */
   val Runs = 3
 
-  /** Heading text that marks a stream's micro-batch capture in its
+  /** Heading text that marks a stream's micro-batch section in its
     * plan record. */
   val MicroBatchSection = "micro-batch physical plan"
 
+  /** Heading text of each nested execution in the micro-batch section. */
+  val NestedSection = "nested execution"
+
+  /** Heading text that ends the micro-batch section. */
+  val FinalReadSection = "final result read"
+
+  /** How a formatted plan names a file-source scan; every stream source
+    * in the registry is a parquet file source. */
+  val FileScan = "Scan parquet"
+
   /** Seconds and Spark work of one build or run, with the progress of
-    * every stream trigger it ran. */
+    * every stream trigger it ran and the plan of its last
+    * source-scanning micro-batch plus that batch's nested executions. */
   final case class Run(seconds: Double, jobs: Int, stages: Int, tasks: Int,
-                       triggers: Seq[StreamingQueryProgress])
+                       triggers: Seq[StreamingQueryProgress],
+                       microBatch: Option[String])
 
   final case class Result(name: String, build: Run, runs: Seq[Run], planFile: Path)
 
@@ -93,12 +111,11 @@ object Profile {
       val fn = registry(name)
       val reset = Bench.RefitResets.getOrElse(name, () => ())
       reset()
-      IngestQueries.lastStreamPlan = None
       val (build, df) = measure(fn(spark, sfDir))
       report(name, "build", build)
       val planFile = outDir.resolve(s"$name.txt")
       Files.writeString(planFile,
-        planRecord(spark, sfDir, name, df, IngestQueries.lastStreamPlan))
+        planRecord(spark, sfDir, name, df, build.microBatch))
       val runs = (1 to Runs).map { i =>
         reset()
         val (r, _) = measure(fn(spark, sfDir).queryExecution.toRdd.count())
@@ -115,29 +132,62 @@ object Profile {
     }
   }
 
-  /** The one scheduler listener (jobs, stages, tasks) plus the stream
-    * listener (trigger progress); [[take]] reads and zeroes both. */
+  /** A started SQL execution: `root` is the execution it nests under,
+    * or its own id. */
+  private final case class Execution(id: Long, root: Long, description: String,
+                                     plan: String)
+
+  /** The one scheduler listener (jobs, stages, tasks, SQL execution
+    * starts) plus the stream listener (started run ids, trigger
+    * progress); [[take]] reads and zeroes both. */
   private final class Counter extends SparkListener {
     private var jobs, stages, tasks = 0
     private val triggers = ArrayBuffer[StreamingQueryProgress]()
+    private val executions = ArrayBuffer[Execution]()
+    private val runIds = ArrayBuffer[String]()
     override def onJobStart(e: SparkListenerJobStart): Unit = synchronized { jobs += 1 }
     override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
       synchronized { stages += 1 }
     override def onTaskEnd(e: SparkListenerTaskEnd): Unit = synchronized { tasks += 1 }
+    override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+      case s: SparkListenerSQLExecutionStart => synchronized {
+        executions += Execution(s.executionId, s.rootExecutionId.getOrElse(s.executionId),
+          s.description, s.physicalPlanDescription)
+      }
+      case _ => ()
+    }
 
     val streams: StreamingQueryListener = new StreamingQueryListener {
-      override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = ()
+      override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit =
+        Counter.this.synchronized { runIds += e.runId.toString }
       override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit =
         Counter.this.synchronized { triggers += e.progress }
       override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
     }
 
     def take(seconds: Double): Run = synchronized {
-      val r = Run(seconds, jobs, stages, tasks, triggers.toSeq)
-      jobs = 0; stages = 0; tasks = 0; triggers.clear()
+      val r = Run(seconds, jobs, stages, tasks, triggers.toSeq,
+        microBatch(executions.toSeq, runIds.toSeq))
+      jobs = 0; stages = 0; tasks = 0
+      triggers.clear(); executions.clear(); runIds.clear()
       r
     }
   }
+
+  /** The last micro-batch root execution of the given streams whose
+    * plan scans a file source, then the plan of every execution it
+    * rooted, in start order (a memory sink's batch roots one: the
+    * `collect` that runs its write). */
+  private def microBatch(executions: Seq[Execution], runIds: Seq[String]): Option[String] =
+    executions
+      .filter(e => e.root == e.id && e.plan.contains(FileScan) &&
+        runIds.exists(id => e.description.contains(s"runId = $id")))
+      .lastOption.map { batch =>
+        val nested = executions.filter(e => e.root == batch.id && e.id != batch.id)
+        (batch.plan +: nested.zipWithIndex.map { case (e, i) =>
+          s"== $NestedSection ${i + 1} of ${nested.size} ==\n${e.plan}"
+        }).mkString("\n")
+      }
 
   private def report(name: String, label: String, r: Run): Unit = {
     println(f"[profile] $name%-30s $label%-6s ${r.seconds}%8.3f s  " +
@@ -167,11 +217,12 @@ object Profile {
     (RoundPlans.get(name), capture) match {
       case (Some(cc), _) => roundsRecord(spark, sfDir, name, cc)
       case (None, Some(batch)) =>
-        s"== $name: $MicroBatchSection, captured on the first\n" +
-          "== data-carrying batch (state store / watermark machinery —\n" +
-          "== the shape every batch executes) ==\n" +
+        s"== $name: $MicroBatchSection of the last micro-batch\n" +
+          "== that scanned a file source, then each execution it rooted\n" +
+          "== (a memory sink's collect; a foreachBatch body's writes,\n" +
+          "== caches and counts) ==\n" +
           batch +
-          "\n== final result read (memory-sink table / foreachBatch partials) ==\n" +
+          s"\n== $FinalReadSection (memory-sink table / foreachBatch partials) ==\n" +
           fmt(df)
       case (None, None) => fmt(df)
     }

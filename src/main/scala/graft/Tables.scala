@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{expr, timestamp_micros}
 import org.apache.spark.sql.types.LongType
+import org.apache.spark.storage.StorageLevel
 
 /** Parquet table access for the driver-generated TPC-H-ish testdata
   * (see TESTDATA.md). All queries read through here so that path
@@ -105,8 +106,14 @@ object Tables {
     * only hot dimensions, never the full fact table. */
   def prime(spark: SparkSession, dir: String): Unit = {
     lastPrimed = Some(dir)
-    names.foreach(n => load(spark, dir, n).cache())
+    names.foreach(n => cacheOnce(load(spark, dir, n)))
   }
+
+  /** Cache `df` unless its plan is cached already: a re-prime of a
+    * primed session stays silent instead of logging CacheManager's
+    * "already cached" warning per plan. */
+  private[graft] def cacheOnce(df: DataFrame): Unit =
+    if (df.storageLevel == StorageLevel.NONE) df.cache()
 
   /** The most recently primed data dir. Generated oracles whose SQL
     * embeds literals from an in-session model fit (MlQueries) resolve
@@ -115,6 +122,23 @@ object Tables {
     * prime before touching queries or oracles. */
   @volatile private var lastPrimed: Option[String] = None
   def primedDir: Option[String] = lastPrimed
+
+  /** Runs `f` on the (session, [[primedDir]]) pair a generated oracle
+    * needs: oracle thunks take no arguments, so the session is the
+    * thread's active one, else the default one (an oracle read off the
+    * session's thread must not lose it). None downgrades the `label`
+    * query's driver check to rows-only, and `Q.oracle` memoizes that
+    * for the JVM's lifetime, so it is logged loudly. */
+  def withPrimedSession[T](label: String)(f: (SparkSession, String) => T): Option[T] = {
+    val r = for {
+      s <- SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
+      d <- primedDir
+    } yield f(s, d)
+    if (r.isEmpty)
+      System.err.println(s"[Tables] no session/primed dir when generating the $label " +
+        "oracle — this query's driver check degrades to rows-only for this JVM")
+    r
+  }
 
   def region(s: SparkSession, d: String): DataFrame = load(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame = load(s, d, "nation")

@@ -67,13 +67,6 @@ object IngestQueries extends Q.Registry {
       col("value").as("temperature"))
   }
 
-  /** Plan-observability probe: the physical plan of the last micro-
-    * batch the most recent [[runToMemory]] stream executed (what
-    * [[graft.Profile]] commits to bench_explain/ for every stream — the
-    * per-batch plan is where the state store and watermark machinery
-    * live; the memory-table read the query returns is trivial). */
-  @volatile private[graft] var lastStreamPlan: Option[String] = None
-
   /** The st13/st14 funnel recovery + rollup over a (user_id, t) anchor
     * emission sink: per-user final anchors are min over non-null
     * emissions (anchors are set-once, so per-trigger emissions are
@@ -124,74 +117,21 @@ object IngestQueries extends Q.Registry {
                                    mode: String): org.apache.spark.sql.DataFrame = {
     val sink = prefix + java.util.UUID.randomUUID().toString.replace("-", "")
     // state-partition sizing (LocalRun.StreamStatePartitions): every
-    // memory-sink bounded stream defines, starts and DRAINS inside the
-    // conf window (capturePlanWhileActive loops until inactive), so
-    // each stateful operator gets 8 state stores sized to fixture
-    // state volume instead of 32 sized to the batch session's CPUs —
-    // the r13 stream fixed-cost probe's p8 lever (BASELINE.md "Retired
-    // probes"), taken where it belongs: in
-    // the stream's own definition, as a production deployment would
+    // memory-sink bounded stream defines and starts inside the conf
+    // window, where the stream clones its session conf, and drains
+    // there too, so each stateful operator gets 8 state stores sized
+    // to fixture state volume instead of 32 sized to the batch
+    // session's CPUs — the r13 stream fixed-cost probe's p8 lever
+    // (BASELINE.md "Retired probes"), taken where it belongs: in the
+    // stream's own definition, as a production deployment would
     graft.LocalRun.withShufflePartitions(s, graft.LocalRun.StreamStatePartitions) {
-      val q = df.writeStream.format("memory").queryName(sink)
+      df.writeStream.format("memory").queryName(sink)
         .outputMode(mode)
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .start()
-      capturePlanWhileActive(q)
+        .awaitTermination()
     }
     s.table(sink)
-  }
-
-  /** Drive a started bounded stream to completion while polling its
-    * micro-batch plan into [[lastStreamPlan]] — shared by the
-    * memory-sink runner above and the foreachBatch runners (st4).
-    * StreamingQuery.explain prints (Scala Console) — capture the text.
-    * Poll for the first DATA-CARRYING batch while the bounded stream
-    * runs: AvailableNow often ends on an empty commit batch, and
-    * capturing only at termination would record an <empty> source scan
-    * instead of the real file-scan-fed stateful plan. */
-  private[queries] def capturePlanWhileActive(
-      q: org.apache.spark.sql.streaming.StreamingQuery): Unit = {
-    def explainNow(): String = {
-      val buf = new java.io.ByteArrayOutputStream()
-      Console.withOut(new java.io.PrintStream(buf, true, "UTF-8")) { q.explain() }
-      buf.toString("UTF-8")
-    }
-    var dataPlan: Option[String] = None
-    // the data batch scans the parquet file; the trailing empty commit
-    // batch plans a local <empty> source — this marker is what decides
-    // when the capture can stop rendering
-    def looksDataCarrying(p: String): Boolean = p.contains("FileScan")
-    while (q.isActive) {
-      // explain() renders the most recent IncrementalExecution, which
-      // by the time a batch's progress lands can ALREADY be the
-      // trailing empty commit batch. Render per tick UNTIL a
-      // data-carrying plan is captured, then stop — bounded cost (a
-      // handful of renders) without the single-attempt-per-batch race
-      // that could permanently record the <empty>-source plan.
-      if (dataPlan.forall(!looksDataCarrying(_)) &&
-          q.recentProgress.exists(_.numInputRows > 0)) {
-        val p = explainNow()
-        // prefer data-carrying over not; between two plans of the same
-        // kind keep the longer (more complete) render — spelled out so
-        // the length arm can't read as accidentally preferring a long
-        // <empty>-source render over a short data-carrying one
-        if (dataPlan.forall(b =>
-              (looksDataCarrying(p) && !looksDataCarrying(b)) ||
-                (looksDataCarrying(p) == looksDataCarrying(b) && p.length > b.length)))
-          dataPlan = Some(p)
-      }
-      Thread.sleep(20)
-    }
-    q.awaitTermination() // surfaces stream errors after the poll loop
-    val captured = dataPlan.getOrElse(explainNow())
-    // a silent <empty>-source capture would hand plan-audit consumers a
-    // plan with no FileScan and no hint anything went wrong — say so
-    if (!looksDataCarrying(captured))
-      System.err.println(
-        "[IngestQueries] captured stream plan is NOT data-carrying (no " +
-          "FileScan): the stream terminated before a data batch rendered; " +
-          "lastStreamPlan holds the trailing <empty>-source batch")
-    lastStreamPlan = Some(captured)
   }
 
   val all: Seq[Q] = Seq(
@@ -381,11 +321,12 @@ object IngestQueries extends Q.Registry {
           _.tree(java.nio.file.Files.createTempDirectory("graft_st4_")))
         val outDir = stage.resolve("partials").toString
         // 8 state stores per join side, not 32 (the runToMemory
-        // state-partition note) — the stream defines, starts and
-        // drains inside the conf window
+        // state-partition note) — the stream starts inside the conf
+        // window, which is when it clones the session conf, and
+        // drains there too
         graft.LocalRun.withShufflePartitions(s,
             graft.LocalRun.StreamStatePartitions) {
-          val q = joined.writeStream
+          joined.writeStream
             .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
             .option("checkpointLocation", stage.resolve("ckpt").toString)
             .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
@@ -397,7 +338,7 @@ object IngestQueries extends Q.Registry {
               ()
             }
             .start()
-          capturePlanWhileActive(q)
+            .awaitTermination()
         }
         // the checkpoint state is per-run scratch (the st7 cleanup note)
         graft.LocalRun.deleteRecursively(stage.resolve("ckpt"))

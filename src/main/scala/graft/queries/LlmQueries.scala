@@ -1281,8 +1281,6 @@ object LlmQueries extends Q.Registry {
                 cur.select("vec_id", "embedding"), "embedding",
                 bq, "vec_id", "embedding", EmbTauQ, EmbTau)
               .withColumn("batch_id", lit(batchId))
-            IngestQueries.lastStreamPlan = Some(pairs.queryExecution
-              .explainString(org.apache.spark.sql.execution.FormattedMode))
             pairs.write.mode("overwrite")
               .parquet(stage.resolve(s"pairs/batch=$batchId").toString)
             bq.select("vec_id", "embedding", "q8").write.mode("overwrite")
@@ -1475,8 +1473,6 @@ object LlmQueries extends Q.Registry {
                 coalesce(col("n_match_existing"), lit(0L))
                   .as("n_match_existing"),
                 coalesce(col("n_match_new"), lit(0L)).as("n_match_new"))
-            IngestQueries.lastStreamPlan = Some(out.queryExecution
-              .explainString(org.apache.spark.sql.execution.FormattedMode))
             out.write.mode("overwrite")
               .parquet(stage.resolve(s"out/batch=$batchId").toString)
             // stage 4: append survivors' vectors (the index GROWS) …
@@ -1726,8 +1722,6 @@ object LlmQueries extends Q.Registry {
               .join(broadcast(cc), Seq("rep"))
               .select(col("doc"), col("new_root").as("group_id"))
             val updates = memberUpd.unionByName(newNodes)
-            IngestQueries.lastStreamPlan = Some(updates.queryExecution
-              .explainString(org.apache.spark.sql.execution.FormattedMode))
             writeLabelDirs(s, updates, stage.resolve("labels"),
               s"batch=$batchId")
           } finally prs.unpersist(blocking = false)
@@ -1872,24 +1866,8 @@ object LlmQueries extends Q.Registry {
         .write.mode("overwrite").parquet(table)
       table
     }
-  /** Resolve the (active session, primed dir) pair a GENERATED oracle's
-    * fit needs, or warn that this JVM falls back to the weaker
-    * rows-only driver check — the shared head of every share-the-fit
-    * oracle (tx14, ss5). */
-  private def withPrimedSession[T](label: String)(
-      f: (SparkSession, String) => T): Option[T] = {
-    val r = for {
-      s <- SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
-      d <- graft.Tables.primedDir
-    } yield f(s, d)
-    if (r.isEmpty)
-      System.err.println("[LlmQueries] no session/primed dir when generating " +
-        s"the $label oracle — rows-only driver check for this JVM")
-    r
-  }
-
   private def oraclePqCodebooks: Option[Seq[(Int, Int, Array[Double])]] =
-    withPrimedSession("ss5")(trainedPqCodebooks)
+    Tables.withPrimedSession("ss5")(trainedPqCodebooks)
 
   /** ss5's GENERATED oracle (share-the-fit: the trained codebooks
     * inline as trunc-6 literals), shared verbatim by ss11 — serving
@@ -1965,7 +1943,7 @@ object LlmQueries extends Q.Registry {
     }
 
   private def oracleLogit: Option[graft.ml.Logistic.LogitFit] =
-    withPrimedSession("tx14")(fittedQualityModel)
+    Tables.withPrimedSession("tx14")(fittedQualityModel)
 
   private def tx14OracleSql(fit: graft.ml.Logistic.LogitFit): String = {
     val wtRows = (0 until LogitBuckets)
@@ -2102,16 +2080,6 @@ object LlmQueries extends Q.Registry {
         Bpe.wordHistogram(Tables.documents(s, d).select(lower(col("text")).as("text")),
           "text", topK = 2000),
         numMerges = 24))
-  private def oracleMerges: Option[Seq[Bpe.Merge]] = {
-    val r = for {
-      s <- SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
-      d <- graft.Tables.primedDir
-    } yield learnedMerges(s, d)
-    if (r.isEmpty)
-      System.err.println("[LlmQueries] no session/primed dir when generating " +
-        "the tx11 oracle — rows-only driver check for this JVM")
-    r
-  }
 
   private def tx11OracleSql(merges: Seq[Bpe.Merge]): String = {
     val symE = Bpe.symSqlExpr("t", Nil)
@@ -3608,7 +3576,7 @@ object LlmQueries extends Q.Registry {
             ()
           }
           .start()
-        IngestQueries.capturePlanWhileActive(q)
+        q.awaitTermination()
         graft.LocalRun.deleteRecursively(stage.resolve("ckpt"))
         s.read.parquet(outDir)
           .select(col("query_id"), col("neighbor_id"),
@@ -3644,7 +3612,7 @@ object LlmQueries extends Q.Registry {
             Fmt.trunc(col("cos_sim"), 4).as("cos_sim"), col("rank"))
           .orderBy("query_id", "rank")
       },
-      withPrimedSession("ss12")((s, d) =>
+      Tables.withPrimedSession("ss12")((s, d) =>
         ss7ChainSql("SELECT vec_id, embedding FROM embeddings",
           "vec_id % 100 = 0",
           depth = plannedShortlist(s, d), k = PlannedK))),
@@ -5657,7 +5625,7 @@ object LlmQueries extends Q.Registry {
           md5(toked).as("token_fingerprint"))
           .orderBy("doc_id")
       },
-      oracleMerges.map(tx11OracleSql)),
+      Tables.withPrimedSession("tx11")(learnedMerges).map(tx11OracleSql)),
 
     Q("tx12_lm_perplexity",
       "LM-perplexity quality scoring (the CCNet recipe, Wenzek et al. " +
@@ -5859,10 +5827,6 @@ object LlmQueries extends Q.Registry {
             val cleaned = Dedup.duplicateSpansIncremental(
               table, b, "doc_id", "text", k)
             cleaned.write.mode("append").parquet(outDir)
-            // last capture wins = the day-2 batch, the one whose dup
-            // set draws on the advanced table
-            IngestQueries.lastStreamPlan = Some(cleaned.queryExecution
-              .explainString(org.apache.spark.sql.execution.FormattedMode))
             val advanced = Dedup.advanceGramCounts(
               table, b, "doc_id", "text", k).cache()
             advanced.count() // materialize while the batch frame is live
@@ -6129,14 +6093,6 @@ object LlmQueries extends Q.Registry {
           .foreachBatch { (b: DataFrame, batchId: Long) =>
             graft.streaming.SubstrDedupStream.step(
               s, tableDir, outDir, b, batchId, "doc_id", "text", k)
-            // last capture wins = the day-2 batch (cleans against v1,
-            // the advanced table) — the plan graft.Profile commits
-            IngestQueries.lastStreamPlan = Some(
-              Dedup.duplicateSpansIncremental(
-                  graft.streaming.SubstrDedupStream.tableFor(s, tableDir, batchId),
-                  b, "doc_id", "text", k)
-                .queryExecution
-                .explainString(org.apache.spark.sql.execution.FormattedMode))
             ()
           }
           .start()

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Artifacts
+import graft.{Artifacts, Tables}
 import graft.ml.{GramOls, LinearScore, Lstm, Models}
 import graft.ops.{Derive, Windows}
 
@@ -81,30 +81,11 @@ object MlQueries extends Q.Registry {
                                    formula: String): LinearScore =
     fittedFit(s, d, formula).score
 
-  /** Shared (session, dir) resolution for generated-oracle thunks: Q
-    * oracles take no arguments, so resolve the session (active-thread
-    * first, then the global default — getActiveSession is a ThreadLocal,
-    * and an off-thread oracle read must not lose the session) and the
-    * primed table dir. None (→ rows-only downgrade) is logged LOUDLY:
-    * Q.oracle memoizes, so a silent None here would stick for the JVM's
-    * lifetime. */
-  private def withOracleCtx[T](what: String)(f: (SparkSession, String) => T): Option[T] = {
-    val resolved = for {
-      s <- SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
-      d <- graft.Tables.primedDir
-    } yield f(s, d)
-    if (resolved.isEmpty)
-      System.err.println(
-        s"[MlQueries] no session/primed dir when generating the $what oracle " +
-          "— this query's driver check degrades to rows-only for this JVM")
-    resolved
-  }
-
   private def oracleScore(formula: String): Option[LinearScore] =
-    withOracleCtx(s"'$formula'")(fittedScore(_, _, formula))
+    Tables.withPrimedSession(s"'$formula'")(fittedScore(_, _, formula))
 
   private def oracleFit(formula: String): Option[GramOls.OlsFit] =
-    withOracleCtx(s"'$formula' (inference)")(fittedFit(_, _, formula))
+    Tables.withPrimedSession(s"'$formula' (inference)")(fittedFit(_, _, formula))
 
   /** x17's term labels: statsmodels-summary row names, deterministic
     * and identical between the Spark query and the generated oracle
@@ -148,7 +129,7 @@ object MlQueries extends Q.Registry {
     }
 
   private def oracleCentroids: Option[Array[Array[Double]]] =
-    withOracleCtx("x11")(fittedCentroids)
+    Tables.withPrimedSession("x11")(fittedCentroids)
 
   /** DuckDB restatement of [[modelFrame]] as a `mf` CTE: clean + lag1 +
     * hour_str/is_weekend_d derives + the trunc-3 NN distance. Every

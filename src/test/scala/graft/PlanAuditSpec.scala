@@ -119,17 +119,20 @@ class PlanAuditSpec extends SparkSpec {
     "capture — the foreachBatch bodies the live sweep cannot see") {
     // r16 verdict finding #3/#4: the live audit above constructs the
     // registered BATCH DataFrames, but a streaming query's per-trigger
-    // work is its foreachBatch body's plan, captured via
-    // IngestQueries.lastStreamPlan and committed to bench_explain/ —
-    // which is exactly where llm8's two un-broadcast SMJs hid. This
-    // audits the committed captures themselves, so a lost broadcast
-    // inside a micro-batch body fails the build the same way a batch
-    // regression does. The file list is pinned to every registered
-    // st*/llm8 stream rather than discovered, so silently dropping a
-    // capture cannot shrink the sweep; and each file must carry the
-    // micro-batch section, because graft.Profile derives "stream" from
-    // the capture itself — a stream that stopped capturing would be
-    // recorded as a plain batch plan and drop out of this audit.
+    // work is its micro-batch plan plus its foreachBatch body's nested
+    // executions, which graft.Profile records from listener events and
+    // commits to bench_explain/ — exactly where llm8's two
+    // un-broadcast SMJs hid. This audits the committed captures
+    // themselves, so a lost broadcast inside a micro-batch body fails
+    // the build the same way a batch regression does. The file list is
+    // pinned to every registered st*/llm8 stream rather than
+    // discovered, so silently dropping a capture cannot shrink the
+    // sweep; each file must carry the micro-batch section, because
+    // graft.Profile derives "stream" from the capture itself — a
+    // stream that stopped capturing would be recorded as a plain batch
+    // plan and drop out of this audit; and that section must scan a
+    // file source, so a record of the trailing <empty>-source batch
+    // (which executes none of the per-batch work) fails too.
     val streamNames = SparkEntry.queries.keys.toSeq.sorted
       .filter(n => n.startsWith("st") && n != "st17_stream_ann_grown") ++
       Seq("llm8_stream_curation")
@@ -142,6 +145,9 @@ class PlanAuditSpec extends SparkSpec {
       val bad = Seq(
         Some("no micro-batch capture section")
           .filterNot(_ => plan.contains(Profile.MicroBatchSection)),
+        Some("no file-source scan in the micro-batch section")
+          .filterNot(_ => plan.take(plan.indexOf(Profile.FinalReadSection))
+            .contains(Profile.FileScan)),
         Some("SortMergeJoin").filter(plan.contains),
         Some("CartesianProduct").filter(plan.contains)).flatten
       if (bad.nonEmpty) Some(s"$name: ${bad.mkString(", ")}") else None
