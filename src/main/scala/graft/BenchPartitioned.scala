@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.functions._
 
@@ -37,16 +37,7 @@ object BenchPartitioned {
     val iters = sys.env.getOrElse("SPARK_GRAFT_BENCH_ITERS", "3").toInt
     val layoutDir = sys.env.getOrElse("SPARK_GRAFT_LAYOUT_DIR", "target/bench_layout")
     val outFile = sys.env.getOrElse("SPARK_GRAFT_PARTBENCH_OUT", "bench_partitioned.json")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .config(LocalRun.LocalFsConf)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalRun.session(cpus.toInt)
 
     val flat = s"$layoutDir/events_flat"
     val bydt = s"$layoutDir/events_bydt"

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.ops.Skew
@@ -40,17 +40,8 @@ object BenchSkew {
     val iters = sys.env.getOrElse("SPARK_GRAFT_BENCH_ITERS", "2").toInt
     val fanout = sys.env.getOrElse("SPARK_GRAFT_SKEW_FANOUT", "60").toInt
     val outFile = sys.env.getOrElse("SPARK_GRAFT_SKEWBENCH_OUT", "bench_skew.json")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.autoBroadcastJoinThreshold", "-1")
-      .config("spark.ui.enabled", "false")
-      .config(LocalRun.LocalFsConf)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalRun.session(cpus.toInt)
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
 
     // probe: lineitem fanned out, 50% of rows on hot key 0, the rest
     // uniform over 999 cold keys; (l_orderkey, rep) is the

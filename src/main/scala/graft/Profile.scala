@@ -9,7 +9,8 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent,
   SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.FormattedMode
-import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+import org.apache.spark.sql.execution.ui.{SparkListenerSQLExecutionEnd,
+  SparkListenerSQLExecutionStart}
 import org.apache.spark.sql.graftbridge.ListenerBridge
 import org.apache.spark.sql.streaming.{StreamingQueryListener, StreamingQueryProgress}
 
@@ -34,10 +35,11 @@ import graft.llm.Dedup
   *    final read. The listener sees every SQL execution start: a
   *    micro-batch is a root execution whose description carries the
   *    batch string of a stream the build started (`runId = …`), its
-  *    nested executions are the ones it rooted (a memory sink's
-  *    `collect`; a foreachBatch body's writes, caches and counts), and
+  *    nested executions are the ones it rooted but a memory sink's
+  *    `collect` (a foreachBatch body's writes, caches and counts), and
   *    only a batch whose plan scans a file source ([[FileScan]])
-  *    qualifies — not the trailing `<empty>`-source batch;
+  *    qualifies — not the trailing `<empty>`-source batch. A streaming
+  *    execution's plan is the one it ran, not the start event's;
   *  - dd7/dd8 record the first and last round plan from the
   *    connected-components `onRoundPlan` hook over dd3's verified
   *    pairs, then the final labels plan;
@@ -133,12 +135,12 @@ object Profile {
   }
 
   /** A started SQL execution: `root` is the execution it nests under,
-    * or its own id. */
+    * or its own id; a streaming one's `plan` is replaced when it ends. */
   private final case class Execution(id: Long, root: Long, description: String,
                                      plan: String)
 
   /** The one scheduler listener (jobs, stages, tasks, SQL execution
-    * starts) plus the stream listener (started run ids, trigger
+    * starts and ends) plus the stream listener (started run ids, trigger
     * progress); [[take]] reads and zeroes both. */
   private final class Counter extends SparkListener {
     private var jobs, stages, tasks = 0
@@ -154,6 +156,11 @@ object Profile {
         executions += Execution(s.executionId, s.rootExecutionId.getOrElse(s.executionId),
           s.description, s.physicalPlanDescription)
       }
+      case end: SparkListenerSQLExecutionEnd =>
+        ListenerBridge.streamingPlan(end).foreach(p => synchronized {
+          val i = executions.indexWhere(_.id == end.executionId)
+          if (i >= 0) executions(i) = executions(i).copy(plan = p)
+        })
       case _ => ()
     }
 
@@ -176,14 +183,14 @@ object Profile {
 
   /** The last micro-batch root execution of the given streams whose
     * plan scans a file source, then the plan of every execution it
-    * rooted, in start order (a memory sink's batch roots one: the
-    * `collect` that runs its write). */
+    * rooted, in start order, less a memory sink's `collect` (it runs the
+    * batch's own plan). */
   private def microBatch(executions: Seq[Execution], runIds: Seq[String]): Option[String] =
     executions
       .filter(e => e.root == e.id && e.plan.contains(FileScan) &&
         runIds.exists(id => e.description.contains(s"runId = $id")))
       .lastOption.map { batch =>
-        val nested = executions.filter(e => e.root == batch.id && e.id != batch.id)
+        val nested = executions.filter(e => e.root == batch.id && e.plan != batch.plan)
         (batch.plan +: nested.zipWithIndex.map { case (e, i) =>
           s"== $NestedSection ${i + 1} of ${nested.size} ==\n${e.plan}"
         }).mkString("\n")
@@ -218,9 +225,8 @@ object Profile {
       case (Some(cc), _) => roundsRecord(spark, sfDir, name, cc)
       case (None, Some(batch)) =>
         s"== $name: $MicroBatchSection of the last micro-batch\n" +
-          "== that scanned a file source, then each execution it rooted\n" +
-          "== (a memory sink's collect; a foreachBatch body's writes,\n" +
-          "== caches and counts) ==\n" +
+          "== that scanned a file source, then each other execution it\n" +
+          "== rooted (a foreachBatch body's writes, caches and counts) ==\n" +
           batch +
           s"\n== $FinalReadSection (memory-sink table / foreachBatch partials) ==\n" +
           fmt(df)

@@ -116,21 +116,13 @@ object IngestQueries extends Q.Registry {
                                    df: org.apache.spark.sql.DataFrame, prefix: String,
                                    mode: String): org.apache.spark.sql.DataFrame = {
     val sink = prefix + java.util.UUID.randomUUID().toString.replace("-", "")
-    // state-partition sizing (LocalRun.StreamStatePartitions): every
-    // memory-sink bounded stream defines and starts inside the conf
-    // window, where the stream clones its session conf, and drains
-    // there too, so each stateful operator gets 8 state stores sized
-    // to fixture state volume instead of 32 sized to the batch
-    // session's CPUs — the r13 stream fixed-cost probe's p8 lever
-    // (BASELINE.md "Retired probes"), taken where it belongs: in the
-    // stream's own definition, as a production deployment would
-    graft.LocalRun.withShufflePartitions(s, graft.LocalRun.StreamStatePartitions) {
-      df.writeStream.format("memory").queryName(sink)
-        .outputMode(mode)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-        .awaitTermination()
-    }
+    // stateful operators get LocalRun.StreamStatePartitions state
+    // stores, a property of the session the stream clones at start()
+    df.writeStream.format("memory").queryName(sink)
+      .outputMode(mode)
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .start()
+      .awaitTermination()
     s.table(sink)
   }
 
@@ -313,37 +305,32 @@ object IngestQueries extends Q.Registry {
         val readings = readingsStream(s, d)
         val joined = graft.streaming.MicroBatchIngest
           .hourlyStreamJoin(status, readings)
-          .select(col("hour_window.start").as("hour_start"),
-            col("bikes_available"), col("temperature"))
+          .select(col("hour_window"), col("bikes_available"), col("temperature"))
         // partials/ outlives the returned frame's lazy read: one live
         // stage tree per query (the st7 policy)
         val stage = graft.Artifacts.replace(graft.Artifacts.Jvm, "", "st4_stage")(
           _.tree(java.nio.file.Files.createTempDirectory("graft_st4_")))
         val outDir = stage.resolve("partials").toString
-        // 8 state stores per join side, not 32 (the runToMemory
-        // state-partition note) — the stream starts inside the conf
-        // window, which is when it clones the session conf, and
-        // drains there too
-        graft.LocalRun.withShufflePartitions(s,
-            graft.LocalRun.StreamStatePartitions) {
-          joined.writeStream
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .option("checkpointLocation", stage.resolve("ckpt").toString)
-            .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
-              b.groupBy("hour_start")
-                .agg(count(lit(1)).as("n"),
-                  sum("bikes_available").as("sum_bikes"),
-                  sum("temperature").as("sum_temp"))
-                .write.mode("append").parquet(outDir)
-              ()
-            }
-            .start()
-            .awaitTermination()
-        }
+        // LocalRun.StreamStatePartitions state stores per join side; each
+        // batch arrives hash-partitioned by the join key, so the partial
+        // aggregate groups by that key and needs no shuffle
+        joined.writeStream
+          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+          .option("checkpointLocation", stage.resolve("ckpt").toString)
+          .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
+            b.groupBy("hour_window")
+              .agg(count(lit(1)).as("n"),
+                sum("bikes_available").as("sum_bikes"),
+                sum("temperature").as("sum_temp"))
+              .write.mode("append").parquet(outDir)
+            ()
+          }
+          .start()
+          .awaitTermination()
         // the checkpoint state is per-run scratch (the st7 cleanup note)
         graft.LocalRun.deleteRecursively(stage.resolve("ckpt"))
         s.read.parquet(outDir)
-          .groupBy("hour_start")
+          .groupBy(col("hour_window.start").as("hour_start"))
           .agg(sum("n").as("n_pairs"),
             Fmt.trunc(sum("sum_bikes") / sum("n"), 6).as("avg_bikes"),
             Fmt.trunc(sum("sum_temp") / sum("n"), 6).as("avg_temp"))

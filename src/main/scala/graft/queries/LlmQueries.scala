@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.CheckpointBridge
 
 import graft.{Artifacts, Tables}
 import graft.llm.{Bpe, Dedup, Importance, LangModel, Multimodal, Packing, Repetition, Sampling, Search, Similarity, TextOps}
@@ -959,29 +960,28 @@ object LlmQueries extends Q.Registry {
     * (LM training slice) and tx14 (classifier labels). */
   private val CuratedSources = Seq("src0", "src1", "src2", "src3")
 
-  /** Materialize `df` hash-partitioned by `key` and hand back a frame
-    * whose LogicalRDD still CARRIES that partitioning (r18): the
-    * one-exchange pipelines (tx21/llm4) hash the corpus by doc id
-    * once and run every (key, …)-keyed aggregation/window/join
-    * downstream shuffle-free. Two gotchas this helper pins down:
-    * the analyzer's self-join dedup clones a bare shared
-    * `repartition` subtree per consuming arm (N un-reused corpus
-    * shuffles instead of 1 — measured 2× slower than the topology it
-    * was meant to fix), and a localCheckpoint built under AQE records
-    * UnknownPartitioning, silently re-adding every downstream
-    * exchange; so the materialization runs with AQE off (the swap is
-    * session-global, same serial contract as withShufflePartitions).
+  /** Materialize `df` hash-partitioned by `key` into the session's
+    * `spark.sql.shuffle.partitions` and hand back a frame whose plan
+    * DECLARES that partitioning (r18): the one-exchange pipelines
+    * (tx21/llm4) hash the corpus by doc id once and run every (key, …)-
+    * keyed aggregation/window/join downstream shuffle-free. It is a
+    * checkpoint because the analyzer's self-join dedup clones a bare
+    * shared `repartition` subtree per consuming arm (N un-reused corpus
+    * shuffles instead of 1 — measured 2× slower); a checkpoint under
+    * AQE records UnknownPartitioning, so [[CheckpointBridge]]
+    * re-declares the by-number repartition, which AQE never coalesces.
     * Always inside the timed region — the builder runs per measured
     * iteration. At cluster scale this is a key-clustered stage write
     * (Iceberg hash distribution-mode). Callers return plans that still
     * read it, so it lives in [[Artifacts]] under (session, dir, name)
     * until the next build replaces and releases it (bounded: one per
     * query per session). */
-  private def partitionedCheckpoint(s: SparkSession, d: String, name: String,
-                                    df: DataFrame, key: String): DataFrame =
-    Artifacts.replace(s, d, name)(_.checkpoint(
-      graft.LocalRun.withConf(s, "spark.sql.adaptive.enabled", "false")(
-        df.repartition(col(key)).localCheckpoint(true))))
+  private[queries] def partitionedCheckpoint(s: SparkSession, d: String,
+      name: String, df: DataFrame, key: String): DataFrame = {
+    val n = s.conf.get("spark.sql.shuffle.partitions").toInt
+    Artifacts.replace(s, d, name)(_.checkpoint(CheckpointBridge.hashPartitioned(
+      df.repartition(n, col(key)).localCheckpoint(true), key, n)))
+  }
 
   /** tx12/llm2's [[LangModel.train]] (trunc-6 tables) under
     * (session, dir, name): its pair-count checkpoint lives until the
@@ -4434,7 +4434,7 @@ object LlmQueries extends Q.Registry {
             .otherwise(lit("a closing paragraph for the page.")))
         // ONE corpus exchange (r18, guide §2.4/§8): hash the compact
         // (doc_id, page) rows by doc_id once and MATERIALIZE that
-        // partitioning (eager localCheckpoint — the LogicalRDD keeps
+        // partitioning (eager localCheckpoint — the LogicalRDD declares
         // hashpartitioning(doc_id), and the analyzer's self-join
         // dedup otherwise clones the repartition subtree per arm, 6
         // un-reused corpus shuffles instead of 1). Every downstream

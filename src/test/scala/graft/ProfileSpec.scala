@@ -6,8 +6,9 @@ import java.nio.file.Files
   * (st8 and st1 to memory sinks, st7 through foreachBatch): every plan
   * record lands in the given directory, only the streams' carry the
   * micro-batch section, each section holds a source-scanning batch
-  * (st1's trailing `<empty>`-source batch must not win) and st7's holds
-  * its body's nested executions, every measured run is attributed its
+  * (st1's trailing `<empty>`-source batch must not win), a memory
+  * sink's holds its batch plan once, st7's holds its body's nested
+  * executions, every measured run is attributed its
   * Spark jobs, and an unknown name fails before any work starts. */
 class ProfileSpec extends SparkSpec {
   private val sfDir = "/root/testdata/sf0.001"
@@ -35,6 +36,10 @@ class ProfileSpec extends SparkSpec {
         assert(plans(name).contains(Profile.MicroBatchSection), plans(name))
         assert(section(name).contains(Profile.FileScan), plans(name))
       }
+      // a memory sink's batch roots only the collect that re-renders
+      // the batch plan: the record holds that plan once
+      for (name <- Seq(stream, racy))
+        assert(!section(name).contains(Profile.NestedSection), plans(name))
       // st7's foreachBatch body appends the cleaned batch to its sink
       assert(section(foreachBatch).contains(Profile.NestedSection), plans(foreachBatch))
       assert(section(foreachBatch).contains("InsertIntoHadoopFsRelationCommand"),

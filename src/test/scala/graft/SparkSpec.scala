@@ -18,9 +18,10 @@ object SparkSpec {
     .master("local[4]")
     .appName("graft-test")
     .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
+    // the same semantic confs as LocalRun.session: the plan-audit
+    // exchange pins are generated there, so the test session must plan
+    // joins identically, and its streams must keep 8 state stores
+    .config(LocalRun.SessionConf)
     // fail tests on ANY encoder/expression codegen compile failure
     // instead of Spark's default silent interpreted fallback — a
     // Janino error in a native expression or encoder would otherwise
@@ -28,11 +29,5 @@ object SparkSpec {
     // path the library's performance claims rest on (production
     // sessions keep the default FALLBACK behavior)
     .config("spark.sql.codegen.factoryMode", "CODEGEN_ONLY")
-    // mirror LocalRun.session's subset co-partitioning leniency: the
-    // plan-audit exchange pins are generated under LocalRun.session,
-    // so the test session must plan joins identically
-    .config("spark.sql.requireAllClusterKeysForCoPartition", "false")
-    .config("spark.ui.enabled", "false")
-    .config(LocalRun.LocalFsConf)
     .getOrCreate()
 }

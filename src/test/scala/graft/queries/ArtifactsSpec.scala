@@ -1,19 +1,29 @@
 package graft.queries
 
 import java.nio.file.{Files, Paths}
+import java.util.concurrent.atomic.AtomicBoolean
 
+import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.Attribute
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
 import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.functions.{col, count, lit, sum}
+import org.apache.spark.sql.graftbridge.CheckpointBridge
 import org.apache.spark.storage.StorageLevel
 
-import graft.{Artifacts, Bench, SparkEntry, SparkSpec}
+import graft.{Artifacts, Bench, ShufflePin, SparkEntry, SparkSpec}
 
 /** [[Artifacts]], the one owner of the engine's fits, cached and
   * checkpointed frames and scratch trees: its key policy, nested builds,
-  * replacement, the refit resets, and the stopped-session sweep. */
+  * replacement, the refit resets, and the stopped-session sweep; and
+  * [[LlmQueries.partitionedCheckpoint]], which declares its partitioning
+  * with AQE on, so no build swaps a session conf. */
 class ArtifactsSpec extends SparkSpec {
+  import SparkSpec.session.implicits._
+
   private val sfDir = "/root/testdata/sf0.001"
   /** The same data under a dir key no other suite uses, so the entries
     * below are built here, not read from an earlier suite's builds. */
@@ -120,5 +130,68 @@ class ArtifactsSpec extends SparkSpec {
     } yield s"$f:${i + 1}: ${line.trim}"
     assert(offenders.isEmpty,
       "memoize through graft.Artifacts instead:\n" + offenders.mkString("\n"))
+  }
+
+  test("partitionedCheckpoint reports HashPartitioning(key, n) under AQE, and a " +
+    "keyed aggregate join over it plans no shuffle and keeps its rows") {
+    assert(spark.conf.get("spark.sql.adaptive.enabled") == "true")
+    val n = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    val docs = (0 until 200).map(i => (i.toLong % 37, i % 3, i)).toDF("doc_id", "g", "v")
+    val pages = LlmQueries.partitionedCheckpoint(spark, freshDir, "spec_pages", docs, "doc_id")
+    try {
+      val declared = pages.queryExecution.analyzed.collect {
+        case l: LogicalRDD => l.outputPartitioning
+      }
+      assert(declared.size == 1)
+      declared.head match {
+        case HashPartitioning(Seq(a: Attribute), m) =>
+          assert(a.name == "doc_id" && m == n, declared)
+        case p => fail(s"declared $p")
+      }
+      def keyed(f: DataFrame) =
+        f.groupBy("doc_id", "g").agg(count(lit(1)).as("c"))
+          .join(f.groupBy("doc_id").agg(sum("v").as("s")).hint("shuffle_hash"),
+            Seq("doc_id"))
+      assert(ShufflePin.shuffleCount(keyed(pages)) == 0,
+        keyed(pages).queryExecution.executedPlan.toString)
+      assert(ShufflePin.shuffleCount(keyed(docs)) > 0)
+      assert(keyed(pages).collect().toSet == keyed(docs).collect().toSet)
+    } finally Artifacts.drop("spec_pages")
+  }
+
+  test("a declaration that does not match the checkpoint's partition " +
+    "count fails loudly") {
+    val n = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    val ck = spark.range(50).toDF().repartition(n + 1, col("id")).localCheckpoint(true)
+    try {
+      val e = intercept[IllegalArgumentException](
+        CheckpointBridge.hashPartitioned(ck, "id", n))
+      assert(e.getMessage.contains(s"declared $n"))
+    } finally graft.llm.Dedup.releaseCheckpoint(ck)
+  }
+
+  test("a bounded stateful stream and a tx21 build leave the session's " +
+    "shuffle partitions and AQE setting unchanged for every other thread") {
+    val keys = Seq("spark.sql.shuffle.partitions", "spark.sql.adaptive.enabled")
+    val want = keys.map(k => k -> spark.conf.get(k)).toMap
+    val seen = mutable.LinkedHashSet[(String, String)]()
+    val done = new AtomicBoolean(false)
+    val reader = new Thread(() =>
+      while (!done.get()) {
+        keys.foreach { k =>
+          val v = spark.conf.get(k)
+          if (v != want(k)) seen.synchronized { seen += (k -> v) }
+        }
+        Thread.sleep(1)
+      })
+    reader.start()
+    try {
+      assert(SparkEntry.queries("st3_stream_stateful_counts")(spark, sfDir).count() > 0)
+      assert(SparkEntry.queries("tx21_gopher_repetition")(spark, sfDir).count() > 0)
+    } finally {
+      done.set(true)
+      reader.join()
+    }
+    assert(seen.isEmpty, s"values other than the session's: $seen")
   }
 }
