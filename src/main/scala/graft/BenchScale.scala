@@ -83,7 +83,7 @@ import graft.ops.Windows
  *                 broadcast join, honestly ~linear;
  *  - tx_bpe:      tx11's BPE pipeline end-to-end — histogram (top-K
  *                 BOUNDED regardless of factor) + driver merge learn +
- *                 the replace-chain tokenization map stage; output
+ *                 the merge-kernel tokenization map stage; output
  *                 rows ×f, the learn stage's input capped by topK;
  *  - ss_bm25:     ss4's BM25 with a FIXED replica-0 query — the
  *                 corpus token stream grows ×f but the posting
@@ -117,9 +117,6 @@ import graft.ops.Windows
   *                 and time must grow ≲ linearly, closing the "would
   *                 the ladder survive 100×?" claim with wall-clock.
   *
-  *  - dd_prefix_hot_salted: dd_prefix_hot with the opt-in salting ON
-  *                 (16 buckets, hot = df ≥ 1024) — its time vs the
-  *                 unsalted hot leg is the measured value of salting;
   *  - a_funnel:    a12's 3-stage windowed funnel on replica-unique
   *                 users — counts REQUIREd exactly ×f (isomorphic
   *                 replicas ⇒ identical rates by arithmetic);
@@ -284,6 +281,41 @@ object BenchScale {
     (banded, verified)
   }
 
+  /** The dd12 exact-recall prefix-filter similarity join
+    * (Dedup.prefixFilterPairs, bigram sets, Jaccard ≥ 0.6) over an
+    * inflated corpus. Replica-prefixed token spaces keep true pairs
+    * within a replica, so the EXACT algorithm must reproduce them ×f
+    * precisely (no Approx wobble — there is no recall knob) and never
+    * emit a cross-replica pair (REQUIREd); the prefix self-join's
+    * collision volume is the scaling hazard (per-replica gram spaces
+    * are disjoint, so it must grow ~×f, not ×f²). The observed
+    * candidate_rows (collision rows surviving the scalar filters =
+    * verification-kernel evaluations) is logged per factor on the
+    * same pass, so candidate growth is auditable alongside wall-clock.
+    * The collision join's build side grows ×f (prefix rows carry their
+    * doc's gram array), so its partition count scales with f exactly
+    * as a real deployment's shuffle.partitions would — ~32 MB of build
+    * per task at any factor. */
+  private def ddPrefix(name: String, docs: DataFrame, f: Int): Long = {
+    val base = docs.withColumn("ws", TextOps.words(col("text")))
+      .withColumn("grams", array_distinct(TextOps.wordShingles(col("ws"), 2)))
+      .select(col("doc_id"), col("grams"))
+    val obs = org.apache.spark.sql.Observation(s"${name}_stats_$f")
+    val out = Dedup.prefixFilterPairs(base, "doc_id", "grams", 0.6,
+      stats = Some(obs),
+      collisionPartitions = Some(math.min(512, 32 * f))).cache()
+    try {
+      val n = out.count()
+      System.err.println(s"[scalebench] $name $f×: candidate_rows=" +
+        s"${obs.get.getOrElse("candidate_rows", -1L)} verified_pairs=$n")
+      val cross = out
+        .filter(pmod(col("doc_a"), lit(f)) =!= pmod(col("doc_b"), lit(f)))
+        .count()
+      require(cross == 0L, s"$name at $f×: $cross cross-replica pairs")
+      n
+    } finally out.unpersist(blocking = false)
+  }
+
   private def ssBrute(emb: DataFrame, queries: DataFrame): Long =
     Similarity.bruteForceTopK(emb, "vec_id", "embedding",
       queries, "q_id", "q_vec", k = 10).count()
@@ -394,15 +426,16 @@ object BenchScale {
   }
 
   /** The tx11 BPE core (llm/Bpe — the SAME code the query ships):
-    * histogram → learn → replace-chain tokenize. The learn input is
-    * capped by topK no matter the corpus factor (the aggregate-
-    * before-ML bound), so only the histogram aggregation and the
-    * tokenization map stage grow with f. */
+    * histogram → learn → tokenize with the one-expression merge kernel
+    * ([[graft.functions.BpeTokenize]], the call tx11 makes). The learn
+    * input is capped by topK no matter the corpus factor (the
+    * aggregate-before-ML bound), so only the histogram aggregation and
+    * the tokenization map stage grow with f. */
   private def txBpe(docs: DataFrame, f: Int): Long = {
     val merges = graft.llm.Bpe.learn(
       graft.llm.Bpe.wordHistogram(docs, "text", topK = 2000), numMerges = 24)
-    val sym = graft.llm.Bpe.symbolize(graft.llm.Bpe.stripSep(lower(col("text"))))
-    val toked = graft.llm.Bpe.applyMerges(sym, merges)
+    val toked = graft.functions.BpeTokenize.tokenize(
+      graft.llm.Bpe.stripSep(lower(col("text"))), merges)
     docs.select(graft.llm.Bpe.tokenCount(toked).as("nt"))
       .agg(count(lit(1)), sum("nt")).head().getLong(0)
   }
@@ -553,8 +586,7 @@ object BenchScale {
     val legFilter = sys.env.get("SPARK_GRAFT_SCALE_LEGS")
       .map(_.split(",").map(_.trim).toSet)
     require(factors.headOption.contains(1), "factors must start at 1 (the baseline)")
-    val shufflePartitions = sys.env.getOrElse("SPARK_GRAFT_SCALE_PARTITIONS", cpus)
-    val session = LocalRun.session(cpus.toInt, shufflePartitions.toInt)
+    val session = LocalRun.session(cpus.toInt)
 
     val events = Tables.events(session, sfDir)
     val documents = Tables.documents(session, sfDir).select("doc_id", "text")
@@ -700,41 +732,8 @@ object BenchScale {
         out.agg(count(lit(1)), sum("n_removed_tokens"),
           sum(length(col("clean_text")))).head().getLong(0)
       }, Linear),
-      ("dd_prefix", (f: Int) => {
-        // dd12's exact-recall prefix-filter similarity join: replica-
-        // prefixed token spaces keep true pairs within a replica, so
-        // the EXACT algorithm must reproduce them ×f precisely (no
-        // Approx wobble — there is no recall knob) and never emit a
-        // cross-replica pair; the prefix self-join's collision volume
-        // is the scaling hazard this leg watches (per-replica gram
-        // spaces are disjoint, so it must grow ~×f, not ×f²). The
-        // observed candidate_rows metric (collision rows surviving
-        // the scalar filters = verification-kernel evaluations) is
-        // logged per factor on the same pass — the r10 judge ask —
-        // so candidate growth is auditable alongside wall-clock.
-        val d = inflateDocuments(documents, f)
-        val base = d.withColumn("ws", TextOps.words(col("text")))
-          .withColumn("grams", array_distinct(TextOps.wordShingles(col("ws"), 2)))
-          .select(col("doc_id"), col("grams"))
-        val obs = org.apache.spark.sql.Observation(s"dd_prefix_stats_$f")
-        // the collision join's build side grows ×f (prefix rows carry
-        // their doc's gram array), so its partition count scales with
-        // f exactly as a real deployment's shuffle.partitions would —
-        // ~32 MB of build per task at any factor
-        val out = Dedup.prefixFilterPairs(base, "doc_id", "grams", 0.6,
-          stats = Some(obs),
-          collisionPartitions = Some(math.min(512, 32 * f))).cache()
-        try {
-          val n = out.count()
-          System.err.println(s"[scalebench] dd_prefix $f×: candidate_rows=" +
-            s"${obs.get.getOrElse("candidate_rows", -1L)} verified_pairs=$n")
-          val cross = out
-            .filter(pmod(col("doc_a"), lit(f)) =!= pmod(col("doc_b"), lit(f)))
-            .count()
-          require(cross == 0L, s"dd_prefix at $f×: $cross cross-replica pairs")
-          n
-        } finally out.unpersist(blocking = false)
-      }, Linear),
+      ("dd_prefix", (f: Int) =>
+        ddPrefix("dd_prefix", inflateDocuments(documents, f), f), Linear),
       ("dd_prefix_hot", (f: Int) => {
         // SKEW probe for dd_prefix (r11): every BASE document gains the
         // same two-token suffix before inflation, so each replica
@@ -750,26 +749,9 @@ object BenchScale {
         // instead of asserted. Outputs stay ×f exactly (replica-
         // disjoint token spaces; the suffix shifts which planted pairs
         // clear 0.6 identically in every replica).
-        val d = inflateDocuments(
+        ddPrefix("dd_prefix_hot", inflateDocuments(
           documents.withColumn("text",
-            concat(col("text"), lit(" zzhota zzhotb"))), f)
-        val base = d.withColumn("ws", TextOps.words(col("text")))
-          .withColumn("grams", array_distinct(TextOps.wordShingles(col("ws"), 2)))
-          .select(col("doc_id"), col("grams"))
-        val obs = org.apache.spark.sql.Observation(s"dd_prefix_hot_stats_$f")
-        val out = Dedup.prefixFilterPairs(base, "doc_id", "grams", 0.6,
-          stats = Some(obs),
-          collisionPartitions = Some(math.min(512, 32 * f))).cache()
-        try {
-          val n = out.count()
-          System.err.println(s"[scalebench] dd_prefix_hot $f×: candidate_rows=" +
-            s"${obs.get.getOrElse("candidate_rows", -1L)} verified_pairs=$n")
-          val cross = out
-            .filter(pmod(col("doc_a"), lit(f)) =!= pmod(col("doc_b"), lit(f)))
-            .count()
-          require(cross == 0L, s"dd_prefix_hot at $f×: $cross cross-replica pairs")
-          n
-        } finally out.unpersist(blocking = false)
+            concat(col("text"), lit(" zzhota zzhotb"))), f), f)
       }, Linear),
       ("tx_dsir", (f: Int) => txDsir(inflateDocuments(documents, f), f), Linear),
       ("tx_bpe", (f: Int) => txBpe(inflateDocuments(documents, f), f), Linear),
@@ -817,40 +799,6 @@ object BenchScale {
           out.count()
         } finally out.unpersist(blocking = false)
       }, Constant),
-      ("dd_prefix_hot_salted", (f: Int) => {
-        // dd_prefix_hot with the r12 opt-in salting ON: the same
-        // universal-boilerplate-gram corpus, but both gram-keyed
-        // exchanges spread the hot key over 16 salt buckets
-        // (Dedup.prefixFilterPairs saltBuckets; hot = df >= 1024, so
-        // only the planted universal bigram qualifies — per-replica df
-        // = docs/replica ≈ 5k at sf0.1, family grams ≤ 2). Output must
-        // be BIT-identical to the unsalted hot leg (PrefixSaltSpec pins
-        // equality; the ×f REQUIRE here pins it per factor), and the
-        // leg's time against dd_prefix_hot's is the measured value of
-        // the salting — the r11 "salting not yet wired" gap, closed
-        // with wall-clock.
-        val d = inflateDocuments(
-          documents.withColumn("text",
-            concat(col("text"), lit(" zzhota zzhotb"))), f)
-        val base = d.withColumn("ws", TextOps.words(col("text")))
-          .withColumn("grams", array_distinct(TextOps.wordShingles(col("ws"), 2)))
-          .select(col("doc_id"), col("grams"))
-        val obs = org.apache.spark.sql.Observation(s"dd_prefix_hot_salted_stats_$f")
-        val out = Dedup.prefixFilterPairs(base, "doc_id", "grams", 0.6,
-          stats = Some(obs),
-          collisionPartitions = Some(math.min(512, 32 * f)),
-          saltBuckets = Some(16), saltMinDf = 1024L).cache()
-        try {
-          val n = out.count()
-          System.err.println(s"[scalebench] dd_prefix_hot_salted $f×: candidate_rows=" +
-            s"${obs.get.getOrElse("candidate_rows", -1L)} verified_pairs=$n")
-          val cross = out
-            .filter(pmod(col("doc_a"), lit(f)) =!= pmod(col("doc_b"), lit(f)))
-            .count()
-          require(cross == 0L, s"dd_prefix_hot_salted at $f×: $cross cross-replica pairs")
-          n
-        } finally out.unpersist(blocking = false)
-      }, Linear),
       ("dd_prefix_hot_global", (f: Int) => {
         // TRUE single-key skew probe (r12): the boilerplate suffix is
         // planted AFTER inflation, so ONE un-prefixed bigram
@@ -861,46 +809,10 @@ object BenchScale {
         // PREFIX (frequency-ascending rank puts it last; every doc
         // has ≥ 3 grams), so verified pairs stay replica-consistent
         // ×f and no cross-replica candidate exists at the collision
-        // join — but the df-attach join must move ALL of the hot
-        // key's exploded rows through ONE reducer unsalted. The
-        // salted twin below is the measured value of spreading it.
-        val d = inflateDocuments(documents, f)
-          .withColumn("text", concat(col("text"), lit(" zzhota zzhotb")))
-        val base = d.withColumn("ws", TextOps.words(col("text")))
-          .withColumn("grams", array_distinct(TextOps.wordShingles(col("ws"), 2)))
-          .select(col("doc_id"), col("grams"))
-        val out = Dedup.prefixFilterPairs(base, "doc_id", "grams", 0.6,
-          collisionPartitions = Some(math.min(512, 32 * f))).cache()
-        try {
-          val n = out.count()
-          val cross = out
-            .filter(pmod(col("doc_a"), lit(f)) =!= pmod(col("doc_b"), lit(f)))
-            .count()
-          require(cross == 0L, s"dd_prefix_hot_global at $f×: $cross cross-replica pairs")
-          n
-        } finally out.unpersist(blocking = false)
-      }, Linear),
-      ("dd_prefix_hot_global_salted", (f: Int) => {
-        // the same global-hot corpus through saltBuckets = 16: the
-        // df-attach join spreads the 500k-row hot key over 16 salted
-        // reducers (and the collision join's hot prefixes, if any,
-        // over hash(doc) salts) — output must stay bit-identical ×f
-        val d = inflateDocuments(documents, f)
-          .withColumn("text", concat(col("text"), lit(" zzhota zzhotb")))
-        val base = d.withColumn("ws", TextOps.words(col("text")))
-          .withColumn("grams", array_distinct(TextOps.wordShingles(col("ws"), 2)))
-          .select(col("doc_id"), col("grams"))
-        val out = Dedup.prefixFilterPairs(base, "doc_id", "grams", 0.6,
-          collisionPartitions = Some(math.min(512, 32 * f)),
-          saltBuckets = Some(16), saltMinDf = 1024L).cache()
-        try {
-          val n = out.count()
-          val cross = out
-            .filter(pmod(col("doc_a"), lit(f)) =!= pmod(col("doc_b"), lit(f)))
-            .count()
-          require(cross == 0L, s"dd_prefix_hot_global_salted at $f×: $cross cross-replica pairs")
-          n
-        } finally out.unpersist(blocking = false)
+        // join — but the df-attach join moves ALL of the hot key's
+        // exploded rows through ONE reducer, which this leg prices.
+        ddPrefix("dd_prefix_hot_global", inflateDocuments(documents, f)
+          .withColumn("text", concat(col("text"), lit(" zzhota zzhotb"))), f)
       }, Linear),
       ("a_funnel", (f: Int) => {
         // a12's 3-stage windowed funnel (r17: one scan + one user-key

@@ -10,7 +10,7 @@ import graft.ops.Skew
   * the 100 TB brief names ("skewed keys → salting or AQE skew-join").
   *
   * The probe side is derived from the sf0.1 `lineitem` fact, fanned out
-  * `SPARK_GRAFT_SKEW_FANOUT`× (default 60 → ~36M rows) with a join key
+  * 60× (→ ~36M rows) with a join key
   * where HALF of all rows land on one hot key (key 0) and the rest
   * spread over 999 cold keys — the pathological shape where one reducer
   * owns 50% of the shuffle. The build side is a 1,000-row key dim, kept
@@ -38,7 +38,7 @@ object BenchSkew {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val iters = sys.env.getOrElse("SPARK_GRAFT_BENCH_ITERS", "2").toInt
-    val fanout = sys.env.getOrElse("SPARK_GRAFT_SKEW_FANOUT", "60").toInt
+    val fanout = 60
     val outFile = sys.env.getOrElse("SPARK_GRAFT_SKEWBENCH_OUT", "bench_skew.json")
     val spark = LocalRun.session(cpus.toInt)
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
@@ -92,7 +92,7 @@ object BenchSkew {
     // the plain plan computes that band's ~(0.9n)² pair block on a
     // single reducer; saltBuckets spreads it. Same query, same output
     // (row-count asserted), only the salt knob differs.
-    val nDocs = sys.env.getOrElse("SPARK_GRAFT_LSH_DOCS", "6000").toInt
+    val nDocs = 6000
     val lshDocs = spark.range(nDocs).select(
       col("id").as("doc_id"),
       when(col("id") % 10 < 9,

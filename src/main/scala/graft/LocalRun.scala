@@ -15,11 +15,10 @@ object LocalRun {
   /** The standard local session: [[SessionConf]], shuffle partitions
     * sized to the core count (local mode has `cpus` slots, not Spark's
     * default 200), logs at WARN less [[quietLogs]]. */
-  def session(cpus: Int, shufflePartitions: Int = -1): SparkSession = {
+  def session(cpus: Int): SparkSession = {
     val s = SparkSession.builder()
       .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions",
-        if (shufflePartitions > 0) shufflePartitions else cpus)
+      .config("spark.sql.shuffle.partitions", cpus)
       .config(SessionConf)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")

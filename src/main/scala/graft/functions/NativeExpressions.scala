@@ -2,7 +2,8 @@ package graft.functions
 
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.SparkSessionExtensions
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ImplicitCastInputTypes, TernaryExpression}
+import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo, ImplicitCastInputTypes, TernaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types.{DataType, DoubleType}
@@ -112,10 +113,19 @@ object GraftFunctions {
     ("minhash_sig", classOf[MinHashSig],
       (args: Seq[Expression]) => MinHashSig(args(0), args(1))))
 
-  def register(spark: SparkSession): Unit =
-    builders.foreach { case (name, _, b) =>
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(name, b, "built-in")
+  /** Registers each function under graft's own `ExpressionInfo` (the
+    * info [[GraftExtensions]] injects). A name whose registered info
+    * already names graft's class is left alone, so a repeat call does
+    * not re-register (Spark logs a WARN per replaced function), while a
+    * foreign function of the same name is still replaced. */
+  def register(spark: SparkSession): Unit = {
+    val registry = spark.sessionState.functionRegistry
+    builders.foreach { case (name, cls, b) =>
+      val id = FunctionIdentifier(name)
+      if (!registry.lookupFunction(id).exists(_.getClassName == cls.getName))
+        registry.registerFunction(id, new ExpressionInfo(cls.getName, name), b)
     }
+  }
 }
 
 /** `spark.sql.extensions` entry point: every session built with
@@ -125,8 +135,6 @@ object GraftFunctions {
   * never drift (the array kernels used to be register-only). */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
-    import org.apache.spark.sql.catalyst.FunctionIdentifier
-    import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
     GraftFunctions.builders.foreach { case (name, cls, b) =>
       ext.injectFunction((
         FunctionIdentifier(name), new ExpressionInfo(cls.getName, name), b))

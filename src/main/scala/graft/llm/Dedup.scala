@@ -179,28 +179,10 @@ object Dedup {
     * the gram-set attach join), one on gram for the collision join —
     * all key-bounded; the per-pair work is map-side compute after the
     * last exchange. No (lang, band) block ever materializes its n²
-    * pair set: frequency-ascending prefixes keep boilerplate grams
-    * out of most prefixes, and the residual hot-gram key has an
-    * OPT-IN salting defense wired in (`saltBuckets`, same idea as
-    * [[lshCandidatePairs]]'s / [[graft.ops.Skew.saltedJoin]]): the
-    * bench_scale `dd_prefix_hot` probe showed a universal boilerplate
-    * gram still costs +38% at 100× unsalted, concentrated in the two
-    * gram-keyed exchanges. With `saltBuckets = Some(b)`,
-    *  (1) the document-frequency attach join salts HOT keys only
-    *      (gdf >= `saltMinDf`): the hot-key set is bounded at
-    *      corpus-grams / saltMinDf so it broadcasts, hot probe rows
-    *      get a deterministic per-doc salt, and only hot (gram, gdf)
-    *      build rows replicate b× — the universal gram's exploded
-    *      rows spread over b tasks instead of one, and cold keys pay
-    *      nothing (an all-rows first cut replicated the corpus-sized
-    *      dfreq b× and measured SLOWER than unsalted at 100×);
-    *  (2) the collision self-join salts ONLY grams with
-    *      gdf >= `saltMinDf` (cold keys pay nothing): the doc_a side
-    *      keeps one row at salt hash(doc)%b, the doc_b side replicates
-    *      its hot prefix rows b×, so each pair still meets EXACTLY
-    *      once and the hot key's candidate work spreads over b tasks.
-    * Salts are hash-derived (retry-safe, deterministic); output is
-    * bit-identical with or without salting (PrefixSaltSpec pins it).
+    * pair set, and the rarest-first prefix order is the hot-gram
+    * defence: a boilerplate gram in every document ranks last in each
+    * of them, so it enters only the prefixes of documents whose prefix
+    * spans their whole gram set (bench_scale's `dd_prefix_hot` legs).
     * Corpus-scale joins carry shuffle_hash hints (an SMJ sort on gram
     * buys nothing — PlanAuditSpec).
     *
@@ -267,9 +249,7 @@ object Dedup {
                         threshold: Double,
                         stats: Option[org.apache.spark.sql.Observation] = None,
                         collisionPartitions: Option[Int] = None,
-                        blockCols: Seq[String] = Nil,
-                        saltBuckets: Option[Int] = None,
-                        saltMinDf: Long = 4096L)
+                        blockCols: Seq[String] = Nil)
       : DataFrame = {
     require(threshold > 0.0 && threshold <= 1.0,
       s"threshold must be in (0, 1], got $threshold")
@@ -279,9 +259,7 @@ object Dedup {
     // gram-set size), so reject the reserved names outright
     val reserved = Set("doc", "grams", "m", "gram", "gdf", "rn",
       "doc_a", "doc_b", "m_a", "m_b", "rn_a", "rn_b", "g_a", "g_b",
-      "c", "jaccard", "__salt", "__hot")
-    saltBuckets.foreach(b => require(b >= 2,
-      s"saltBuckets must be >= 2 when set, got $b"))
+      "c", "jaccard")
     val clash = blockCols.toSet.intersect(reserved)
     require(clash.isEmpty,
       s"blockCols collide with prefixFilterPairs internals: $clash — rename them")
@@ -315,45 +293,7 @@ object Dedup {
     // slim prefix rows first (the rank window would otherwise shuffle
     // every exploded gram row with its 400 B array payload), then
     // attach each doc's sorted gram set co-partitioned on doc
-    // document-frequency attach: the first gram-keyed exchange, and
-    // the one a universal gram floods hardest (EVERY doc contributes
-    // a row for it, all landing in one task unsalted). Salted variant:
-    // hot keys ONLY. The hot-key set is bounded by construction
-    // (≤ corpus-grams / saltMinDf keys), so it BROADCASTS — ex learns
-    // per-row hotness from a broadcast left join, hot probe rows get a
-    // per-doc salt, and only the hot (gram, gdf) build rows replicate
-    // b×. The r12 first cut salted ALL rows (dfreq replicated b×
-    // wholesale); at 100× the vocab is corpus-sized and that 16×
-    // build-side blowup measured 32% SLOWER than unsalted — the
-    // bench_scale dd_prefix_hot_global pair is the record. One extra
-    // map-side-combined aggregation pass prices the hot set.
-    val dfAttached = saltBuckets match {
-      case Some(b) =>
-        val hotKeys = dfreq.filter(col("gdf") >= lit(saltMinDf))
-          .select(gramKey.map(col) :+ lit(true).as("__hot"): _*)
-        val exS = ex
-          .join(broadcast(hotKeys), gramKey, "left")
-          .withColumn("__salt",
-            when(coalesce(col("__hot"), lit(false)),
-              graft.ops.Skew.salt(b, col("doc"))).otherwise(lit(0)))
-          .drop("__hot")
-        val dfreqS = dfreq
-          .withColumn("__salt",
-            explode(when(col("gdf") >= lit(saltMinDf),
-              sequence(lit(0), lit(b - 1))).otherwise(array(lit(0)))))
-          .withColumn("__salt", col("__salt").cast("int"))
-        exS.hint("shuffle_hash")
-          .join(dfreqS.hint("shuffle_hash"), gramKey :+ "__salt")
-          .drop("__salt")
-      case None =>
-        ex.hint("shuffle_hash").join(dfreq.hint("shuffle_hash"), gramKey)
-    }
-    // hot-key flag for the collision join's opt-in salting; carried
-    // only when salting is on so the unsalted plan stays unchanged
-    val keepHot: Seq[Column] =
-      if (saltBuckets.isDefined)
-        Seq((col("gdf") >= lit(saltMinDf)).as("__hot")) else Nil
-    val pfx = dfAttached
+    val pfx = ex.hint("shuffle_hash").join(dfreq.hint("shuffle_hash"), gramKey)
       .withColumn("rn", row_number().over(rankWin).cast("long"))
       .filter(col("rn") <= col("m") - minOverlap(col("m")) + 1)
       // a corpus-unique gram (df = 1; block-unique when blocked) can
@@ -364,45 +304,25 @@ object Dedup {
       // produce no pairs by definition)
       .filter(col("gdf") >= 2)
       .select(Seq(col("doc")) ++ blk ++
-        Seq(col("m"), col("rn"), col("gram")) ++ keepHot: _*)
+        Seq(col("m"), col("rn"), col("gram")): _*)
       .join(base.select(col("doc"), col("grams")).hint("shuffle_hash"),
         Seq("doc"))
-    // collision self-join inputs: unsalted they are the SAME frame;
-    // salted, the doc_a side keeps one row per prefix gram (hot grams
-    // at a deterministic per-doc salt) while the doc_b side replicates
-    // its HOT rows across all b salts so every (a, b) pair still meets
-    // exactly once, at a's salt — cold grams sit at salt 0 on both
-    // sides and pay nothing
-    val (sideA, sideB, collisionKey) = saltBuckets match {
-      case Some(b) =>
-        val a = pfx.withColumn("__salt",
-          when(col("__hot"), graft.ops.Skew.salt(b, col("doc")))
-            .otherwise(lit(0)))
-        val rep = pfx.withColumn("__salt",
-            explode(when(col("__hot"), sequence(lit(0), lit(b - 1)))
-              .otherwise(array(lit(0)))))
-          .withColumn("__salt", col("__salt").cast("int"))
-        (a, rep, gramKey :+ "__salt")
-      case None => (pfx, pfx, gramKey)
-    }
     def sized(d: DataFrame): DataFrame = collisionPartitions match {
-      case Some(n) => d.repartition(n, collisionKey.map(col): _*)
+      case Some(n) => d.repartition(n, gramKey.map(col): _*)
       case None => d
     }
-    val saltCol: Seq[Column] =
-      if (saltBuckets.isDefined) Seq(col("__salt")) else Nil
-    val collided = sized(sideA)
-      .select(Seq(col("doc").as("doc_a")) ++ blk ++ saltCol ++ Seq(
+    val collided = sized(pfx)
+      .select(Seq(col("doc").as("doc_a")) ++ blk ++ Seq(
         col("m").as("m_a"), col("rn").as("rn_a"), col("gram"),
         col("grams").as("g_a")): _*)
       .hint("shuffle_hash")
       .join(
-        sized(sideB)
-          .select(Seq(col("doc").as("doc_b")) ++ blk ++ saltCol ++ Seq(
+        sized(pfx)
+          .select(Seq(col("doc").as("doc_b")) ++ blk ++ Seq(
             col("m").as("m_b"), col("rn").as("rn_b"), col("gram"),
             col("grams").as("g_b")): _*)
           .hint("shuffle_hash"),
-        collisionKey)
+        gramKey)
       .filter(col("doc_a") < col("doc_b"))
       .filter(least(col("m_a"), col("m_b")) >= pairOverlap(col("m_a"), col("m_b")))
       .filter(lit(1L) +

@@ -1548,12 +1548,11 @@ object LlmQueries extends Q.Registry {
     * member probe (a handful of changed components) that is a few
     * buckets at any scale; for the endpoint probe it bounds the read
     * at |eps|·(store/B) rows — a deployment sizes B to store-rows /
-    * target-bucket-rows (env `SPARK_GRAFT_LABEL_BUCKETS`) so bucket
-    * reads approach point lookups; a keyed upsert table (Delta/Hudi
-    * merge-on-read) is the limit of the same design. The fixture
-    * default (8) keeps the two-trigger bench's file counts sane. */
-  private[graft] val LabelBuckets: Int =
-    sys.env.getOrElse("SPARK_GRAFT_LABEL_BUCKETS", "8").toInt
+    * target-bucket-rows so bucket reads approach point lookups; a
+    * keyed upsert table (Delta/Hudi merge-on-read) is the limit of the
+    * same design. 8 keeps the two-trigger bench's file counts sane;
+    * BenchScale's label_store leg passes its own B per factor. */
+  private[graft] val LabelBuckets: Int = 8
   private def bktOf(c: org.apache.spark.sql.Column,
                     b: Int): org.apache.spark.sql.Column =
     pmod(xxhash64(c), lit(b.toLong)).cast("int")

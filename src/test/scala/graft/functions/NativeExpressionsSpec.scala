@@ -116,6 +116,30 @@ class NativeExpressionsSpec extends SparkSpec {
     new GraftExtensions().apply(ext) // must not throw; wiring is what's under test
   }
 
+  test("register keeps graft's registrations and replaces a foreign function of the same name") {
+    import org.apache.spark.sql.catalyst.FunctionIdentifier
+    import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
+    val registry = spark.sessionState.functionRegistry
+    GraftFunctions.register(spark)
+    val infos = GraftFunctions.builders.map { case (name, cls, _) =>
+      val info = registry.lookupFunction(FunctionIdentifier(name))
+      assert(info.map(_.getClassName) === Some(cls.getName), name)
+      info.get
+    }
+    // a repeat call re-registers nothing
+    GraftFunctions.register(spark)
+    GraftFunctions.builders.zip(infos).foreach { case ((name, _, _), before) =>
+      assert(registry.lookupFunction(FunctionIdentifier(name)).exists(_ eq before),
+        s"$name was registered again")
+    }
+    // a foreign function under a graft name is replaced
+    registry.createOrReplaceTempFunction("t_pvalue",
+      (_: Seq[Expression]) => Literal(42.0), "scala_udf")
+    GraftFunctions.register(spark)
+    val p = spark.sql("SELECT t_pvalue(2.5, 13.7)").as[Double].head()
+    assert(math.abs(p - 0.0257846564713731) < 1e-12)
+  }
+
   test("register and extensions expose the same seven functions (SQL-callable kernels included)") {
     GraftFunctions.register(spark)
     for (name <- Seq("t_pvalue", "chi2_pvalue", "f_pvalue",

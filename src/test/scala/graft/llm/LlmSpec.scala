@@ -39,33 +39,53 @@ class LlmSpec extends SparkSpec {
     }
   }
 
+  /** Planted near-dup pairs under a universal gram: docs 3k and 3k+1
+    * share most grams (true pairs), 3k+2 is noise, and every doc
+    * carries "zz_hot" (df = n, the hottest possible key — the shape a
+    * boilerplate footer gives a real crawl). `blk` alternates by
+    * family. */
+  private def hotGramCorpus(n: Int) =
+    (0 until n).map { i =>
+      val fam = i / 3
+      val grams = i % 3 match {
+        case 0 => Seq(s"a$fam", s"b$fam", s"c$fam", s"d$fam", s"e$fam", "zz_hot")
+        case 1 => Seq(s"a$fam", s"b$fam", s"c$fam", s"d$fam", s"x$i", "zz_hot")
+        case _ => Seq(s"p$i", s"q$i", s"r$i", s"s$i", s"t$i", "zz_hot")
+      }
+      (i.toLong, grams, s"blk${fam % 2}")
+    }.toDF("doc_id", "grams", "blk")
+
   test("prefixFilterPairs ≡ brute-force all-pairs on seeded random corpora (exact-recall property)") {
     // Random small-vocab docs make near-threshold Jaccard values common:
     // the exact-recall claim is exercised right at the boundary, where a
     // too-short prefix or an over-demanding length filter would drop
-    // pairs. Brute force via crossJoin is the semantic spec.
+    // pairs. Brute force via crossJoin is the semantic spec. The
+    // universal-hot-gram corpus pins exact recall when one gram sits in
+    // every document.
     val rnd = new scala.util.Random(9)
     val docs = (1L to 80L).map { id =>
       val n = 2 + rnd.nextInt(10)
       (id, Seq.fill(n)("w" + rnd.nextInt(6)).mkString(" "))
     }
-    for (t <- Seq(0.3, 0.6, 0.9)) {
-      val base = docs.toDF("doc_id", "text")
-        .withColumn("grams",
-          array_distinct(TextOps.wordShingles(TextOps.words($"text"), 2)))
-        .select("doc_id", "grams")
+    val random = docs.toDF("doc_id", "text")
+      .withColumn("grams",
+        array_distinct(TextOps.wordShingles(TextOps.words($"text"), 2)))
+      .select("doc_id", "grams")
+    val inputs = Seq("random" -> random,
+      "universal hot gram" -> hotGramCorpus(90).select("doc_id", "grams"))
+    for ((name, base) <- inputs; t <- Seq(0.3, 0.6, 0.9)) {
       val a = base.select($"doc_id".as("doc_a"), $"grams".as("g_a"))
       val b = base.select($"doc_id".as("doc_b"), $"grams".as("g_b"))
       val want = a.crossJoin(b).filter($"doc_a" < $"doc_b")
         .filter(Dedup.jaccard($"g_a", $"g_b") >= t)
         .select("doc_a", "doc_b").as[(Long, Long)].collect().toSet
-      // tiny docs (m down to 1 gram) are common in this fixture, so
-      // the pigeonhole prefix length, the length filter, and the
+      // tiny docs (m down to 1 gram) are common in the random fixture,
+      // so the pigeonhole prefix length, the length filter, and the
       // positional filter all get exercised at their degenerate edges
       val got = Dedup.prefixFilterPairs(base, "doc_id", "grams", t)
         .select("doc_a", "doc_b").as[(Long, Long)].collect().toSet
-      assert(got === want, s"threshold $t")
-      if (t == 0.6) assert(want.nonEmpty, "fixture must plant boundary pairs")
+      assert(got === want, s"$name, threshold $t")
+      if (t == 0.6) assert(want.nonEmpty, s"$name fixture must plant boundary pairs")
     }
   }
 
@@ -100,6 +120,24 @@ class LlmSpec extends SparkSpec {
       .select("doc_a", "doc_b").as[(Long, Long)].collect().toSet
     assert(want.subsetOf(unblocked) && unblocked.size > want.size,
       s"unblocked ${unblocked.size} vs blocked ${want.size}")
+  }
+
+  test("NULL-block rows are dropped up front and never pair") {
+    def pairs(df: org.apache.spark.sql.DataFrame) =
+      df.orderBy("doc_a", "doc_b").as[(Long, Long, Double)].collect().toSeq
+    val in = hotGramCorpus(12)
+      .withColumn("blk", when($"doc_id" < 2, lit(null: String))
+        .otherwise($"blk"))
+    // docs 0 and 1 are a planted pair, now NULL-blocked: gone
+    val out = pairs(Dedup.prefixFilterPairs(in, "doc_id", "grams", 0.6,
+      blockCols = Seq("blk")))
+    assert(!out.exists(p => p._1 < 2 || p._2 < 2))
+    // and identical whether the engine drops them early (contract) or
+    // the null-unsafe joins would have discarded them late
+    val expected = pairs(Dedup.prefixFilterPairs(
+      in.filter($"blk".isNotNull), "doc_id", "grams", 0.6,
+      blockCols = Seq("blk")))
+    assert(out == expected)
   }
 
   test("prefixFilterPairs finds the cross-band pair dd6-style length blocking misses") {
