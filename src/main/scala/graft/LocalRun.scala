@@ -30,19 +30,32 @@ object LocalRun {
     * `src/test/resources/log4j2.properties`: a deliberate checkpoint
     * release's "lineage has been truncated"; each stream start's
     * AQE-unsupported and temporary-checkpoint notices; each stateful
-    * stream's "Disabling AQE" notice, filtered alone so the logger's
+    * stream's "Disabling AQE" notice; and a stream restarting from its
+    * checkpoint, whose state stores each report that their version is
+    * not in memory yet and that their snapshot files carry no checksum.
+    * The last three are filtered by message alone, so their loggers'
     * other warnings stay. */
   private def quietLogs(): Unit = {
-    val streaming = "org.apache.spark.sql.execution.streaming.runtime"
+    val streaming = "org.apache.spark.sql.execution.streaming"
     Configurator.setLevel("org.apache.spark.rdd.MapPartitionsRDD", Level.ERROR)
-    Configurator.setLevel(s"$streaming.ResolveWriteToStream", Level.ERROR)
-    // its own logger config, so the filter stays scoped; level inherited
-    Configurator.setLevel(s"$streaming.MicroBatchExecution", null: Level)
-    val microBatch = LoggerContext.getContext(false).getConfiguration
-      .getLoggerConfig(s"$streaming.MicroBatchExecution")
-    if (!microBatch.hasFilter) microBatch.addFilter(RegexFilter.createFilter(
-      "Disabling AQE since AQE is not supported in stateful workloads.*",
-      null, false, Filter.Result.DENY, Filter.Result.NEUTRAL))
+    Configurator.setLevel(s"$streaming.runtime.ResolveWriteToStream", Level.ERROR)
+    denyMessage(s"$streaming.runtime.MicroBatchExecution",
+      "Disabling AQE since AQE is not supported in stateful workloads.*")
+    // each provider logs under its class name plus its store id, a
+    // name no logger config can match, so the filter sits on the package
+    denyMessage(s"$streaming.state",
+      "The state for version \\d+ doesn't exist in loadedMaps\\..*")
+    denyMessage(s"$streaming.checkpointing.ChecksumCheckpointFileManager",
+      "No checksum file found for .*, hence no checksum verification\\.")
+  }
+
+  /** Drops `logger`'s messages matching `regex` (whole message), in a
+    * logger config of its own so the filter stays scoped; level inherited. */
+  private def denyMessage(logger: String, regex: String): Unit = {
+    Configurator.setLevel(logger, null: Level)
+    val config = LoggerContext.getContext(false).getConfiguration.getLoggerConfig(logger)
+    if (!config.hasFilter) config.addFilter(RegexFilter.createFilter(
+      regex, null, false, Filter.Result.DENY, Filter.Result.NEUTRAL))
   }
 
   /** State partitions of every stateful streaming operator on a

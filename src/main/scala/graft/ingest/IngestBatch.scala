@@ -17,7 +17,7 @@ import graft.ops.Derive
   * (P8), dim dedup etl_job.py:101 (A8), anti-join upsert
   * etl_job.py:121-122 (J4), lenient cast 01:65 (P5).
   *
-  * Scale posture: validation reads only the schema (no job); the
+  * Scale posture: validation reads only the inferred schema; the
   * pipeline is map-side until the dedup/anti-join shuffles on the key.
   */
 object IngestBatch {
@@ -37,7 +37,28 @@ object IngestBatch {
   def parseJson(spark: SparkSession, records: Dataset[String]): DataFrame =
     spark.read.json(records)
 
-  /** F7: raise on an empty extract. `head(1)` not `count()` — one task. */
+  /** The tick's snapshot columns: every `RequiredInfo` key and the
+    * status keys after `sno`. */
+  val RequiredSnapshot: Seq[String] = RequiredInfo ++ RequiredStatus.drop(1)
+
+  /** Parse and guard, for every ingest path (EtlJob, ing1).
+    * `spark.read.json`'s inference job is the schema check, and it sets
+    * the types the lenient casts see. Only a batch that inferred no
+    * field, which is either empty or all `{}` records, runs the
+    * [[requireNonEmpty]] job; so an empty batch raises
+    * [[EmptyBatchException]], a batch of fieldless records
+    * [[MissingColumnsException]], and any other batch is checked from
+    * its schema alone. */
+  def parseSnapshot(spark: SparkSession, records: Dataset[String], what: String): DataFrame = {
+    val raw = parseJson(spark, records)
+    if (raw.schema.isEmpty) requireNonEmpty(raw, what)
+    validate(raw, RequiredSnapshot)
+  }
+
+  /** F7: raise on an empty extract. An eager Spark job of its own:
+    * `head(1)` re-parses the batch, and on an empty one its limit scan
+    * widens over every partition, so it may take more than one job.
+    * [[parseSnapshot]] runs it only when inference found no field. */
   def requireNonEmpty(df: DataFrame, what: String): DataFrame = {
     if (df.head(1).isEmpty) throw EmptyBatchException(s"empty extract: $what")
     df
@@ -65,10 +86,9 @@ object IngestBatch {
   def lenientInt(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
     c.try_cast("int")
 
-  /** Transform stage (etl_job.py:83-111): returns (dim, fact). */
+  /** Transform stage (etl_job.py:99-111) of a [[parseSnapshot]] frame:
+    * returns (dim, fact). */
   def transform(raw: DataFrame): (DataFrame, DataFrame) = {
-    requireNonEmpty(raw, "station snapshot")
-    validate(raw, RequiredInfo ++ RequiredStatus.drop(1))
     val dim = raw
       .select(
         col("sno").cast("string").as("station_no"),

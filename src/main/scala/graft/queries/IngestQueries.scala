@@ -153,9 +153,7 @@ object IngestQueries extends Q.Registry {
           date_format(from_utc_timestamp(col("record_time"), "Asia/Taipei"),
             "yyyy-MM-dd HH:mm:ss.SSSSSS").as("srcUpdateTime"),
           col("event_id"))).as("json")).as[String]
-        val raw = IngestBatch.parseJson(s, records)
-        IngestBatch.validate(raw, IngestBatch.RequiredInfo ++ IngestBatch.RequiredStatus.drop(1))
-        IngestBatch.requireNonEmpty(raw, "events snapshot")
+        val raw = IngestBatch.parseSnapshot(s, records, "events snapshot")
         val renamed = IngestBatch.renameByMap(raw, Map(
           "sno" -> "station_no", "sna" -> "name_tw", "sarea" -> "district",
           "srcUpdateTime" -> "record_time_tpe"))

@@ -84,7 +84,10 @@ object MicroBatchIngest {
 
   /** Full sink wiring: watermark dedup, then per-micro-batch dim
     * upsert + fact append through user callbacks (the JDBC/parquet
-    * writes stay pluggable — tests use in-memory collectors). */
+    * writes stay pluggable — tests use in-memory collectors). Dims go
+    * first, as in the reference (etl_job.py:125, then :129-132): a
+    * fact's `station_no` references `station_info`
+    * (sql/init_schema.sql:18-19). */
   def writer(facts: DataFrame,
              appendFacts: DataFrame => Unit,
              upsertDims: DataFrame => Unit,
@@ -97,9 +100,7 @@ object MicroBatchIngest {
       .outputMode("append")
       .trigger(Trigger.ProcessingTime(triggerInterval))
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        upsertDims(IngestBatch.newDimsOnly(dims(batchId), existingDims(), "station_no"))
         appendFacts(batch)
-        val newDims = IngestBatch.newDimsOnly(dims(batchId), existingDims(), "station_no")
-        upsertDims(newDims)
-        ()
       }
 }

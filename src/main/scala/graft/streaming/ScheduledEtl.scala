@@ -10,7 +10,7 @@ import graft.ingest.EtlJob
   * dags/youbike_dag.py:135 — recast as a Structured Streaming
   * scheduler: a tick stream under `Trigger.ProcessingTime` fires one
   * full [[EtlJob.runOnce]] (Retry-wrapped extract → parse → transform
-  * → within-batch dedup → insert-only dim upsert → sinks) per trigger.
+  * → insert-only dim upsert → within-batch dedup → sinks) per trigger.
   *
   * Compared to the hand-rolled sleep loop this inherits the engine's
   * driver machinery for free: trigger pacing, checkpointed batch ids,

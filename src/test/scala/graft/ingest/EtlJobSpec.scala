@@ -1,6 +1,11 @@
 package graft.ingest
 
-import org.apache.spark.sql.DataFrame
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.graftbridge.ListenerBridge
+import org.scalatest.concurrent.{Signaler, ThreadSignaler, TimeLimits}
+import org.scalatest.time.{Seconds, Span}
 
 import graft.SparkSpec
 
@@ -8,7 +13,7 @@ import graft.SparkSpec
   * reference's pytest coverage of transform_data plus the load-side
   * behaviors its service loop adds (tests/test_etl.py:18-57,
   * etl_job.py:64-132). */
-class EtlJobSpec extends SparkSpec {
+class EtlJobSpec extends SparkSpec with TimeLimits {
   import spark.implicits._
 
   private def record(sno: String, q: String = "30", t: String = "2025-12-10 15:00:00") =
@@ -63,6 +68,55 @@ class EtlJobSpec extends SparkSpec {
         sink.sinks, backoffMs = 1)
     }
     assert(sink.facts.isEmpty && sink.dims.isEmpty)
+  }
+
+  test("runOnce: dims load before facts, so a foreign-key warehouse accepts a new station's first facts") {
+    val sink = new MemSink
+    // station_status.station_no references station_info (sql/init_schema.sql:18-19)
+    val fkSinks = sink.sinks.copy(appendFacts = b => {
+      val orphans = b.select("station_no").as[String].collect().filterNot(sink.dims.contains)
+      if (orphans.nonEmpty)
+        throw new IllegalStateException(s"facts for unknown stations: ${orphans.mkString(", ")}")
+      sink.sinks.appendFacts(b)
+    })
+    val r = EtlJob.runOnce(spark, () => Seq(record("s1"), record("s2")).toDS(), fkSinks)
+    assert(r === EtlJob.BatchResult(2, 2))
+    assert(sink.facts.map(_._1).sorted === Seq("s1", "s2"))
+  }
+
+  test("runOnce: a warm tick runs at most 6 Spark jobs with in-memory sinks") {
+    val sink = new MemSink
+    EtlJob.runOnce(spark, () => Seq(record("s1"), record("s2")).toDS(), sink.sinks)
+    val jobs = new AtomicInteger(0)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
+    }
+    ListenerBridge.drain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      // s1 known, s3 new, one replayed fact: every pass of the tick runs
+      val r = EtlJob.runOnce(spark, () => Seq(record("s1", t = "2025-12-10 15:10:00"),
+        record("s1", t = "2025-12-10 15:10:00"), record("s3")).toDS(), sink.sinks)
+      assert(r === EtlJob.BatchResult(2, 1))
+      ListenerBridge.drain(spark.sparkContext)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    // inference 1; new dims 3 (broadcast of the existing keys, dedup
+    // shuffle map, result); facts 2 (dedup shuffle map, result). The
+    // local dim frame the sink collects runs no job.
+    assert(jobs.get <= 6, s"jobs in a warm tick: ${jobs.get}")
+  }
+
+  test("runOnce: a sink that never runs its facts frame fails the tick, in bounded time") {
+    implicit val signaler: Signaler = ThreadSignaler
+    val sink = new MemSink
+    val e = failAfter(Span(30, Seconds)) {
+      intercept[EtlJob.FactsNotWrittenException] {
+        EtlJob.runOnce(spark, () => Seq(record("s1")).toDS(),
+          sink.sinks.copy(appendFacts = _ => ()))
+      }
+    }
+    assert(e.getMessage.contains("appendFacts"))
+    assert(sink.facts.isEmpty)
   }
 
   test("runOnce: malformed Quantity is null (lenient cast), not a job failure") {

@@ -28,6 +28,14 @@ class IngestBatchSpec extends SparkSpec {
     assert(e.missing.toSet === Set("sarea", "latitude", "longitude", "Quantity"))
   }
 
+  test("parseSnapshot: an empty batch is empty, a batch of {} records is missing columns") {
+    intercept[IngestBatch.EmptyBatchException](
+      IngestBatch.parseSnapshot(spark, spark.emptyDataset[String], "snapshot"))
+    val e = intercept[IngestBatch.MissingColumnsException](
+      IngestBatch.parseSnapshot(spark, Seq("{}", "{}").toDS(), "snapshot"))
+    assert(e.missing === IngestBatch.RequiredSnapshot)
+  }
+
   test("one-row fixture transforms to exact dim+fact shapes (test_etl.py:31-57)") {
     val raw = IngestBatch.parseJson(spark, fixtureJson.toDS())
     val (dim, fact) = IngestBatch.transform(raw)

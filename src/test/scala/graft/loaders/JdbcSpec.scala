@@ -89,6 +89,28 @@ class JdbcSpec extends SparkSpec {
     assert(scan.select("id").as[Long].collect().toSet === (91L to 97L).toSet)
   }
 
+  test("EtlJob ticks into a JDBC warehouse: dims before facts, counts from the writes") {
+    def record(sno: String, t: String) =
+      s"""{"sno":"$sno","sna":"n$sno","sarea":"d1","latitude":25.04,"longitude":121.52,
+         |"Quantity":30,"available_rent_bikes":5,"available_return_bikes":25,
+         |"srcUpdateTime":"$t"}""".stripMargin.replace("\n", "")
+    var dimsCreated = false
+    val sinks = graft.ingest.EtlJob.Sinks(
+      appendFacts = Readers.appendJdbc(_, url, "etl_status", props),
+      insertDims = df => { Readers.appendJdbc(df, url, "etl_info", props); dimsCreated = true },
+      existingDimKeys = () =>
+        if (dimsCreated) Readers.readJdbc(spark, url, "etl_info", props)
+        else Seq.empty[String].toDF("station_no"))
+    def tick(rows: String*) = graft.ingest.EtlJob.runOnce(spark, () => rows.toDS(), sinks)
+    assert(tick(record("s1", "2025-12-10 15:00:00"), record("s1", "2025-12-10 15:00:00"),
+      record("s2", "2025-12-10 15:00:00")) === graft.ingest.EtlJob.BatchResult(2, 2))
+    assert(tick(record("s1", "2025-12-10 15:10:00"), record("s3", "2025-12-10 15:10:00")) ===
+      graft.ingest.EtlJob.BatchResult(2, 1))
+    assert(Readers.readJdbc(spark, url, "etl_status", props).count() === 4)
+    assert(Readers.readJdbc(spark, url, "etl_info", props)
+      .select("station_no").as[String].collect().sorted.toSeq === Seq("s1", "s2", "s3"))
+  }
+
   test("S3 dedup-set scan shape: select one column from the warehouse (etl_job.py:120-121)") {
     // own table — not coupled to the round-trip test's station_info
     Readers.appendJdbc(

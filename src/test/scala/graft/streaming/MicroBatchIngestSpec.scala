@@ -29,18 +29,21 @@ class MicroBatchIngestSpec extends SparkSpec {
     val q = MicroBatchIngest.writer(
       input.toDF(),
       appendFacts = b => collected.synchronized {
-        collected ++= b.select("station_no", "record_time")
-          .as[(String, Timestamp)].collect()
+        val rows = b.select("station_no", "record_time").as[(String, Timestamp)].collect()
+        // station_status.station_no references station_info: the
+        // batch's new dims must already be upserted
+        val orphans = rows.map(_._1).filterNot(dimLog.synchronized(existing).contains)
+        assert(orphans.isEmpty, s"facts for unknown stations: ${orphans.mkString(", ")}")
+        collected ++= rows
       },
       upsertDims = b => dimLog.synchronized {
         val ids = b.select("station_no").as[String].collect()
         dimLog ++= ids
         existing = existing ++ ids
       },
-      dims = _ => collected.synchronized {
-        collected.map(_._1).distinct.toSeq.toDF("station_no")
-      },
-      existingDims = () => existing.toDF("station_no"),
+      // the station registry (the reference's station-info source)
+      dims = _ => Seq("s1", "s2").toDF("station_no"),
+      existingDims = () => dimLog.synchronized(existing).toDF("station_no"),
       triggerInterval = "0 seconds")
       .option("checkpointLocation",
         java.nio.file.Files.createTempDirectory("graft-stream-ckpt").toString)
