@@ -255,7 +255,7 @@ object BenchScale {
 
   /** The dd3 verified-pairs core (k=9 sigs, 3 bands × 3, Jaccard ≥ 0.6
     * on distinct 3-shingles) on an arbitrary (doc_id, text) frame —
-    * the SAME shape LlmQueries.verifiedPairs ships: cache ONLY the
+    * the SAME shape DedupQueries.verifiedPairsShared ships: cache ONLY the
     * banded frame (doc_id + band keys, a few dozen bytes/doc) and
     * recompute shingle sets per set-join arm. Caching sh_set alongside
     * would both diverge from the measured query and pin a ~GB-sized
@@ -720,15 +720,6 @@ object BenchScale {
         // linear shapes (one row per TOKEN)
         val out = Dedup.duplicateSpans(inflateDocuments(documents, f),
           "doc_id", "text", k = 8)
-        out.agg(count(lit(1)), sum("n_removed_tokens"),
-          sum(length(col("clean_text")))).head().getLong(0)
-      }, Linear),
-      ("tx_substr_hash", (f: Int) => {
-        // the hashGrams scale path: identical output (spec-pinned),
-        // gram shuffles carry a 60-bit key instead of ~8-word text —
-        // the leg pair quantifies what the hashing buys at volume
-        val out = Dedup.duplicateSpans(inflateDocuments(documents, f),
-          "doc_id", "text", k = 8, hashGrams = true)
         out.agg(count(lit(1)), sum("n_removed_tokens"),
           sum(length(col("clean_text")))).head().getLong(0)
       }, Linear),
@@ -1349,7 +1340,7 @@ object BenchScale {
             (col("id") - pmod(col("id"), lit(3))).as("group_id"))
           val root = java.nio.file.Files.createTempDirectory(s"graft-labels-$f")
           try {
-            queries.LlmQueries.writeLabelDirs(session, labels, root, "base", bF)
+            queries.CorpusStreamQueries.writeLabelDirs(session, labels, root, "base", bF)
             val docDir = root.resolve("base").toString
             val grpDir = root.resolve("baseByGrp").toString
             val totalBytes = parquetBytes(root.resolve("base").toFile)
@@ -1359,7 +1350,7 @@ object BenchScale {
                       pr: org.apache.spark.sql.DataFrame,
                       expectRows: Long): (Double, Long, Long) = {
               val t0 = System.nanoTime()
-              val resolved = queries.LlmQueries.resolvedLabelsFor(
+              val resolved = queries.CorpusStreamQueries.resolvedLabelsFor(
                 session, paths, pCol, bCol, pr, bF)
               val n = resolved.collect().length.toLong
               val sec = (System.nanoTime() - t0) / 1e9

@@ -30,11 +30,12 @@ object LocalRun {
     * `src/test/resources/log4j2.properties`: a deliberate checkpoint
     * release's "lineage has been truncated"; each stream start's
     * AQE-unsupported and temporary-checkpoint notices; each stateful
-    * stream's "Disabling AQE" notice; and a stream restarting from its
+    * stream's "Disabling AQE" notice; a stream restarting from its
     * checkpoint, whose state stores each report that their version is
-    * not in memory yet and that their snapshot files carry no checksum.
-    * The last three are filtered by message alone, so their loggers'
-    * other warnings stay. */
+    * not in memory yet and that their snapshot files carry no checksum;
+    * and each stream stop's "Failed to cancel job group" when none of
+    * the stream's jobs is running. The last four are filtered by
+    * message alone, so their loggers' other warnings stay. */
   private def quietLogs(): Unit = {
     val streaming = "org.apache.spark.sql.execution.streaming"
     Configurator.setLevel("org.apache.spark.rdd.MapPartitionsRDD", Level.ERROR)
@@ -47,6 +48,8 @@ object LocalRun {
       "The state for version \\d+ doesn't exist in loadedMaps\\..*")
     denyMessage(s"$streaming.checkpointing.ChecksumCheckpointFileManager",
       "No checksum file found for .*, hence no checksum verification\\.")
+    denyMessage("org.apache.spark.scheduler.DAGScheduler",
+      "Failed to cancel job group .*\\. Cannot find active jobs for it\\.")
   }
 
   /** Drops `logger`'s messages matching `regex` (whole message), in a

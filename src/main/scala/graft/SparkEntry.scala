@@ -11,11 +11,25 @@ import graft.queries._
   */
 object SparkEntry {
 
+  /** Each registry reads only those listed before it (and the shared
+    * [[Corpus]], which reads none), the order they initialize in: an
+    * object reading a val of one still initializing sees `null`. Bench,
+    * Profile and Verify key or sort by name, so order changes nothing. */
   def registries: Seq[Q.Registry] = Seq(
-    RelationalQueries, WindowQueries, StatsQueries, MlQueries, LlmQueries,
-    IngestQueries)
+    RelationalQueries, WindowQueries, StatsQueries, IngestQueries, MlQueries,
+    SketchQueries, SearchQueries, MultimodalQueries, TextQueries,
+    DedupQueries, CorpusStreamQueries, LlmQueries)
 
-  def allQueries: Seq[Q] = registries.flatMap(_.all)
+  def allQueries: Seq[Q] = requireUniqueNames(registries.flatMap(_.all))
+
+  /** `qs`, failing on any name registered twice: [[queries]] keys a
+    * Map by name, which would silently drop all but one. */
+  private[graft] def requireUniqueNames(qs: Seq[Q]): Seq[Q] = {
+    val dups = qs.groupBy(_.name).collect { case (n, g) if g.size > 1 => n }
+    require(dups.isEmpty,
+      s"query names registered more than once: ${dups.toSeq.sorted.mkString(", ")}")
+    qs
+  }
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =

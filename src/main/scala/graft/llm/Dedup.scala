@@ -201,13 +201,12 @@ object Dedup {
     * and the naive ceil would over-demand the overlap; the 1e-9 nudge
     * is dwarfed by the >= 1/m spacing of true thresholds.
     *
-    * Grams travel as 64-bit xxhash64 hashes end to end (the tx16
-    * hashGrams move — ~8× less shuffle volume than string grams; a
-    * collision would merge two grams corpus-wide, probability
-    * ~vocab²/2^64, and the brute-force STRING oracle hash-check is
-    * the proof none occurred). The overlap count feeds
-    * J = c / (m_a + m_b - c) — by inclusion-exclusion over distinct
-    * sets, bit-identical to intersect-size / union-size doubles.
+    * Grams travel as 64-bit xxhash64 hashes end to end (~8× less
+    * shuffle volume than string grams; a collision would merge two
+    * grams corpus-wide, probability ~vocab²/2^64, and the brute-force
+    * STRING oracle hash-check is the proof none occurred). The overlap
+    * count feeds J = c / (m_a + m_b - c) — by inclusion-exclusion over
+    * distinct sets, bit-identical to intersect-size / union-size doubles.
     *
     * `stats`, when supplied, observes `candidate_rows` (collision
     * rows surviving the scalar filters = kernel evaluations) on the
@@ -846,18 +845,11 @@ object Dedup {
     * Returns (idCol, n_tokens, n_removed_tokens, clean_text);
     * `clean_text` is NULL when every token was covered.
     *
-    * `hashGrams = true` is the 100 TB path (and what Lee et al.'s own
-    * tool does): the two gram-keyed shuffles carry a 60-bit md5 prefix
-    * instead of the ~k-word gram TEXT — ~8x less shuffle volume for an
-    * 8-word gram. A hash collision can only ADD a false duplicate flag
-    * (never lose one); at 60 bits the corpus-wide expected collision
-    * count stays ≪ 1 far past 10^8 grams. The exact-text form is the
-    * executable spec (the tx16 oracle replays it); LlmSpec pins
-    * hashed ≡ exact. */
-  def duplicateSpans(docs: DataFrame, idCol: String, textCol: String,
-                     k: Int, hashGrams: Boolean = false): DataFrame = {
+    * Grams are keyed by their TEXT, so no two grams can collide; the
+    * tx16 oracle replays exactly this form. */
+  def duplicateSpans(docs: DataFrame, idCol: String, textCol: String, k: Int): DataFrame = {
     require(k >= 2, s"span length k must be >= 2, got $k")
-    val (tokens, grams) = tokenAndGramStreams(docs, idCol, textCol, k, hashGrams)
+    val (tokens, grams) = tokenAndGramStreams(docs, idCol, textCol, k)
     // duplicated-start flags in ONE gram-keyed shuffle: a count window
     // over the gram partition replaces the old groupBy-then-left-semi
     // pair, which exchanged the gram stream TWICE (once near-distinct
@@ -876,22 +868,16 @@ object Dedup {
 
   /** The positioned token and k-gram streams [[duplicateSpans]] and its
     * incremental form share: tokens are (id, __tpos, __token), grams
-    * are (id, __gpos, __gram) with `__gram` either the span text or
-    * its 60-bit md5 key (`hashGrams`). */
+    * are (id, __gpos, __gram) with `__gram` the span text. */
   private def tokenAndGramStreams(docs: DataFrame, idCol: String,
-                                  textCol: String, k: Int, hashGrams: Boolean)
-      : (DataFrame, DataFrame) = {
+                                  textCol: String, k: Int): (DataFrame, DataFrame) = {
     val toks = docs.select(col(idCol),
       graft.llm.TextOps.words(col(textCol)).as("__ws"))
     val tokens = toks.select(col(idCol),
       posexplode(col("__ws")).as(Seq("__tpos", "__token")))
-    val gramKey: Column => Column =
-      if (hashGrams) g => conv(substring(md5(g), 1, 15), 16, 10).cast("long")
-      else identity
     val grams = toks.select(col(idCol),
       posexplode(graft.llm.TextOps.wordShingles(col("__ws"), k))
-        .as(Seq("__gpos", "__gram0")))
-      .select(col(idCol), col("__gpos"), gramKey(col("__gram0")).as("__gram"))
+        .as(Seq("__gpos", "__gram")))
     (tokens, grams)
   }
 
@@ -963,10 +949,9 @@ object Dedup {
     * in the docs that carry it (the dd2 hot-band caveat): at scale run
     * line/boilerplate removal first or salt the hot grams — the same
     * discipline as the LSH band join. */
-  def sharedSpanPairs(docs: DataFrame, idCol: String, textCol: String,
-                      k: Int, hashGrams: Boolean = false): DataFrame = {
+  def sharedSpanPairs(docs: DataFrame, idCol: String, textCol: String, k: Int): DataFrame = {
     require(k >= 2, s"span length k must be >= 2, got $k")
-    val (_, grams) = tokenAndGramStreams(docs, idCol, textCol, k, hashGrams)
+    val (_, grams) = tokenAndGramStreams(docs, idCol, textCol, k)
     val w = org.apache.spark.sql.expressions.Window.partitionBy(col("__gram"))
     val dup = grams
       .withColumn("__n", count(lit(1)).over(w))
@@ -986,10 +971,9 @@ object Dedup {
     * is run exactly this way in production: the suffix-array/gram
     * index is built once and advanced per crawl batch, not rebuilt
     * from all history). Schema (__gram, __n). */
-  def gramCounts(docs: DataFrame, idCol: String, textCol: String,
-                 k: Int, hashGrams: Boolean = false): DataFrame = {
+  def gramCounts(docs: DataFrame, idCol: String, textCol: String, k: Int): DataFrame = {
     require(k >= 2, s"span length k must be >= 2, got $k")
-    tokenAndGramStreams(docs, idCol, textCol, k, hashGrams)._2
+    tokenAndGramStreams(docs, idCol, textCol, k)._2
       .groupBy("__gram").agg(count(lit(1)).as("__n"))
   }
 
@@ -1011,10 +995,9 @@ object Dedup {
     * table note). Advance the table with [[advanceGramCounts]] after
     * each batch. */
   def duplicateSpansIncremental(gramTable: DataFrame, batch: DataFrame,
-                                idCol: String, textCol: String,
-                                k: Int, hashGrams: Boolean = false): DataFrame = {
+                                idCol: String, textCol: String, k: Int): DataFrame = {
     require(k >= 2, s"span length k must be >= 2, got $k")
-    val (tokens, grams) = tokenAndGramStreams(batch, idCol, textCol, k, hashGrams)
+    val (tokens, grams) = tokenAndGramStreams(batch, idCol, textCol, k)
     val dupGrams = grams.groupBy("__gram").agg(count(lit(1)).as("__bn"))
       .join(gramTable.hint("shuffle_hash"), Seq("__gram"), "left")
       .filter(col("__bn") + coalesce(col("__n"), lit(0L)) >= 2)
@@ -1027,9 +1010,8 @@ object Dedup {
     * on the gram; with the table bucketed by `__gram` this is the
     * standard merge-into shape. */
   def advanceGramCounts(gramTable: DataFrame, batch: DataFrame,
-                        idCol: String, textCol: String,
-                        k: Int, hashGrams: Boolean = false): DataFrame =
-    gramTable.unionByName(gramCounts(batch, idCol, textCol, k, hashGrams))
+                        idCol: String, textCol: String, k: Int): DataFrame =
+    gramTable.unionByName(gramCounts(batch, idCol, textCol, k))
       .groupBy("__gram").agg(sum("__n").as("__n"))
 
   /** C4's cross-page dedup rule (Raffel et al. 2020 §2.2: "we

@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
   * any shuffle, so staying inside WholeStageCodegen is the whole game.
   *
   * Mirrors of each formula exist in the DuckDB oracles
-  * (LlmQueries) — operation order is kept bit-identical.
+  * (TextQueries, LlmQueries) — operation order is kept bit-identical.
   */
 object TextOps {
 
@@ -276,7 +276,7 @@ object TextOps {
   /** Polynomial rolling hash over the document's characters, mod a
     * 31-bit prime: fold(0, chars)((acc, c) => (acc*31 + ascii(c)) mod p).
     * Order-sensitive → a true content fingerprint, and expressible
-    * bit-identically in SQL (LlmQueries mirrors it). */
+    * bit-identically in SQL (TextQueries mirrors it). */
   val FingerprintMod = 1000000007L
   def fingerprint(text: Column): Column =
     aggregate(

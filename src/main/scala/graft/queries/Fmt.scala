@@ -26,12 +26,8 @@ object Fmt {
   }
 
   def t6(c: Column): Column = trunc(c, 6)
-  def t4(c: Column): Column = trunc(c, 4)
-  def t3(c: Column): Column = trunc(c, 3)
 
   /** DuckDB-side mirror of [[trunc]]. */
   def sql(e: String, scale: Int): String = s"floor(($e) * 1e$scale + 1e-6) / 1e$scale"
   def sql6(e: String): String = sql(e, 6)
-  def sql4(e: String): String = sql(e, 4)
-  def sql3(e: String): String = sql(e, 3)
 }

@@ -16,6 +16,26 @@ import graft.ops.Derive
 object IngestQueries extends Q.Registry {
   import RelationalQueries.enrSql
 
+  /** Stage DataFrames as single parquet files with pinned, strictly
+    * increasing mod-times under a fresh temp dir: with
+    * `maxFilesPerTrigger=1` the file source takes one per micro-batch,
+    * oldest first — a REAL multi-trigger arrival replay, not a
+    * simulation (st7/st8). Returns (stageRoot, inDir); callers clean
+    * both up via LocalRun.deleteRecursively once the stream is done. */
+  private[queries] def stageArrivalDays(days: Seq[org.apache.spark.sql.DataFrame],
+                                        prefix: String)
+      : (java.nio.file.Path, java.nio.file.Path) = {
+    val stage = java.nio.file.Files.createTempDirectory(prefix)
+    val inDir = java.nio.file.Files.createDirectories(stage.resolve("in"))
+    days.zipWithIndex.foreach { case (df, i) =>
+      val dest = inDir.resolve(s"day${i + 1}.parquet")
+      graft.LocalRun.writeSingleParquet(df, dest)
+      java.nio.file.Files.setLastModifiedTime(dest,
+        java.nio.file.attribute.FileTime.fromMillis(1700000000000L + i * 60000L))
+    }
+    (stage, inDir)
+  }
+
   /** Bounded file stream over ONE table of the sf dir (the file source
     * wants a directory; the glob filter narrows it): schema probe +
     * read-conf guard in one place for every table any stream query
@@ -379,7 +399,7 @@ object IngestQueries extends Q.Registry {
         val day3 = s.range(1).select(lit(-1L).as("user_id"),
           timestamp_micros(lit(hi + 30L * 24 * 3600 * 1000000L)).as("ts"),
           lit("flush").as("event_type"))
-        val (stage, inDir) = LlmQueries.stageArrivalDays(
+        val (stage, inDir) = stageArrivalDays(
           Seq(day1, day2, day3), "graft_st10_")
         val agg = s.readStream.schema(day1.schema)
           .option("maxFilesPerTrigger", 1).parquet(inDir.toString)
@@ -448,7 +468,7 @@ object IngestQueries extends Q.Registry {
         val cutUs = mm.getLong(0) + (mm.getLong(1) - mm.getLong(0)) / 2
         val day1 = ev.filter(unix_micros(col("ts")) <= cutUs)
         val day2 = ev.filter(unix_micros(col("ts")) > cutUs)
-        val (stage, inDir) = LlmQueries.stageArrivalDays(
+        val (stage, inDir) = stageArrivalDays(
           Seq(day1, day2), "graft_st13_")
         val src = s.readStream.schema(day1.schema)
           .option("maxFilesPerTrigger", 1).parquet(inDir.toString)
@@ -498,7 +518,7 @@ object IngestQueries extends Q.Registry {
         def sentinel(us: Long) = s.range(1).select(
           lit(-777L).as("user_id"), timestamp_micros(lit(us)).as("ts"),
           lit("noise").as("event_type"))
-        val (stage, inDir) = LlmQueries.stageArrivalDays(
+        val (stage, inDir) = stageArrivalDays(
           Seq(ev.filter(unix_micros(col("ts")) > cutUs),   // day 2 FIRST
             ev.filter(unix_micros(col("ts")) <= cutUs),    // then day 1
             sentinel(sent1Us),  // advances the watermark past hi

@@ -71,9 +71,8 @@ object SubstrDedupStream {
   /** Write the initial gram-count index (`v0`) from the already-
     * ingested corpus. Run once, before the stream starts. */
   def initGramTable(spark: SparkSession, tableDir: String, corpus: DataFrame,
-                    idCol: String, textCol: String, k: Int,
-                    hashGrams: Boolean = false): Unit =
-    Dedup.gramCounts(corpus, idCol, textCol, k, hashGrams)
+                    idCol: String, textCol: String, k: Int): Unit =
+    Dedup.gramCounts(corpus, idCol, textCol, k)
       .write.mode("overwrite").parquet(versionDir(tableDir, 0L))
 
   /** The gram-table snapshot batch `batchId` must clean against. */
@@ -83,28 +82,25 @@ object SubstrDedupStream {
   /** Idempotent emit: clean `batch` against the batch's table version
     * and (over)write `<outDir>/batch=<batchId>`. */
   def emit(spark: SparkSession, tableDir: String, outDir: String,
-           batch: DataFrame, batchId: Long, idCol: String, textCol: String,
-           k: Int, hashGrams: Boolean = false): Unit =
+           batch: DataFrame, batchId: Long, idCol: String, textCol: String, k: Int): Unit =
     Dedup.duplicateSpansIncremental(tableFor(spark, tableDir, batchId),
-        batch, idCol, textCol, k, hashGrams)
+        batch, idCol, textCol, k)
       .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
 
   /** Idempotent advance: fold the batch's gram counts into version
     * `batchId` and (over)write version `batchId + 1`. */
   def advance(spark: SparkSession, tableDir: String, batch: DataFrame,
-              batchId: Long, idCol: String, textCol: String, k: Int,
-              hashGrams: Boolean = false): Unit =
+              batchId: Long, idCol: String, textCol: String, k: Int): Unit =
     Dedup.advanceGramCounts(tableFor(spark, tableDir, batchId),
-        batch, idCol, textCol, k, hashGrams)
+        batch, idCol, textCol, k)
       .write.mode("overwrite").parquet(versionDir(tableDir, batchId + 1L))
 
   /** The per-micro-batch body: emit, then advance. Pass this from
     * `foreachBatch`; replays of either crash window converge (see
     * object doc). */
   def step(spark: SparkSession, tableDir: String, outDir: String,
-           batch: DataFrame, batchId: Long, idCol: String, textCol: String,
-           k: Int, hashGrams: Boolean = false): Unit = {
-    emit(spark, tableDir, outDir, batch, batchId, idCol, textCol, k, hashGrams)
-    advance(spark, tableDir, batch, batchId, idCol, textCol, k, hashGrams)
+           batch: DataFrame, batchId: Long, idCol: String, textCol: String, k: Int): Unit = {
+    emit(spark, tableDir, outDir, batch, batchId, idCol, textCol, k)
+    advance(spark, tableDir, batch, batchId, idCol, textCol, k)
   }
 }

@@ -542,8 +542,8 @@ class LlmSpec extends SparkSpec {
     "depth meets the recall target on the planner's own workload sample " +
     "end-to-end (r14 ask #5)") {
     val d = "/root/testdata/sf0.001"
-    val planned = graft.queries.LlmQueries.plannedShortlist(spark, d)
-    val k = graft.queries.LlmQueries.PlannedK
+    val planned = graft.queries.SearchQueries.plannedShortlist(spark, d)
+    val k = graft.queries.SearchQueries.PlannedK
     assert(planned >= k, s"planned depth $planned below k=$k")
     // the registered query's physical plan carries the planned depth
     // as the coarse rank bound — the literal the verdict asked to pin
@@ -559,7 +559,7 @@ class LlmSpec extends SparkSpec {
       .select(col("vec_id").as("q_id"), col("embedding").as("q_vec"))
     val sample = workload
       .withColumn("__h", md5(col("q_id").cast("string")))
-      .orderBy("__h").limit(graft.queries.LlmQueries.PlannedSampleN)
+      .orderBy("__h").limit(graft.queries.SearchQueries.PlannedSampleN)
       .select("q_id", "q_vec")
     val exact = Similarity.bruteForceTopK(emb, "vec_id", "embedding",
         sample, "q_id", "q_vec", k)
@@ -568,7 +568,7 @@ class LlmSpec extends SparkSpec {
         sample, "q_id", "q_vec", shortlist = planned, k = k)
       .select("query_id", "neighbor_id").as[(Long, Long)].collect().toSet
     val recall = served.intersect(exact).size.toDouble / exact.size
-    assert(recall >= graft.queries.LlmQueries.PlannedTarget,
+    assert(recall >= graft.queries.SearchQueries.PlannedTarget,
       s"recall $recall at planned depth $planned below target")
   }
 
@@ -1517,26 +1517,6 @@ class LlmSpec extends SparkSpec {
     assert(out(6L) === ((6L, 2L, 0L, Some("short doc"))))
   }
 
-  test("duplicateSpans: hashGrams=true (the 60-bit-key scale path) is " +
-    "output-identical to the exact-text spec on crafted and random corpora") {
-    val shared = (1 to 10).map(i => s"s$i").mkString(" ")
-    val crafted = Seq(
-      (1L, s"alpha beta $shared gamma delta"),
-      (2L, s"epsilon $shared zeta"),
-      (3L, shared), (4L, "unique words only here today"),
-      (5L, s"$shared and then $shared"), (6L, "short doc"))
-    val rnd = new scala.util.Random(59)
-    val vocabW = Vector("red", "blue", "green", "ox", "ant", "elm", "fig", "gnu")
-    val random = (10L until 60L).map(id =>
-      (id, (0 until 5 + rnd.nextInt(25)).map(_ => vocabW(rnd.nextInt(8))).mkString(" ")))
-    for (docs <- Seq(crafted, random)) {
-      val df = docs.toDF("id", "text")
-      def run(h: Boolean) = Dedup.duplicateSpans(df, "id", "text", 8, hashGrams = h)
-        .as[(Long, Long, Long, Option[String])].collect().sortBy(_._1).toSeq
-      assert(run(true) === run(false))
-    }
-  }
-
   test("duplicateSpansIncremental: batch cleaned vs table + self ≡ the " +
     "batch rows of duplicateSpans over (corpus ∪ batch); a two-batch " +
     "chain through advanceGramCounts catches a cross-batch dup the " +
@@ -1557,38 +1537,36 @@ class LlmSpec extends SparkSpec {
     val k = 8
     def rows2(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.get(0).toString, r.getLong(1))).sortBy(_._1).toSeq
-    for (h <- Seq(false, true)) {
-      val table0 = Dedup.gramCounts(corpus, "id", "text", k, hashGrams = h)
-      def rows(df: org.apache.spark.sql.DataFrame) =
-        df.as[(Long, Long, Long, Option[String])].collect().sortBy(_._1).toSeq
-      val incr1 = rows(Dedup.duplicateSpansIncremental(
-        table0, b1, "id", "text", k, hashGrams = h))
-      // executable spec: batch semantics over the union, batch rows only
-      val ref1 = rows(Dedup.duplicateSpans(
-        corpus.unionByName(b1), "id", "text", k, hashGrams = h)
-        .filter(col("id") >= 100L))
-      assert(incr1 === ref1, s"hashGrams=$h")
-      // batch 2 replays batch 1's NOVEL span: duplicated only against
-      // the ADVANCED table — the un-advanced table must keep it
-      val b2 = Seq((201L, s"second day $novel1 closing words")).toDF("id", "text")
-      val table1 = Dedup.advanceGramCounts(table0, b1, "id", "text", k, hashGrams = h)
-      val incr2 = rows(Dedup.duplicateSpansIncremental(
-        table1, b2, "id", "text", k, hashGrams = h))
-      val ref2 = rows(Dedup.duplicateSpans(
-        corpus.unionByName(b1).unionByName(b2), "id", "text", k, hashGrams = h)
-        .filter(col("id") >= 200L))
-      assert(incr2 === ref2, s"hashGrams=$h (advanced table)")
-      assert(incr2.head._3 === 10L, s"the $novel1 span must be covered: $incr2")
-      val stale = rows(Dedup.duplicateSpansIncremental(
-        table0, b2, "id", "text", k, hashGrams = h))
-      assert(stale.head._3 === 0L,
-        "without the advance the cross-batch span must survive — " +
-          "otherwise the chain isn't actually reading the table")
-      // the advanced table is a straight recount of the union
-      val recount = Dedup.gramCounts(
-        corpus.unionByName(b1), "id", "text", k, hashGrams = h)
-      assert(rows2(table1) === rows2(recount), s"hashGrams=$h")
-    }
+    val table0 = Dedup.gramCounts(corpus, "id", "text", k)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.as[(Long, Long, Long, Option[String])].collect().sortBy(_._1).toSeq
+    val incr1 = rows(Dedup.duplicateSpansIncremental(
+      table0, b1, "id", "text", k))
+    // executable spec: batch semantics over the union, batch rows only
+    val ref1 = rows(Dedup.duplicateSpans(
+      corpus.unionByName(b1), "id", "text", k)
+      .filter(col("id") >= 100L))
+    assert(incr1 === ref1)
+    // batch 2 replays batch 1's NOVEL span: duplicated only against
+    // the ADVANCED table — the un-advanced table must keep it
+    val b2 = Seq((201L, s"second day $novel1 closing words")).toDF("id", "text")
+    val table1 = Dedup.advanceGramCounts(table0, b1, "id", "text", k)
+    val incr2 = rows(Dedup.duplicateSpansIncremental(
+      table1, b2, "id", "text", k))
+    val ref2 = rows(Dedup.duplicateSpans(
+      corpus.unionByName(b1).unionByName(b2), "id", "text", k)
+      .filter(col("id") >= 200L))
+    assert(incr2 === ref2, "advanced table")
+    assert(incr2.head._3 === 10L, s"the $novel1 span must be covered: $incr2")
+    val stale = rows(Dedup.duplicateSpansIncremental(
+      table0, b2, "id", "text", k))
+    assert(stale.head._3 === 0L,
+      "without the advance the cross-batch span must survive — " +
+        "otherwise the chain isn't actually reading the table")
+    // the advanced table is a straight recount of the union
+    val recount = Dedup.gramCounts(
+      corpus.unionByName(b1), "id", "text", k)
+    assert(rows2(table1) === rows2(recount))
   }
 
   test("keepFirstSpanDedup: the FIRST occurrence of a duplicated " +

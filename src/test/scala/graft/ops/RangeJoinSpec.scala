@@ -55,11 +55,14 @@ class RangeJoinSpec extends SparkSpec {
   test("a pathologically reversed interval matches nothing WITHOUT exploding into its bucket span") {
     // end 56 years before start at width 1 s: sequence() would descend
     // through ~1.7e9 buckets (array-allocation failure / OOM) if the
-    // reversed window reached the explode — the pre-filter must drop it
+    // reversed window reached the explode — the pre-filter must drop it.
+    // The good interval spans two days (~173k buckets): a year at 1 s
+    // would itself explode into 31.6M rows and cost the heap the test
+    // is about
     val points = Seq((1L, ts("2020-06-01 00:00:00"))).toDF("p_id", "pt")
     val intervals = Seq(
       ("bad", ts("2026-01-01 00:00:00"), ts("1970-01-01 00:00:00")),
-      ("good", ts("2020-01-01 00:00:00"), ts("2021-01-01 00:00:00"))
+      ("good", ts("2020-05-31 00:00:00"), ts("2020-06-02 00:00:00"))
     ).toDF("iv_id", "w_start", "w_end")
     val got = RangeJoin.pointInInterval(points, "pt", intervals,
         "w_start", "w_end", 1L)

@@ -19,7 +19,7 @@ import graft.{Artifacts, Bench, ShufflePin, SparkEntry, SparkSpec}
 /** [[Artifacts]], the one owner of the engine's fits, cached and
   * checkpointed frames and scratch trees: its key policy, nested builds,
   * replacement, the refit resets, and the stopped-session sweep; and
-  * [[LlmQueries.partitionedCheckpoint]], which declares its partitioning
+  * [[TextQueries.partitionedCheckpoint]], which declares its partitioning
   * with AQE on, so no build swaps a session conf. */
 class ArtifactsSpec extends SparkSpec {
   import SparkSpec.session.implicits._
@@ -35,21 +35,21 @@ class ArtifactsSpec extends SparkSpec {
     // stopping a real extra session would stop the suite's shared
     // SparkContext, so the stopped predicate is injected
     val s2 = spark.newSession()
-    LlmQueries.semanticDupsFrame(spark, sfDir)
-    LlmQueries.semanticDupsFrame(s2, sfDir)
+    DedupQueries.semanticDupsFrame(spark, sfDir)
+    DedupQueries.semanticDupsFrame(s2, sfDir)
     val live = entriesOf(spark)
     assert(entriesOf(s2) >= 2)
     Artifacts.sweepStoppedSessions(isStopped = _ eq s2)
     assert(entriesOf(s2) === 0)
     assert(entriesOf(spark) === live)
     // the live path still works after a sweep
-    assert(LlmQueries.semanticDupsFrame(spark, sfDir).count() > 0)
+    assert(DedupQueries.semanticDupsFrame(spark, sfDir).count() > 0)
   }
 
   test("a build may read another artifact (each builds outside the registry's lock)") {
-    LlmQueries.persistedIvfDir(spark, freshDir)   // reads trainedPqCodebooks
-    LlmQueries.curationDir(spark, freshDir)       // reads the st7 gram-table frame
-    LlmQueries.grownDupLabelsDir(spark, freshDir) // reads verifiedPairsShared
+    SearchQueries.persistedIvfDir(spark, freshDir)         // reads trainedPqCodebooks
+    LlmQueries.curationDir(spark, freshDir)                // reads the st7 gram-table frame
+    CorpusStreamQueries.grownDupLabelsDir(spark, freshDir) // reads verifiedPairsShared
     val built = Artifacts.keys.filter(_._2 == freshDir).map(_._3).toSet
     val expected = Set("ivf_index", "pq_codebooks", "llm8_curation", "st7_gram_table",
       "st18_labels", "verified_pairs")
@@ -87,9 +87,9 @@ class ArtifactsSpec extends SparkSpec {
   test("each RefitResets entry drops only its own artifacts") {
     MlQueries.fittedFit(spark, freshDir, MlQueries.M1F)
     MlQueries.fittedCentroids(spark, freshDir)
-    LlmQueries.grownEmbIndexDir(spark, freshDir)
+    CorpusStreamQueries.grownEmbIndexDir(spark, freshDir)
     LlmQueries.curationDir(spark, freshDir)
-    LlmQueries.grownDupLabelsDir(spark, freshDir)
+    CorpusStreamQueries.grownDupLabelsDir(spark, freshDir)
     assert(Bench.RefitResets.size === 5)
     val dropped = Bench.RefitResets.toSeq.sortBy(_._1).map { case (query, reset) =>
       val before = Artifacts.keys.toSet
@@ -137,7 +137,7 @@ class ArtifactsSpec extends SparkSpec {
     assert(spark.conf.get("spark.sql.adaptive.enabled") == "true")
     val n = spark.conf.get("spark.sql.shuffle.partitions").toInt
     val docs = (0 until 200).map(i => (i.toLong % 37, i % 3, i)).toDF("doc_id", "g", "v")
-    val pages = LlmQueries.partitionedCheckpoint(spark, freshDir, "spec_pages", docs, "doc_id")
+    val pages = TextQueries.partitionedCheckpoint(spark, freshDir, "spec_pages", docs, "doc_id")
     try {
       val declared = pages.queryExecution.analyzed.collect {
         case l: LogicalRDD => l.outputPartitioning

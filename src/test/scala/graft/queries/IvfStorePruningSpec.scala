@@ -35,7 +35,7 @@ class IvfStorePruningSpec extends SparkSpec {
       .getOrElse(fail(s"no FileSourceScanExec over $table/ in the plan"))
 
   test("cells/ and codes/ are laid out as cell= partition directories") {
-    val ivf = LlmQueries.persistedIvfDir(spark, sfDir)
+    val ivf = SearchQueries.persistedIvfDir(spark, sfDir)
     for (t <- Seq("cells", "codes")) {
       val parts = new java.io.File(s"$ivf/$t").listFiles()
         .filter(_.getName.startsWith("cell="))
@@ -45,7 +45,7 @@ class IvfStorePruningSpec extends SparkSpec {
   }
 
   test("ss10 serve: the probe list statically prunes the inverted-file scan") {
-    val ivf = LlmQueries.persistedIvfDir(spark, sfDir)
+    val ivf = SearchQueries.persistedIvfDir(spark, sfDir)
     val emb = graft.Tables.embeddings(spark, sfDir)
     // ONE query vector → the probe set is exactly nProbe cells
     val oneQ = emb.filter(col("vec_id") === 0)
@@ -83,7 +83,7 @@ class IvfStorePruningSpec extends SparkSpec {
   }
 
   test("ss11 serve: the PQ codes scan partition-prunes the same way") {
-    val ivf = LlmQueries.persistedIvfDir(spark, sfDir)
+    val ivf = SearchQueries.persistedIvfDir(spark, sfDir)
     val emb = graft.Tables.embeddings(spark, sfDir)
     val oneQ = emb.filter(col("vec_id") === 0)
       .select(col("vec_id").as("q_id"), col("embedding").as("q_vec"))
@@ -97,7 +97,7 @@ class IvfStorePruningSpec extends SparkSpec {
       spark.read.parquet(s"$ivf/codebook"),
       cents, "cent_vec",
       oneQ, "q_id", "q_vec",
-      LlmQueries.PqM, LlmQueries.PqSubDim, nProbe = 2, k = 3)
+      SearchQueries.PqM, SearchQueries.PqSubDim, nProbe = 2, k = 3)
     assert(served.collect().length == 3)
     val scan = scanOf(served, "codes")
     assert(scan.selectedPartitions.partitionCount <= 2,
@@ -109,7 +109,7 @@ class IvfStorePruningSpec extends SparkSpec {
   }
 
   test("the pruned serve is result-identical to the unpruned serve") {
-    val ivf = LlmQueries.persistedIvfDir(spark, sfDir)
+    val ivf = SearchQueries.persistedIvfDir(spark, sfDir)
     val emb = graft.Tables.embeddings(spark, sfDir)
     val qs = emb.filter(col("vec_id") % 100 === 0)
       .select(col("vec_id").as("q_id"), col("embedding").as("q_vec"))

@@ -11,7 +11,7 @@ import graft.SparkSpec
   * probes" finding). grownDupLabelsDir writes every label dir TWICE —
   * partitioned by `bkt = pmod(xxhash64(doc), B)` and, as a
   * group-keyed secondary, by `gbkt = pmod(xxhash64(group_id), B)` —
-  * and [[LlmQueries.resolvedLabelsFor]] prepends the probe's distinct
+  * and [[CorpusStreamQueries.resolvedLabelsFor]] prepends the probe's distinct
   * bucket list as literal PartitionFilters (the ss10 static-pruning
   * move), so the per-batch endpoint and member-relabel probes list
   * only their buckets' directories instead of streaming base + every
@@ -23,7 +23,7 @@ import graft.SparkSpec
   */
 class LabelStorePruningSpec extends SparkSpec {
   private val sfDir = "/root/testdata/sf0.001"
-  private lazy val dir = LlmQueries.grownDupLabelsDir(spark, sfDir)
+  private lazy val dir = CorpusStreamQueries.grownDupLabelsDir(spark, sfDir)
   private def docPaths = Seq(s"$dir/labels/base",
     s"$dir/labels/batch=0", s"$dir/labels/batch=1")
   private def grpPaths = Seq(s"$dir/labels/baseByGrp",
@@ -34,15 +34,15 @@ class LabelStorePruningSpec extends SparkSpec {
       val parts = new java.io.File(p).listFiles()
         .filter(_.getName.startsWith(key))
       assert(parts.nonEmpty, s"$p: no $key partition dirs")
-      assert(parts.length <= LlmQueries.LabelBuckets,
-        s"$p: ${parts.length} $key dirs > B=${LlmQueries.LabelBuckets}")
+      assert(parts.length <= CorpusStreamQueries.LabelBuckets,
+        s"$p: ${parts.length} $key dirs > B=${CorpusStreamQueries.LabelBuckets}")
     }
   }
 
   test("a one-doc endpoint probe statically prunes every label-dir scan " +
     "to its single bucket") {
     val probe = spark.range(1).select(lit(0L).as("doc"))
-    val resolved = LlmQueries.resolvedLabelsFor(spark, docPaths,
+    val resolved = CorpusStreamQueries.resolvedLabelsFor(spark, docPaths,
       "doc", "bkt", probe)
     // collect() runs THIS QueryExecution (count() would plan a fresh
     // one, leaving the scan metrics unpopulated)
@@ -73,11 +73,11 @@ class LabelStorePruningSpec extends SparkSpec {
   test("a one-group member probe prunes the secondary (ByGrp) layout " +
     "the same way") {
     // doc 0's component root: a real current representative
-    val root = LlmQueries.resolvedLabelsFor(spark, docPaths, "doc", "bkt",
+    val root = CorpusStreamQueries.resolvedLabelsFor(spark, docPaths, "doc", "bkt",
         spark.range(1).select(lit(0L).as("doc")))
       .collect().head.getLong(1)
     val probe = spark.range(1).select(lit(root).as("group_id"))
-    val resolved = LlmQueries.resolvedLabelsFor(spark, grpPaths,
+    val resolved = CorpusStreamQueries.resolvedLabelsFor(spark, grpPaths,
       "group_id", "gbkt", probe)
     val rows = resolved.collect()
     assert(rows.nonEmpty, s"group $root must have current members")
@@ -96,17 +96,17 @@ class LabelStorePruningSpec extends SparkSpec {
   test("the pruned resolve is result-identical to the full resolve") {
     // every doc currently labeled — the widest possible probe; pruning
     // must be a pure superset-then-exact-join (no row gained or lost)
-    val full = LlmQueries.resolvedLabels(spark, docPaths)
+    val full = CorpusStreamQueries.resolvedLabels(spark, docPaths)
     def sorted(df: DataFrame): Array[String] =
       df.orderBy("doc", "group_id").collect().map(_.toString)
-    assert(sorted(LlmQueries.resolvedLabelsFor(spark, docPaths, "doc", "bkt",
+    assert(sorted(CorpusStreamQueries.resolvedLabelsFor(spark, docPaths, "doc", "bkt",
         full.select("doc")))
       .sameElements(sorted(full)),
       "doc-probe pruned resolve diverged from the full resolve")
     // probing every current group over the ByGrp layout must surface
     // every current row (the superseded-label safety argument in
     // resolvedLabelsFor's scaladoc, exercised store-wide)
-    assert(sorted(LlmQueries.resolvedLabelsFor(spark, grpPaths, "group_id",
+    assert(sorted(CorpusStreamQueries.resolvedLabelsFor(spark, grpPaths, "group_id",
         "gbkt", full.select("group_id")).select("doc", "group_id"))
       .sameElements(sorted(full)),
       "group-probe pruned resolve diverged from the full resolve")
