@@ -115,7 +115,8 @@ object Artifacts {
       case _ => false
     }).foreach(_.owned.release(storage = false))
 
-  /** (scope, dir, name) of every entry, for tests. */
+  /** (scope, dir, name) of every entry: for tests, and for
+    * [[BenchScale]] to release the entries of its scale directories. */
   private[graft] def keys: Seq[(AnyRef, String, String)] =
     entries.synchronized(entries.keys.map(k => (k.scope, k.dir, k.name)).toSeq)
 

@@ -2,8 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main (driver contract): runs every registered query on
   * `SPARK_GRAFT_SF_DIR`, prints ONE JSON line with per-query seconds.
   *

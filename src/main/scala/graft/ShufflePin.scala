@@ -2,8 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Per-query shuffle-exchange pins (r8 verdict ask #7): bench_explain/
   * covers every query and PlanAuditSpec bans SMJ/cartesian, but nothing
   * stopped a regression that ADDS an exchange (e.g. a lost broadcast

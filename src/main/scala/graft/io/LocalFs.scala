@@ -5,6 +5,8 @@ import java.net.URI
 import java.nio.file.{Files, InvalidPathException}
 import java.nio.file.attribute.PosixFilePermissions
 
+import scala.annotation.unused
+
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{ChecksumFs, DelegateToFileSystem, FileStatus, FsConstants,
   FSDataInputStream, FsServerDefaults, FSLinkResolver, Path, RawLocalFileSystem}
@@ -81,7 +83,7 @@ class LocalFileSystem extends org.apache.hadoop.fs.LocalFileSystem(new ForkFreeR
   * streaming checkpoints and the HDFS-backed state store write through.
   * Hadoop's `local.LocalFs` over its `local.RawLocalFs`, with the raw
   * filesystem swapped; Hadoop instantiates it by this constructor. */
-class LocalFs(uri: URI, conf: Configuration) extends ChecksumFs(
+class LocalFs(@unused uri: URI, conf: Configuration) extends ChecksumFs(
   new DelegateToFileSystem(FsConstants.LOCAL_FS_URI, new ForkFreeRawLocalFileSystem, conf,
       FsConstants.LOCAL_FS_URI.getScheme, false) {
     override def getUriDefaultPort: Int = -1

@@ -182,7 +182,8 @@ object Dedup {
     * pair set, and the rarest-first prefix order is the hot-gram
     * defence: a boilerplate gram in every document ranks last in each
     * of them, so it enters only the prefixes of documents whose prefix
-    * spans their whole gram set (bench_scale's `dd_prefix_hot` legs).
+    * spans their whole gram set (bench_scale's `dd_prefix_hot` legs
+    * time dd12 on corpora with such a gram).
     * Corpus-scale joins carry shuffle_hash hints (an SMJ sort on gram
     * buys nothing — PlanAuditSpec).
     *
@@ -208,20 +209,6 @@ object Dedup {
     * count feeds J = c / (m_a + m_b - c) — by inclusion-exclusion over
     * distinct sets, bit-identical to intersect-size / union-size doubles.
     *
-    * `stats`, when supplied, observes `candidate_rows` (collision
-    * rows surviving the scalar filters = kernel evaluations) on the
-    * SAME pass at zero cost — the scale-bench leg logs it.
-    *
-    * `collisionPartitions` sizes the collision join's exchange. The
-    * build side holds ~(prefix rows × ~450 B) / partitions per task
-    * as a hash relation, so the partition count must grow with the
-    * corpus exactly as a real deployment grows
-    * spark.sql.shuffle.partitions (the scale leg passes ~rows/32 MB;
-    * at the suite's sf the session default is already right —
-    * None). Partitioning is explicit (repartition on the gram key),
-    * so both join inputs land pre-partitioned and the join adds no
-    * further exchange.
-    *
     * `blockCols`, when non-empty, RESTRICTS pairs to documents equal
     * on every block column (dd6's (lang, band) blocking semantics):
     * the block key simply joins the gram as part of every gram-keyed
@@ -246,8 +233,6 @@ object Dedup {
     * than silently discarded by the later null-unsafe joins. */
   def prefixFilterPairs(df: DataFrame, idCol: String, gramsCol: String,
                         threshold: Double,
-                        stats: Option[org.apache.spark.sql.Observation] = None,
-                        collisionPartitions: Option[Int] = None,
                         blockCols: Seq[String] = Nil)
       : DataFrame = {
     require(threshold > 0.0 && threshold <= 1.0,
@@ -306,17 +291,13 @@ object Dedup {
         Seq(col("m"), col("rn"), col("gram")): _*)
       .join(base.select(col("doc"), col("grams")).hint("shuffle_hash"),
         Seq("doc"))
-    def sized(d: DataFrame): DataFrame = collisionPartitions match {
-      case Some(n) => d.repartition(n, gramKey.map(col): _*)
-      case None => d
-    }
-    val collided = sized(pfx)
+    pfx
       .select(Seq(col("doc").as("doc_a")) ++ blk ++ Seq(
         col("m").as("m_a"), col("rn").as("rn_a"), col("gram"),
         col("grams").as("g_a")): _*)
       .hint("shuffle_hash")
       .join(
-        sized(pfx)
+        pfx
           .select(Seq(col("doc").as("doc_b")) ++ blk ++ Seq(
             col("m").as("m_b"), col("rn").as("rn_b"), col("gram"),
             col("grams").as("g_b")): _*)
@@ -327,14 +308,9 @@ object Dedup {
       .filter(lit(1L) +
         least(col("m_a") - col("rn_a"), col("m_b") - col("rn_b")) >=
         pairOverlap(col("m_a"), col("m_b")))
-    val observed = stats match {
-      case Some(obs) => collided.observe(obs, count(lit(1)).as("candidate_rows"))
-      case None => collided
-    }
-    // in-place exact verification; a true pair emits once per shared
-    // prefix gram with bit-identical jaccard, so the final distinct is
-    // output-sized, not collision-sized
-    observed
+      // in-place exact verification; a true pair emits once per shared
+      // prefix gram with bit-identical jaccard, so the final distinct is
+      // output-sized, not collision-sized
       .withColumn("c",
         graft.functions.ArrayKernels.sortedOverlapCount(col("g_a"), col("g_b")))
       .withColumn("jaccard",

@@ -239,35 +239,26 @@ object GramOls {
     val cols = (lit(1.0) +: col(label).cast("double") +: unionFeats.map(featCol))
       .zipWithIndex.map { case (c, i) => c.as(s"g$i") }
     val triLen = m * (m + 1) / 2
-    val tri = df.select(cols: _*).queryExecution.toRdd.treeAggregate(
-      new Array[Double](triLen))(
-      seqOp = (acc, row) => {
-        val v = new Array[Double](m)
-        var i = 0
-        var ok = true
-        while (ok && i < m) {
-          if (row.isNullAt(i)) ok = false
-          else { v(i) = row.getDouble(i); if (v(i) != v(i)) ok = false }
-          i += 1
+    val tri = OrderedSum.sum(df.select(cols: _*).queryExecution.toRdd, triLen) { (acc, row) =>
+      val v = new Array[Double](m)
+      var i = 0
+      var ok = true
+      while (ok && i < m) {
+        if (row.isNullAt(i)) ok = false
+        else { v(i) = row.getDouble(i); if (v(i) != v(i)) ok = false }
+        i += 1
+      }
+      if (ok) {
+        var k = 0
+        var a = 0
+        while (a < m) {
+          val va = v(a)
+          var b = a
+          while (b < m) { acc(k) += va * v(b); k += 1; b += 1 }
+          a += 1
         }
-        if (ok) {
-          var k = 0
-          var a = 0
-          while (a < m) {
-            val va = v(a)
-            var b = a
-            while (b < m) { acc(k) += va * v(b); k += 1; b += 1 }
-            a += 1
-          }
-        }
-        acc
-      },
-      combOp = (x, y) => {
-        var i = 0
-        while (i < triLen) { x(i) += y(i); i += 1 }
-        x
-      },
-      depth = 2)
+      }
+    }
     def at(i: Int, j: Int): Double = {
       val (a, b) = if (i <= j) (i, j) else (j, i)
       tri(a * m - a * (a - 1) / 2 + (b - a))

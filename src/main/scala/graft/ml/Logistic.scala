@@ -1,7 +1,7 @@
 package graft.ml
 
 import breeze.linalg.{DenseMatrix, DenseVector}
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.llm.{Importance, TextOps}
@@ -18,11 +18,12 @@ import graft.llm.{Importance, TextOps}
   *
   * Scale posture: the feature space is a FIXED number of hashed
   * buckets (the DSIR/[[Importance]] trick), so each IRLS iteration is
-  * ONE treeAggregate over the corpus accumulating XᵀWX ((p+1)² doubles)
-  * and XᵀWz (p+1) — payload independent of corpus size, solved on the
-  * driver like GramOls' shared gram. Featurization is one explode +
-  * two keyed aggregations; scoring is a broadcast join against the
-  * (p+1)-row fitted-coefficient table plus one doc-keyed aggregation —
+  * ONE ordered partition sum ([[OrderedSum]]) over the corpus
+  * accumulating XᵀWX ((p+1)² doubles) and XᵀWz (p+1) — payload
+  * independent of corpus size, solved on the driver like GramOls'
+  * shared gram. Featurization is one explode + two keyed aggregations;
+  * scoring is a broadcast join against the (p+1)-row fitted-coefficient
+  * table plus one doc-keyed aggregation —
   * nothing corpus-quadratic, nothing driver-side but the tiny solve.
   */
 object Logistic {
@@ -75,7 +76,7 @@ object Logistic {
     * initial zero vector and after EVERY update including the final
     * one (the returned model is therefore validated, not just its
     * predecessors). The per-update deviances ride in the same
-    * treeAggregate as the gram; only the last entry costs one extra
+    * ordered sum as the gram; only the last entry costs one extra
     * lightweight pass. Asserting the trace decreases is the
     * convergence diagnostic. */
   def fitIrls(featured: DataFrame, featsCol: String, labelCol: String,
@@ -95,39 +96,30 @@ object Logistic {
       val deviances = Seq.newBuilder[Double]
       for (_ <- 1 to iters) {
         val b0 = beta // stable reference for the closure
-        val (a, bv, dev) = rows.treeAggregate(
-          (new Array[Double](q * q), new Array[Double](q), 0.0))(
-          seqOp = { case ((aAcc, bAcc, dAcc), (f, y)) =>
-            var eta = b0(0)
-            var j = 0
-            while (j < p) { eta += b0(j + 1) * f(j); j += 1 }
-            val mu0 = sigmoid(eta)
-            // clamp: w -> 0 at saturated mu makes z explode; the clamp
-            // is the standard IRLS guard and keeps the gram PSD
-            val mu = math.min(math.max(mu0, 1e-10), 1 - 1e-10)
-            val w = mu * (1 - mu)
-            val z = eta + (y - mu) / w
-            val x = new Array[Double](q)
-            x(0) = 1.0
-            System.arraycopy(f, 0, x, 1, p)
-            var i = 0
-            while (i < q) {
-              val wxi = w * x(i)
-              bAcc(i) += wxi * z
-              var k = 0
-              while (k < q) { aAcc(i * q + k) += wxi * x(k); k += 1 }
-              i += 1
-            }
-            val d = -2.0 * (y * math.log(mu) + (1 - y) * math.log(1 - mu))
-            (aAcc, bAcc, dAcc + d)
-          },
-          combOp = { case ((a1, b1, d1), (a2, b2, d2)) =>
-            var i = 0
-            while (i < q * q) { a1(i) += a2(i); i += 1 }
-            i = 0
-            while (i < q) { b1(i) += b2(i); i += 1 }
-            (a1, b1, d1 + d2)
-          })
+        val sums = OrderedSum.sum(rows, q * q + q + 1) { case (acc, (f, y)) =>
+          var eta = b0(0)
+          var j = 0
+          while (j < p) { eta += b0(j + 1) * f(j); j += 1 }
+          val mu0 = sigmoid(eta)
+          // clamp: w -> 0 at saturated mu makes z explode; the clamp
+          // is the standard IRLS guard and keeps the gram PSD
+          val mu = math.min(math.max(mu0, 1e-10), 1 - 1e-10)
+          val w = mu * (1 - mu)
+          val z = eta + (y - mu) / w
+          val x = new Array[Double](q)
+          x(0) = 1.0
+          System.arraycopy(f, 0, x, 1, p)
+          var i = 0
+          while (i < q) {
+            val wxi = w * x(i)
+            acc(q * q + i) += wxi * z
+            var k = 0
+            while (k < q) { acc(i * q + k) += wxi * x(k); k += 1 }
+            i += 1
+          }
+          acc(q * q + q) += -2.0 * (y * math.log(mu) + (1 - y) * math.log(1 - mu))
+        }
+        val (a, bv, dev) = (sums.take(q * q), sums.slice(q * q, q * q + q), sums(q * q + q))
         deviances += dev
         val aMat = new DenseMatrix(q, q, a)
         var i = 0
@@ -138,15 +130,13 @@ object Logistic {
       // the last update would never be validated and an oscillating
       // terminal step could hide behind a decreasing prefix
       val bF = beta
-      deviances += rows.treeAggregate(0.0)(
-        seqOp = { case (dAcc, (f, y)) =>
-          var eta = bF(0)
-          var j = 0
-          while (j < p) { eta += bF(j + 1) * f(j); j += 1 }
-          val mu = math.min(math.max(sigmoid(eta), 1e-10), 1 - 1e-10)
-          dAcc - 2.0 * (y * math.log(mu) + (1 - y) * math.log(1 - mu))
-        },
-        combOp = _ + _)
+      deviances += OrderedSum.sum(rows, 1) { case (acc, (f, y)) =>
+        var eta = bF(0)
+        var j = 0
+        while (j < p) { eta += bF(j + 1) * f(j); j += 1 }
+        val mu = math.min(math.max(sigmoid(eta), 1e-10), 1 - 1e-10)
+        acc(0) -= 2.0 * (y * math.log(mu) + (1 - y) * math.log(1 - mu))
+      }.head
       LogitFit(beta, deviances.result())
     } finally rows.unpersist(blocking = false)
   }

@@ -5,9 +5,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Exact per-slice median via a distinct-value histogram — the scale
-  * shape shared by a1_descriptive_stats and BenchScale's a_median leg
-  * (one copy, so the committed query and the scale-evidence leg cannot
-  * drift apart).
+  * shape of a1_descriptive_stats, which BenchScale's a_median leg times
+  * at 1×/10×/100× input.
   *
   * Why not Spark's `Percentile`/`median` aggregate: it buffers a boxed
   * per-group count-map inside a single reducer task (heap grows with
@@ -15,7 +14,7 @@ import org.apache.spark.sql.functions._
   * the block to ObjectHashAggregate. Collapsing to a (slice, value,
   * count) histogram first keeps the heavy aggregation codegen'd and
   * shuffles only the distinct values — constant-size whenever the
-  * value domain is (BenchScale measures 1.65× time at 100× input).
+  * value domain is.
   *
   * The rank arithmetic reproduces Percentile's interpolation exactly:
   * 0-based middle ranks ⌊(n−1)/2⌋ and ⌊n/2⌋, value at rank k = first

@@ -9,9 +9,8 @@ import org.apache.spark.sql.functions._
   * AQE's skew-join handling (`spark.sql.adaptive.skewJoin.enabled`, on
   * by default) already splits oversized shuffle partitions at runtime —
   * that is the first line of defense and needs no code. Explicit
-  * salting remains the tool when (a) the skew is in an AGGREGATION, not
-  * a join (AQE does not split hash-agg partitions), or (b) the join is
-  * not a sort-merge join AQE can rewrite. Both shapes live here.
+  * salting remains the tool when the join is not a sort-merge join AQE
+  * can rewrite (the banded LSH and SemDeDup cell joins).
   *
   * Salts are DERIVED (hash-based), never random — results must be
   * deterministic and retry-safe (a task retry with a different rand()
@@ -40,18 +39,4 @@ object Skew {
       .withColumn("__salt", col("__salt").cast("int"))
     salted.join(replicated, Seq(key, "__salt")).drop("__salt")
   }
-
-  /** Two-phase (salted partial → final) aggregation for skewed group
-    * keys: phase 1 aggregates on (key, salt) — spreading the hot key —
-    * phase 2 merges the per-salt partials. `partials` maps each value
-    * column to its phase-1 aggregate; `merges` combines the partial
-    * columns in phase 2 (sum→sum, count→sum, min→min, ...). */
-  def saltedAgg(df: DataFrame, key: String, buckets: Int,
-                discriminators: Seq[Column],
-                partials: Seq[Column], merges: Seq[Column]): DataFrame =
-    df.withColumn("__salt", salt(buckets, discriminators: _*))
-      .groupBy(col(key), col("__salt"))
-      .agg(partials.head, partials.tail: _*)
-      .groupBy(col(key))
-      .agg(merges.head, merges.tail: _*)
 }

@@ -1105,7 +1105,7 @@ object CorpusStreamQueries extends Q.Registry {
         val tableDir = stage.resolve("gram_table").toString
         val outDir = stage.resolve("cleaned").toString
         graft.streaming.SubstrDedupStream.initGramTable(
-          s, tableDir, docs, "doc_id", "text", k)
+          tableDir, docs, "doc_id", "text", k)
         val q = s.readStream.schema(schema)
           .option("maxFilesPerTrigger", 1).parquet(inDir.toString)
           .writeStream

@@ -49,9 +49,9 @@ object DedupQueries extends Q.Registry {
     * same policy as [[graft.Tables.load]]. The pairs frame is
     * dup-structure-sized (3 columns, one row per verified near-dup
     * pair), orders of magnitude under the corpus — cacheable at any
-    * scale the dedup result itself is usable at. The bench_scale
-    * dd_groups/dd_star legs deliberately RE-RUN the pipeline
-    * (documented there) so the end-to-end scale cost stays measured. */
+    * scale the dedup result itself is usable at. BenchScale releases it
+    * before every timed run, so its dd_groups/dd_star legs RE-RUN the
+    * pipeline and the end-to-end scale cost stays measured. */
   private[graft] def verifiedPairsShared(s: SparkSession, d: String): DataFrame =
     Artifacts.frame(s, d, "verified_pairs") {
       val shingled = corpus(s, d)

@@ -244,7 +244,7 @@ object IngestQueries extends Q.Registry {
         "counts. Oracle is the batch semantics (DISTINCT on the key) - " +
         "the stream/batch equivalence the watermark design promises.",
       (s, d) => {
-        import org.apache.spark.sql.functions.{col, count, lit}
+        import org.apache.spark.sql.functions.{count, lit}
         val facts = eventsStream(s, d).select("station_no", "record_time")
         val deduped = graft.streaming.MicroBatchIngest.dedupWithinWatermark(facts)
         runToMemory(s, deduped, "st1_out_", "append")
@@ -285,7 +285,7 @@ object IngestQueries extends Q.Registry {
         "MicroBatchIngestSpec); the bounded run's final state equals " +
         "the batch group-by count.",
       (s, d) => {
-        import org.apache.spark.sql.functions.{col, max}
+        import org.apache.spark.sql.functions.max
         val counted = graft.streaming.MicroBatchIngest
           .runningCounts(eventsStream(s, d))
           .toDF("station_no", "n_cum")

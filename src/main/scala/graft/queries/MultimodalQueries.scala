@@ -203,7 +203,7 @@ object MultimodalQueries extends Q.Registry {
         "literal rows — means land on the trunc-6 grid exactly " +
         "(127.5, 77, 200... are binary-exact), so the hash check is " +
         "meaningful, not a float coincidence.",
-      (s, d) => {
+      (s, _) => {
         import s.implicits._
         val rows = Seq("checker.png", "gradient.png", "solid_rgb.png",
           "truncated.png").zipWithIndex.map { case (f, i) =>
@@ -245,7 +245,7 @@ object MultimodalQueries extends Q.Registry {
         "truncated header that must dead-letter, not die). Same " +
         "mapBatched plumbing, schema discipline, and dead-letter " +
         "contract as the image quartet.",
-      (s, d) => {
+      (s, _) => {
         import s.implicits._
         def square(n: Int, amp: Short): Array[Short] =
           Array.tabulate(n)(i => if (i % 2 == 0) amp else (-amp).toShort)

@@ -257,8 +257,8 @@ object StatTests {
     * full sort-by-another-name — quantize such a column first (e.g.
     * `round(v, 3)`; binning only introduces ties, which the midrank +
     * tie-correction machinery handles by construction). The
-    * bench_scale `x_ranktest` leg REQUIREs the bounded-state claim at
-    * 100× on a fixed universe. */
+    * bench_scale `x_ranktest` leg times x18/x19 at 100× the rows on a
+    * fixed universe. */
   def mannWhitney(df: DataFrame, valueCol: String, flagCol: Column,
                   byCol: String): DataFrame = {
     val hist = df.groupBy(col(byCol), col(valueCol).as("__v"))

@@ -70,7 +70,7 @@ object SubstrDedupStream {
 
   /** Write the initial gram-count index (`v0`) from the already-
     * ingested corpus. Run once, before the stream starts. */
-  def initGramTable(spark: SparkSession, tableDir: String, corpus: DataFrame,
+  def initGramTable(tableDir: String, corpus: DataFrame,
                     idCol: String, textCol: String, k: Int): Unit =
     Dedup.gramCounts(corpus, idCol, textCol, k)
       .write.mode("overwrite").parquet(versionDir(tableDir, 0L))

@@ -21,7 +21,7 @@ class BenchScaleSpec extends SparkSpec {
   ).toDF("doc_id", "text")
 
   test("inflateDocuments: ids stay unique, counts scale exactly") {
-    val inflated = BenchScale.inflateDocuments(docs, 3)
+    val inflated = InflateSf.inflateDocuments(docs, 3)
     assert(inflated.count() === 12)
     assert(inflated.select("doc_id").distinct().count() === 12)
   }
@@ -34,7 +34,7 @@ class BenchScaleSpec extends SparkSpec {
       (3L, Option.empty[Long], "2024-01-01 12:00:00", "click")
     ).toDF("event_id", "user_id", "ts_s", "event_type")
       .withColumn("ts", to_timestamp(col("ts_s"))).drop("ts_s")
-    val inf = BenchScale.inflateEventsUsers(ev, 3)
+    val inf = InflateSf.inflateEventsUsers(ev, 3)
     assert(inf.count() === 9)
     assert(inf.select("event_id").distinct().count() === 9)
     // a null user never gains a replica identity (null·f+rep is null)
@@ -58,7 +58,7 @@ class BenchScaleSpec extends SparkSpec {
 
   test("inflateDocuments: per-replica token map preserves within-replica " +
     "similarity and zeroes cross-replica similarity") {
-    val inflated = BenchScale.inflateDocuments(docs, 2)
+    val inflated = InflateSf.inflateDocuments(docs, 2)
       .withColumn("sh_set",
         array_distinct(TextOps.wordShingles(TextOps.words(col("text")), 3)))
     // replica of doc 0 (id 0*2+1=1... ids are doc_id*2+rep) vs its own
@@ -81,7 +81,7 @@ class BenchScaleSpec extends SparkSpec {
       (1L, java.sql.Timestamp.valueOf("2024-01-01 08:00:00"), 7L, 10.0),
       (2L, java.sql.Timestamp.valueOf("2024-01-01 09:00:00"), 9L, 20.0)
     ).toDF("event_id", "ts", "user_id", "value")
-    val inflated = BenchScale.inflateEvents(ev, 3)
+    val inflated = InflateSf.inflateEvents(ev, 3)
     assert(inflated.count() === 6)
     assert(inflated.select("event_id").distinct().count() === 6)
     assert(inflated.select("user_id").distinct().count() === 2)
@@ -89,11 +89,68 @@ class BenchScaleSpec extends SparkSpec {
     assert(days === 3) // one replica per day offset
   }
 
+  test("inflateEmbeddingsCells: each replica keeps the original geometry " +
+    "exactly, and a vector's copies in other replicas are not its duplicates") {
+    val a = Seq(1f, -2f, 3f, 0.5f, -1f, 2f, 0.25f, 4f)
+    val b = Seq(0.5f, 1f, -1f, 2f, 3f, -0.5f, 1f, -2f)
+    val emb = Seq((0L, a, 3), (1L, b, 4)).toDF("vec_id", "embedding", "label")
+    val inf = InflateSf.inflateEmbeddingsCells(emb, 3)
+      .as[(Long, Seq[Float], Int)].collect().map(r => r._1 -> r).toMap
+    def dot(x: Seq[Float], y: Seq[Float]): Double =
+      x.zip(y).map { case (p, q) => p.toDouble * q }.sum
+    for (rep <- 0 until 3) {
+      val (ra, rb) = (inf(0L * 3 + rep), inf(1L * 3 + rep))
+      assert(dot(ra._2, rb._2) === dot(a, b))
+      assert(dot(ra._2, ra._2) === dot(a, a))
+      assert((ra._3, rb._3) === ((3 * 3 + rep, 4 * 3 + rep)))
+    }
+    assert(inf(0L)._2 === a)
+    assert(inf(1L)._2 != a && inf(2L)._2 != a)
+  }
+
   test("exact dedup on an inflated corpus never merges across replicas") {
-    val inflated = BenchScale.inflateDocuments(docs, 4)
+    val inflated = InflateSf.inflateDocuments(docs, 4)
     val groups = Dedup.exactDedup(inflated, "text", "doc_id")
     // 3 distinct contents per replica (docs 0/3 collapse) x 4 replicas
     assert(groups.count() === 12)
     assert(groups.agg(sum("n_copies")).as[Long].head() === 16)
+  }
+
+  private val sf = "/root/testdata/sf0.001"
+
+  test("every leg's queries are registered and every factor divides 10^6") {
+    val legs = BenchScale.legs(spark, sf)
+    assert(legs.map(_.name).distinct.size === legs.size)
+    val names = legs.flatMap(_.runs).filter(_.fn.isEmpty).map(_.name)
+    assert(names.nonEmpty)
+    assert(names.filterNot(SparkEntry.queries.contains) === Nil)
+    val factors = Seq(1, 10, 100) ++ legs.map(_.maxFactor).filter(_ < Int.MaxValue)
+    assert(factors.filter(1000000 % _ != 0) === Nil)
+    intercept[IllegalArgumentException](BenchScale.measure(spark, sf, Seq(1, 3), Nil))
+  }
+
+  test("the invariant check rejects an off-by-one count and a cross-replica pair") {
+    import BenchScale._
+    assert(violation(Linear, 2 * 37L, 37L, 2).isEmpty)
+    assert(violation(Linear, 2 * 37L + 1, 37L, 2).isDefined)
+    assert(violation(Constant, 38L, 37L, 10).isDefined)
+    assert(violation(Near(0.05), 105L, 10L, 10).isEmpty)
+    assert(violation(Near(0.05), 106L, 10L, 10).isDefined)
+    // ids are orig·f + rep: (4, 2) share replica 0 at f = 2, (3, 6) don't
+    val pairs = Seq((4L, 2L), (3L, 6L), (5L, 7L)).toDF("doc_a", "doc_b")
+    val Seq(rows, cross) = read(pairs, Seq(Rows, CrossReplica("doc_a", "doc_b")), 2)
+    assert(rows === 3L && cross === 1L)
+    assert(violation(Exactly(0), cross, 0L, 2).isDefined)
+  }
+
+  test("smoke: an exact leg and a cross-replica leg at factors 1, 2") {
+    val legs = BenchScale.legs(spark, sf).filter(l => Set("w_window", "dd_semantic")(l.name))
+    val recs = BenchScale.measure(spark, sf, Seq(1, 2), legs)
+    val w1 = recs(("w_window", "w1_lag_rate"))
+    assert(w1.vals(1) === Seq(1000L) && w1.vals(2) === Seq(2000L))
+    val dd10 = recs(("dd_semantic", "dd10_semantic_dedup"))
+    assert(dd10.vals(2)(0) === 2 * dd10.vals(1)(0))
+    assert(dd10.vals(1)(1) === 0L && dd10.vals(2)(1) === 0L)
+    assert(recs.values.forall(r => r.sec.keySet == Set(1, 2)))
   }
 }

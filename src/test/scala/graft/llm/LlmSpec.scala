@@ -1919,7 +1919,7 @@ class LlmSpec extends SparkSpec {
     // cells are meaningful and within-cell neighbors are tight but
     // distinct — the regime where a too-shallow shortlist WOULD lose
     // recall if the quantized coarse ranking were broken
-    val centers = (0 until 4).map(c => Seq.fill(dim)(rnd.nextGaussian() * 3))
+    val centers = (0 until 4).map(_ => Seq.fill(dim)(rnd.nextGaussian() * 3))
     val rows = (0L until 200L).map { i =>
       val c = (i % 4).toInt
       (i, c.toLong, centers(c).map(x => (x + rnd.nextGaussian() * 0.4).toFloat))

@@ -1,7 +1,5 @@
 package graft.llm
 
-import org.apache.spark.sql.functions._
-
 import graft.SparkSpec
 
 /** BM25 retrieval and the hashed-bigram LM on crafted fixtures: known

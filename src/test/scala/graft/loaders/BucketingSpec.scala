@@ -1,7 +1,5 @@
 package graft.loaders
 
-import org.apache.spark.sql.functions._
-
 import graft.SparkSpec
 
 /** The co-located-join property, proven on the physical plan: joining

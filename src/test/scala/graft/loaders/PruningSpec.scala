@@ -1,7 +1,6 @@
 package graft.loaders
 
 import org.apache.spark.sql.execution.FormattedMode
-import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 

@@ -1,7 +1,5 @@
 package graft.ml
 
-import org.apache.spark.sql.functions._
-
 import graft.SparkSpec
 
 /** The IRLS logistic classifier on crafted fixtures: separable vocab

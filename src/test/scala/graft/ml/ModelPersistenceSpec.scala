@@ -4,7 +4,6 @@ import java.nio.file.Files
 
 import org.apache.spark.ml.PipelineModel
 import org.apache.spark.ml.feature.MinMaxScalerModel
-import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 

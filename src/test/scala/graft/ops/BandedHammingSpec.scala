@@ -1,7 +1,5 @@
 package graft.ops
 
-import org.apache.spark.sql.functions._
-
 import graft.SparkSpec
 
 /** The shared banded-hamming topology (mm9 batch / mm10 incremental):

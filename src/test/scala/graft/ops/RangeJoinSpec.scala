@@ -2,8 +2,6 @@ package graft.ops
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.functions._
-
 import graft.SparkSpec
 
 class RangeJoinSpec extends SparkSpec {

@@ -446,7 +446,7 @@ class MicroBatchIngestSpec extends SparkSpec {
       val (tableDir, outDir, ckpt) = (root.resolve("table").toString,
         root.resolve("cleaned").toString, root.resolve("ckpt").toString)
       val (corpus, day1, day2) = substrFixture()
-      SubstrDedupStream.initGramTable(spark, tableDir, corpus, "doc_id", "text", k = 3)
+      SubstrDedupStream.initGramTable(tableDir, corpus, "doc_id", "text", k = 3)
       val input = MemoryStream[MicroBatchIngestSpec.Doc]
       @volatile var armed = true
 
