@@ -2,10 +2,9 @@ package graft.ingest
 
 import scala.concurrent.Await
 import scala.concurrent.duration._
-import scala.jdk.CollectionConverters._
 import scala.util.Try
 
-import org.apache.spark.sql.{DataFrame, Dataset, Observation, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions.{count, lit}
 import org.apache.spark.sql.graftbridge.ListenerBridge
 
@@ -19,24 +18,26 @@ import org.apache.spark.sql.graftbridge.ListenerBridge
   * [[graft.streaming.MicroBatchIngest]], which shares the same
   * stages).
   *
-  * Scale posture: the batch is map-side until the dedup shuffle on the
-  * warehouse unique key; the dim upsert anti-joins against a broadcast
-  * of existing keys. The warehouse boundary is the pluggable [[Sinks]]
+  * Scale posture: the batch is parsed against a declared schema and is
+  * map-side until the dedup shuffle on the warehouse unique key; the new
+  * dims are settled on the driver from the batch's dim rows and the
+  * existing keys. The warehouse boundary is the pluggable [[Sinks]]
   * (JDBC in the reference via loaders/Readers.appendJdbc; parquet at
   * cluster scale; in-memory collectors in EtlJobSpec). A tick runs
-  * each Spark pass it needs once, and every count it reports comes from
-  * one of those passes (8 jobs a tick with parquet sinks, counting the
-  * sink's own footer read):
-  *   - `spark.read.json`'s schema inference, which is also the schema
-  *     check ([[IngestBatch.parseSnapshot]]; the `head(1)` empty guard
-  *     runs only when inference found no field);
-  *   - the new dims, collected to the driver once: that pass gives
-  *     `dimsInserted` and the local frame `insertDims` writes. The set
-  *     is driver-sized already, since the anti-join broadcasts every
-  *     existing key; a cached frame would cost a cache fill and a count
-  *     on top of the same pass;
-  *   - the sink's own fact write, which counts the deduped facts
-  *     through an [[Observation]] (no cache, no separate count).
+  * each Spark pass it needs once, and every count and check it reports
+  * comes from one of those passes (5 jobs a tick with parquet sinks,
+  * counting the sink's own footer read):
+  *   - the dims pass, one collect ([[IngestBatch.newDims]]): the batch's
+  *     dim rows, unioned with the existing keys. It parses the records
+  *     ([[IngestBatch.parseDeclared]], no inference job) and carries the
+  *     schema check as an [[Observation]] (record count, and each
+  *     required key's presence), read before any sink write. It gives
+  *     `dimsInserted` and the one-partition local frame `insertDims`
+  *     writes;
+  *   - the sink's dims write, of that local frame, when it has a row;
+  *   - the sink's own fact write, two jobs (the dedup shuffle map and
+  *     the write), which counts the deduped facts through an
+  *     [[Observation]] (no cache, no separate count).
   */
 object EtlJob {
 
@@ -48,7 +49,7 @@ object EtlJob {
     * `existingDimKeys` returns a frame with at least a `station_no`
     * column (the reference's `SELECT station_no FROM station_info`,
     * etl_job.py:120-121). `insertDims` gets the tick's new stations as
-    * a local frame, and only when there is at least one.
+    * a one-partition local frame, and only when there is at least one.
     * `appendFacts` must run the frame it is given exactly once, as a
     * Dataset action or write on it or on a frame derived from it:
     * `factsAppended` is counted by that run. A sink that returns
@@ -76,30 +77,38 @@ object EtlJob {
               attempts: Int = 3,
               backoffMs: Long = 2000): BatchResult = {
     val records = Retry.withBackoff(attempts, backoffMs)(fetch())
-    val raw = IngestBatch.parseSnapshot(spark, records, "station snapshot")
-    val (dim, fact) = IngestBatch.transform(raw)
+    val parsed = IngestBatch.parseDeclared(records)
 
-    val newDims = IngestBatch.newDimsOnly(dim, sinks.existingDimKeys(), "station_no")
-    val dimRows = newDims.collect()
+    val check = Observation()
+    val checks = IngestBatch.SnapshotCheck
+    val dim = IngestBatch.dims(
+      IngestBatch.snapshot(parsed.observe(check, checks.head, checks.tail: _*)))
+    val dimRows = IngestBatch.newDims(dim, sinks.existingDimKeys(), "station_no")
+    IngestBatch.requireSnapshot(
+      observed(spark, check).getOrElse(
+        throw new IllegalStateException("the dims pass recorded no snapshot check")),
+      "station snapshot")
     if (dimRows.nonEmpty)
-      sinks.insertDims(spark.createDataFrame(dimRows.toSeq.asJava, newDims.schema))
+      sinks.insertDims(IngestBatch.localFrame(spark, dimRows, dim.schema))
 
-    val observation = Observation()
-    sinks.appendFacts(
-      IngestBatch.dedupFacts(fact).observe(observation, count(lit(1)).as("rows")))
-    BatchResult(observedRows(spark, observation), dimRows.length)
-  }
-
-  /** The row count a sink's run recorded in `observation`. Spark
-    * completes it on the listener bus just after that run returns; once
-    * the bus has drained (bounded: `waitUntilEmpty` times out after
-    * 10 s), an observation still open means the sink never ran the
-    * frame. `Observation.get` would wait forever instead. */
-  private def observedRows(spark: SparkSession, observation: Observation): Long = {
-    if (Try(Await.ready(observation.future, 100.millis)).isFailure)
-      ListenerBridge.drain(spark.sparkContext)
-    observation.future.value.flatMap(_.toOption).map(_.getLong(0)).getOrElse(
+    val written = Observation()
+    sinks.appendFacts(IngestBatch.dedupFacts(IngestBatch.facts(IngestBatch.snapshot(parsed)))
+      .observe(written, count(lit(1)).as("rows")))
+    val factsAppended = observed(spark, written).map(_.getLong(0)).getOrElse(
       throw FactsNotWrittenException(
         "Sinks.appendFacts returned without running the facts frame it was given"))
+    BatchResult(factsAppended, dimRows.length)
+  }
+
+  /** The metrics a run recorded in `observation`, or None if nothing ran
+    * it. Spark completes an observation on the listener bus just after
+    * the run returns; once the bus has drained (bounded:
+    * `waitUntilEmpty` times out after 10 s), an observation still open
+    * means no run carried it. `Observation.get` would wait forever
+    * instead. */
+  private def observed(spark: SparkSession, observation: Observation): Option[Row] = {
+    if (Try(Await.ready(observation.future, 100.millis)).isFailure)
+      ListenerBridge.drain(spark.sparkContext)
+    observation.future.value.flatMap(_.toOption)
   }
 }

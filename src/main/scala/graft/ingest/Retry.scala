@@ -4,7 +4,7 @@ package graft.ingest
   * discipline (etl_job.py:64-80: timeout 30 s, 3 attempts, backoff
   * attempt×2 s). Task-level retries inside Spark cover the execution
   * side; this wraps the driver-side extract call that feeds
-  * [[IngestBatch.parseJson]]. */
+  * [[IngestBatch.parseDeclared]]. */
 object Retry {
   /** Run `fetch`, retrying up to `attempts` times with `backoffMs ×
     * attempt` sleeps between failures; rethrows the last error. Only

@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.{Artifacts, Tables}
@@ -318,34 +318,37 @@ object MlQueries extends Q.Registry {
         val aggs = fits.map { case (name, fit) =>
           sum((y - fit.score.column) * (y - fit.score.column)).as(s"sse_$name")
         } :+ count(lit(1)).cast("double").as("n")
+        // one literal struct per coefficient, with its model's SSE; se, t
+        // and p are then computed once over the exploded rows, so the
+        // generated code holds one copy of the p-value expression, not
+        // one per coefficient (which outgrew Java's 64 KB method limit)
         val rows = fits.flatMap { case (name, fit) =>
           val labels = inferenceLabels(fit)
           val coefs = fit.score.intercept +: fit.score.terms.map(_.coef)
           labels.indices.map { j =>
-            val dfRes = col("n") - lit(fit.rank.toDouble)
-            val nullD = lit(null).cast("double")
-            val (seC, tC, pC) =
-              if (fit.wellDetermined(j)) {
-                val se = sqrt(col(s"sse_$name") / dfRes * lit(fit.covDiag(j)))
-                val t = lit(coefs(j)) / se
-                (Fmt.t6(se), Fmt.t6(t),
-                  Fmt.t6(graft.functions.PValues.t(t, dfRes)))
-              } else (nullD, nullD, nullD)
             struct(
               lit(name).as("model"),
               lit(labels(j)).as("term"),
-              Fmt.t6(lit(coefs(j))).as("coef"),
-              seC.as("std_err"),
-              tC.as("t_stat"),
-              pC.as("p_value"),
-              dfRes.cast("long").as("df_resid"))
+              lit(coefs(j)).as("coef"),
+              lit(fit.covDiag(j)).as("cjj"),
+              lit(fit.rank.toDouble).as("rank"),
+              lit(fit.wellDetermined(j)).as("well_determined"),
+              col(s"sse_$name").as("sse"))
           }
         }
+        val r = (field: String) => col(s"r.$field")
+        val dfRes = col("n") - r("rank")
+        val se = sqrt(r("sse") / dfRes * r("cjj"))
+        val t = r("coef") / se
+        val inferred = (c: Column) => when(r("well_determined"), Fmt.t6(c))
         frame.agg(aggs.head, aggs.tail: _*)
-          .select(explode(array(rows: _*)).as("r"))
-          .select(col("r.model"), col("r.term"), col("r.coef"),
-            col("r.std_err"), col("r.t_stat"), col("r.p_value"),
-            col("r.df_resid"))
+          .select(explode(array(rows: _*)).as("r"), col("n"))
+          .select(r("model").as("model"), r("term").as("term"),
+            Fmt.t6(r("coef")).as("coef"),
+            inferred(se).as("std_err"),
+            inferred(t).as("t_stat"),
+            inferred(graft.functions.PValues.t(t, dfRes)).as("p_value"),
+            dfRes.cast("long").as("df_resid"))
           .orderBy("model", "term")
       },
       oracleFit(M1F).flatMap { f1 =>

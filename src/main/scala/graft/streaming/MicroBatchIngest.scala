@@ -15,7 +15,8 @@ import graft.ingest.IngestBatch
   *
   * Scale posture: dropDuplicatesWithinWatermark keeps per-key state
   * only inside the watermark horizon (bounded state, keyed shuffle);
-  * the dim upsert anti-join broadcasts the existing-keys side. At
+  * the dim upsert collects the batch's dims with the existing keys and
+  * settles the new ones on the driver (both are driver-sized). At
   * 100 TB/day the same topology holds — state size is
   * keys-per-watermark-window, not history.
   */
@@ -84,7 +85,9 @@ object MicroBatchIngest {
 
   /** Full sink wiring: watermark dedup, then per-micro-batch dim
     * upsert + fact append through user callbacks (the JDBC/parquet
-    * writes stay pluggable — tests use in-memory collectors). Dims go
+    * writes stay pluggable — tests use in-memory collectors). The dim
+    * upsert gets [[IngestBatch.newDims]] as a one-partition local frame,
+    * empty when no dim is new. Dims go
     * first, as in the reference (etl_job.py:125, then :129-132): a
     * fact's `station_no` references `station_info`
     * (sql/init_schema.sql:18-19). */
@@ -100,7 +103,9 @@ object MicroBatchIngest {
       .outputMode("append")
       .trigger(Trigger.ProcessingTime(triggerInterval))
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        upsertDims(IngestBatch.newDimsOnly(dims(batchId), existingDims(), "station_no"))
+        val incoming = dims(batchId)
+        upsertDims(IngestBatch.localFrame(batch.sparkSession,
+          IngestBatch.newDims(incoming, existingDims(), "station_no"), incoming.schema))
         appendFacts(batch)
       }
 }

@@ -2,6 +2,8 @@ package graft.ingest
 
 import java.sql.Timestamp
 
+import org.apache.spark.sql.functions.col
+
 import graft.SparkSpec
 
 /** Unit tests mirroring the reference's own pytest suite
@@ -36,14 +38,19 @@ class IngestBatchSpec extends SparkSpec {
     assert(e.missing === IngestBatch.RequiredSnapshot)
   }
 
+  /** The tick's parse: declared schema, required keys as columns. */
+  private def declared(records: Seq[String]) =
+    IngestBatch.snapshot(IngestBatch.parseDeclared(records.toDS()))
+
   test("one-row fixture transforms to exact dim+fact shapes (test_etl.py:31-57)") {
-    val raw = IngestBatch.parseJson(spark, fixtureJson.toDS())
-    val (dim, fact) = IngestBatch.transform(raw)
+    val raw = declared(fixtureJson)
+    val (dim, fact) = (IngestBatch.dims(raw), IngestBatch.facts(raw))
     assert(dim.columns.toSeq === Seq("station_no", "name_tw", "district", "lat", "lng", "total_spaces"))
     assert(fact.columns.toSeq === Seq("station_no", "bikes_available", "spaces_available", "record_time"))
     val d = dim.collect()(0)
     assert(d.getAs[String]("station_no") === "500101001")
     assert(d.getAs[Int]("total_spaces") === 28)
+    assert(d.getAs[Double]("lat") === 25.026)
     val f = fact.collect()(0)
     assert(f.getAs[Int]("bikes_available") === 10)
     // Taipei 08:30 wall → 00:30 UTC (the +8 h trap, session TZ UTC)
@@ -51,10 +58,25 @@ class IngestBatchSpec extends SparkSpec {
   }
 
   test("lenient cast coerces malformed numerics to null, not an ANSI error (P5, 01:65)") {
-    val raw = IngestBatch.parseJson(spark, Seq(
-      fixtureJson.head.replace("\"28\"", "\"N/A\"")).toDS())
-    val (dim, _) = IngestBatch.transform(raw)
+    val dim = IngestBatch.dims(declared(Seq(fixtureJson.head.replace("\"28\"", "\"N/A\""))))
     assert(dim.collect()(0).isNullAt(dim.columns.indexOf("total_spaces")))
+  }
+
+  test("lenientInt: one rule for any input type; a fractional value is null") {
+    val out = Seq(("28", 28L, 28.0, "28.5", 28.5, " 28 ")).toDF("s", "l", "d", "fs", "fd", "sp")
+      .select(Seq("s", "l", "d", "fs", "fd", "sp").map(c => IngestBatch.lenientInt(col(c))): _*)
+      .head()
+    assert(out.toSeq === Seq(28, 28, null, null, null, 28))
+  }
+
+  test("snapshot check: every line counts; a key held as null counts as present") {
+    val parsed = IngestBatch.parseDeclared(Seq(
+      """{"sno":"1","sna":null}""", """{"sno":"2"}""", "not json").toDS())
+    val row = parsed.agg(IngestBatch.SnapshotCheck.head, IngestBatch.SnapshotCheck.tail: _*).head()
+    assert(row.getLong(0) === 3)
+    assert(row.getBoolean(1) && row.getBoolean(2) && !row.getBoolean(3))
+    val e = intercept[IngestBatch.MissingColumnsException](IngestBatch.requireSnapshot(row, "x"))
+    assert(e.missing === IngestBatch.RequiredSnapshot.drop(2))
   }
 
   test("renameByMap: renames only existing sources and never clobbers an existing target (P3, 03:57-63)") {
@@ -67,26 +89,33 @@ class IngestBatchSpec extends SparkSpec {
   }
 
   test("dim dedup keeps one row per station; fact dedup drops unique-key replays (A8+S8)") {
-    val twoSnapshots = IngestBatch.parseJson(spark, (fixtureJson ++ fixtureJson).toDS())
-    val (dim, fact) = IngestBatch.transform(twoSnapshots)
-    assert(dim.count() === 1)
+    val raw = declared(fixtureJson ++ fixtureJson)
+    val existing = Seq.empty[String].toDF("station_no")
+    assert(IngestBatch.newDims(IngestBatch.dims(raw), existing, "station_no").size === 1)
+    val fact = IngestBatch.facts(raw)
     assert(fact.count() === 2)
     assert(IngestBatch.dedupFacts(fact).count() === 1)
   }
 
-  test("anti-join upsert inserts only unseen stations (J4, etl_job.py:121-122)") {
+  test("newDims inserts only unseen stations (J4, etl_job.py:121-122)") {
     val incoming = Seq(("a", 1), ("b", 2), ("c", 3)).toDF("station_no", "x")
     val existing = Seq(("b", 99)).toDF("station_no", "y")
-    val out = IngestBatch.newDimsOnly(incoming, existing, "station_no")
-      .select("station_no").as[String].collect().toSet
+    val out = IngestBatch.newDims(incoming, existing, "station_no").map(_.getString(0)).toSet
     assert(out === Set("a", "c"))
   }
 
-  test("anti-join upsert is unchanged by duplicated existing keys (no distinct needed)") {
-    val incoming = Seq(("a", 1), ("b", 2), ("c", 3), ("c", 4)).toDF("station_no", "x")
+  test("newDims: duplicated existing keys change nothing; first row per key") {
+    val incoming = Seq(("a", 1), ("b", 2), ("c", 3), ("c", 4), ("a", 5)).toDF("station_no", "x")
     val existing = Seq("b", "b", "c", "c", "c", "z").map(k => (k, 0)).toDF("station_no", "y")
-    val out = IngestBatch.newDimsOnly(incoming, existing, "station_no")
-      .as[(String, Int)].collect().toSeq
-    assert(out === Seq(("a", 1)))
+    val out = IngestBatch.newDims(incoming, existing, "station_no")
+    assert(out.map(r => (r.getString(0), r.getInt(1))) === Seq(("a", 1)))
+    assert(IngestBatch.localFrame(spark, out, incoming.schema).rdd.getNumPartitions === 1)
+  }
+
+  test("newDims: a null key matches no existing key and keeps one row; no new row, no rows") {
+    val incoming = Seq[(String, Int)]((null, 1), (null, 2), ("b", 3)).toDF("station_no", "x")
+    val existing = Seq[String](null, "b").toDF("station_no")
+    assert(IngestBatch.newDims(incoming, existing, "station_no").map(_.getInt(1)) === Seq(1))
+    assert(IngestBatch.newDims(incoming.where("x = 3"), existing, "station_no").isEmpty)
   }
 }

@@ -118,10 +118,10 @@ class JdbcSpec extends SparkSpec {
       url, "station_dim", props)
     val existing = Readers.readJdbc(spark, url, "station_dim", props)
       .select("station_no")
-    // the J4 anti-join consumes exactly this shape
+    // the J4 new-dims collect consumes exactly this shape
     val incoming = Seq("s2", "s9").toDF("station_no")
-    val newOnly = graft.ingest.IngestBatch.newDimsOnly(incoming, existing, "station_no")
-      .as[String].collect().toSet
+    val newOnly = graft.ingest.IngestBatch.newDims(incoming, existing, "station_no")
+      .map(_.getString(0)).toSet
     assert(newOnly === Set("s9"))
   }
 }

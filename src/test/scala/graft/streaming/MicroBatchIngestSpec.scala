@@ -37,12 +37,15 @@ class MicroBatchIngestSpec extends SparkSpec {
         collected ++= rows
       },
       upsertDims = b => dimLog.synchronized {
+        // the new dims come as one local partition: one file per append
+        assert(b.rdd.getNumPartitions === 1)
         val ids = b.select("station_no").as[String].collect()
         dimLog ++= ids
         existing = existing ++ ids
       },
-      // the station registry (the reference's station-info source)
-      dims = _ => Seq("s1", "s2").toDF("station_no"),
+      // the station registry (the reference's station-info source), with
+      // a repeated row: the upsert keeps the first row per key
+      dims = _ => Seq("s1", "s2", "s2").toDF("station_no"),
       existingDims = () => dimLog.synchronized(existing).toDF("station_no"),
       triggerInterval = "0 seconds")
       .option("checkpointLocation",
@@ -69,7 +72,7 @@ class MicroBatchIngestSpec extends SparkSpec {
       ("s2", ts("2024-03-01 08:10:00")))
     assert(collected.toSet === expected, s"got ${collected.toSet}")
     // dim upsert: s1 pre-existing → only s2 ever inserted, exactly once
-    assert(dimLog.toSet === Set("s2"), s"dims inserted: $dimLog")
+    assert(dimLog.toSeq === Seq("s2"), s"dims inserted: $dimLog")
   }
 
   test("hourlyWindowStats: tumbling event-time windows equal the batch hourly rollup") {
