@@ -16,7 +16,7 @@ import org.apache.spark.sql.graftbridge.ListenerBridge
   * 10-minute tick of the reference's loop (dags/youbike_dag.py:135);
   * scheduling stays outside (cron / Airflow / Structured Streaming via
   * [[graft.streaming.MicroBatchIngest]], which shares the same
-  * stages).
+  * stages and loads through the same [[Sinks]]).
   *
   * Scale posture: the batch is parsed against a declared schema and is
   * map-side until the dedup shuffle on the warehouse unique key; the new

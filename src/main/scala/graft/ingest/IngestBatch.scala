@@ -37,21 +37,14 @@ object IngestBatch {
   val RequiredInfo: Seq[String] = Seq("sno", "sna", "sarea", "latitude", "longitude", "Quantity")
   val RequiredStatus: Seq[String] = Seq("sno", "available_rent_bikes", "available_return_bikes", "srcUpdateTime")
 
-  /** S1 analog under schema inference: parse a batch of JSON record
-    * strings (one object per station snapshot row) into a DataFrame.
-    * The inference is a Spark job of its own, and it sets the column
-    * types; [[parseDeclared]] is the tick's parse. */
-  def parseJson(spark: SparkSession, records: Dataset[String]): DataFrame =
-    spark.read.json(records)
-
   /** The tick's snapshot columns: every `RequiredInfo` key and the
     * status keys after `sno`. */
   val RequiredSnapshot: Seq[String] = RequiredInfo ++ RequiredStatus.drop(1)
 
   /** The declared schema of one snapshot record: a JSON object whose
     * values are kept as their JSON text (a number's digits, a string's
-    * content, null for a JSON null). [[dims]] and [[facts]] cast every
-    * field, so a field's type never depends on which records share its
+    * content, null for a JSON null). Every reader casts the fields it
+    * takes, so a field's type never depends on which records share its
     * batch. */
   val SnapshotRecord: MapType = MapType(StringType, StringType)
 
@@ -62,10 +55,11 @@ object IngestBatch {
   def parseDeclared(records: Dataset[String]): DataFrame =
     records.select(from_json(col(records.columns.head), SnapshotRecord).as("m"))
 
-  /** The snapshot check, as the metrics of an `Observation` on a pass
-    * over [[parseDeclared]]'s frame: the record count `n`, then for each
-    * `RequiredSnapshot` key whether some record holds it (null counts as
-    * held). [[requireSnapshot]] reads the row. */
+  /** The snapshot check, as aggregates over [[parseDeclared]]'s frame:
+    * the record count `n`, then for each `RequiredSnapshot` key whether
+    * some record holds it (null counts as held). The tick observes them
+    * on its dims pass; ing1 runs them as one aggregate at build.
+    * [[requireSnapshot]] reads the row. */
   val SnapshotCheck: Seq[Column] =
     count(lit(1)).as("n") +:
       RequiredSnapshot.map(k => max(map_contains_key(col("m"), lit(k))).as(k))
@@ -89,36 +83,6 @@ object IngestBatch {
   def snapshot(parsed: DataFrame): DataFrame =
     parsed.where(col("m").isNotNull)
       .select(RequiredSnapshot.map(k => col("m").getItem(k).as(k)): _*)
-
-  /** Parse and guard under schema inference. ing1 is its only caller:
-    * its oracle pins the inferred types. The tick itself parses with
-    * [[parseDeclared]]. Only a batch that inferred no field, which is
-    * either empty or all `{}` records, runs the [[requireNonEmpty]] job;
-    * so an empty batch raises [[EmptyBatchException]], a batch of
-    * fieldless records [[MissingColumnsException]], and any other batch
-    * is checked from its schema alone. */
-  def parseSnapshot(spark: SparkSession, records: Dataset[String], what: String): DataFrame = {
-    val raw = parseJson(spark, records)
-    if (raw.schema.isEmpty) requireNonEmpty(raw, what)
-    validate(raw, RequiredSnapshot)
-  }
-
-  /** F7: raise on an empty extract. An eager Spark job of its own:
-    * `head(1)` re-parses the batch, and on an empty one its limit scan
-    * widens over every partition, so it may take more than one job.
-    * [[parseSnapshot]] runs it only when inference found no field. */
-  def requireNonEmpty(df: DataFrame, what: String): DataFrame = {
-    if (df.head(1).isEmpty) throw EmptyBatchException(s"empty extract: $what")
-    df
-  }
-
-  /** Schema validation by name; raises with ALL missing columns listed
-    * (etl_job.py:92-97). Schema-only — triggers no job. */
-  def validate(df: DataFrame, required: Seq[String]): DataFrame = {
-    val missing = required.filterNot(df.columns.contains)
-    if (missing.nonEmpty) throw MissingColumnsException(missing)
-    df
-  }
 
   /** P3: map-based rename applied only where the source column exists
     * and the target doesn't (03:57-63 duplicate-name guard). */

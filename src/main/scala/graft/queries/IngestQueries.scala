@@ -173,17 +173,26 @@ object IngestQueries extends Q.Registry {
           date_format(from_utc_timestamp(col("record_time"), "Asia/Taipei"),
             "yyyy-MM-dd HH:mm:ss.SSSSSS").as("srcUpdateTime"),
           col("event_id"))).as("json")).as[String]
-        val raw = IngestBatch.parseSnapshot(s, records, "events snapshot")
+        // The tick's parse and check (one aggregate at build). The keys
+        // are read straight from the map, as JSON text cast below:
+        // `IngestBatch.snapshot`'s line drop is a filter, and the
+        // optimizer pushes it below the parse, parsing each record twice.
+        val parsed = IngestBatch.parseDeclared(records)
+        val checks = IngestBatch.SnapshotCheck
+        IngestBatch.requireSnapshot(parsed.agg(checks.head, checks.tail: _*).head(),
+          "events snapshot")
+        val raw = parsed.select(
+          (IngestBatch.RequiredSnapshot :+ "event_id").map(k => col("m").getItem(k).as(k)): _*)
         val renamed = IngestBatch.renameByMap(raw, Map(
           "sno" -> "station_no", "sna" -> "name_tw", "sarea" -> "district",
           "srcUpdateTime" -> "record_time_tpe"))
         renamed.select(
-          col("event_id"),
-          col("station_no").cast("string").as("station_no"),
+          col("event_id").cast("long").as("event_id"),
+          col("station_no"),
           Derive.stripPrefix(col("name_tw"), "Customer#").as("station_code"),
           col("district"),
           IngestBatch.lenientInt(col("Quantity")).as("total_spaces"),
-          col("available_rent_bikes").as("bikes_available"),
+          col("available_rent_bikes").cast("double").as("bikes_available"),
           Derive.taipeiToUtc(to_timestamp(col("record_time_tpe"),
             "yyyy-MM-dd HH:mm:ss.SSSSSS")).as("record_time"))
       },

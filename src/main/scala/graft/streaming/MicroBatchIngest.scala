@@ -5,12 +5,13 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode, Trigger}
 import org.apache.spark.sql.Row
 
-import graft.ingest.IngestBatch
+import graft.ingest.{EtlJob, IngestBatch}
 
 /** Streaming ingest (SURVEY §2.9): the reference's 10-minute poll loop
   * (etl_job.py:141-149, every-10-min cron at dags/youbike_dag.py:135) mapped to
   * Structured Streaming — micro-batch trigger, watermarked dedup on
-  * the warehouse unique key, and the insert-only dim upsert as a
+  * the warehouse unique key, and the tick's insert-only dim upsert and
+  * fact append, through the tick's [[graft.ingest.EtlJob.Sinks]], as a
   * foreachBatch step.
   *
   * Scale posture: dropDuplicatesWithinWatermark keeps per-key state
@@ -22,12 +23,15 @@ import graft.ingest.IngestBatch
   */
 object MicroBatchIngest {
 
+  /** The event-time horizon of every watermark here. */
+  val Watermark = "1 hour"
+
   /** Watermarked exactly-once-ish dedup on (station_no, record_time) —
     * the streaming analog of the DB unique key (sql/init_schema.sql:17,
     * IntegrityError-skip at etl_job.py:129-132). */
-  def dedupWithinWatermark(facts: DataFrame, watermark: String = "1 hour"): DataFrame =
+  def dedupWithinWatermark(facts: DataFrame): DataFrame =
     facts
-      .withWatermark("record_time", watermark)
+      .withWatermark("record_time", Watermark)
       .dropDuplicatesWithinWatermark("station_no", "record_time")
 
   /** §2.9 watermarked windowed aggregation: tumbling 1-hour windows
@@ -35,9 +39,9 @@ object MicroBatchIngest {
     * hourly rollup. Watermark bounds the window state ledger: windows
     * older than the horizon are finalized and dropped, so state is
     * (stations × open windows), not history. */
-  def hourlyWindowStats(facts: DataFrame, watermark: String = "1 hour"): DataFrame =
+  def hourlyWindowStats(facts: DataFrame): DataFrame =
     facts
-      .withWatermark("record_time", watermark)
+      .withWatermark("record_time", Watermark)
       .groupBy(window(col("record_time"), "1 hour"), col("station_no"))
       .agg(count(lit(1)).as("n"), avg("bikes_available").as("avg_bikes"))
 
@@ -72,40 +76,35 @@ object MicroBatchIngest {
     * shuffle is keyed on the window like any stream-stream join).
     * Inner join: a late reading (arriving past the watermark) simply
     * produces no pairs — the spec pins that drop. */
-  def hourlyStreamJoin(facts: DataFrame, readings: DataFrame,
-                       factTime: String = "record_time",
-                       readingTime: String = "obs_time",
-                       watermark: String = "1 hour"): DataFrame = {
-    val l = facts.withWatermark(factTime, watermark)
-      .withColumn("hour_window", window(col(factTime), "1 hour"))
-    val r = readings.withWatermark(readingTime, watermark)
-      .withColumn("hour_window", window(col(readingTime), "1 hour"))
+  def hourlyStreamJoin(facts: DataFrame, readings: DataFrame): DataFrame = {
+    val l = facts.withWatermark("record_time", Watermark)
+      .withColumn("hour_window", window(col("record_time"), "1 hour"))
+    val r = readings.withWatermark("obs_time", Watermark)
+      .withColumn("hour_window", window(col("obs_time"), "1 hour"))
     l.join(r, Seq("hour_window"))
   }
 
-  /** Full sink wiring: watermark dedup, then per-micro-batch dim
-    * upsert + fact append through user callbacks (the JDBC/parquet
-    * writes stay pluggable — tests use in-memory collectors). The dim
-    * upsert gets [[IngestBatch.newDims]] as a one-partition local frame,
-    * empty when no dim is new. Dims go
-    * first, as in the reference (etl_job.py:125, then :129-132): a
-    * fact's `station_no` references `station_info`
+  /** Full sink wiring: watermark dedup, then each micro-batch loads
+    * through the tick's [[EtlJob.Sinks]] by the tick's rule. `dims`
+    * gives the batch's incoming dim rows; their [[IngestBatch.newDims]]
+    * go first, as one one-partition local frame to `insertDims`, and
+    * only when one is new; then the batch's facts go to `appendFacts`.
+    * Dims go first as in the reference (etl_job.py:125, then
+    * :129-132): a fact's `station_no` references `station_info`
     * (sql/init_schema.sql:18-19). */
   def writer(facts: DataFrame,
-             appendFacts: DataFrame => Unit,
-             upsertDims: DataFrame => Unit,
              dims: Long => DataFrame,
-             existingDims: () => DataFrame,
-             triggerInterval: String = "10 minutes",
-             watermark: String = "1 hour"): DataStreamWriter[Row] =
-    dedupWithinWatermark(facts, watermark)
+             sinks: EtlJob.Sinks,
+             triggerInterval: String = "10 minutes"): DataStreamWriter[Row] =
+    dedupWithinWatermark(facts)
       .writeStream
       .outputMode("append")
       .trigger(Trigger.ProcessingTime(triggerInterval))
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val incoming = dims(batchId)
-        upsertDims(IngestBatch.localFrame(batch.sparkSession,
-          IngestBatch.newDims(incoming, existingDims(), "station_no"), incoming.schema))
-        appendFacts(batch)
+        val newDims = IngestBatch.newDims(incoming, sinks.existingDimKeys(), "station_no")
+        if (newDims.nonEmpty)
+          sinks.insertDims(IngestBatch.localFrame(batch.sparkSession, newDims, incoming.schema))
+        sinks.appendFacts(batch)
       }
 }

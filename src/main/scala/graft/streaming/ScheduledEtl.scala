@@ -37,14 +37,14 @@ import graft.ingest.EtlJob
   * still replays that tick — close it by making the warehouse write
   * and the marker one transaction (JDBC), or by keying warehouse rows
   * on (batch_id, unique key) with insert-or-ignore — the
-  * dedup-on-conflict sink (S8, IngestBatch.appendDeduped) is the
-  * batch-side building block.
+  * within-batch dedup on the warehouse key (S8, IngestBatch.dedupFacts)
+  * is the batch-side building block.
   *
   * Scale posture: the tick stream is one row per trigger — all real
-  * work happens inside runOnce's plan, which is map-side until the
-  * dedup shuffle and broadcasts the dim anti-join (see EtlJob). The
-  * scheduling layer adds no shuffle and no state beyond the rate
-  * source's offset checkpoint.
+  * work happens inside runOnce's Spark passes: one collect that settles
+  * the new dims on the driver, and the facts' dedup shuffle on the
+  * warehouse key (see EtlJob). The scheduling layer adds no shuffle
+  * and no state beyond the rate source's offset checkpoint.
   */
 object ScheduledEtl {
 

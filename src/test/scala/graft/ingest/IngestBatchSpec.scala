@@ -17,25 +17,27 @@ class IngestBatchSpec extends SparkSpec {
       |"available_rent_bikes":10,"available_return_bikes":18,
       |"srcUpdateTime":"2024-03-01 08:30:00"}""".stripMargin.replaceAll("\n", ""))
 
+  /** The snapshot check's row over the declared parse of `records`. */
+  private def checked(records: Seq[String]) = {
+    val checks = IngestBatch.SnapshotCheck
+    IngestBatch.parseDeclared(records.toDS()).agg(checks.head, checks.tail: _*).head()
+  }
+
   test("empty extract raises (F7, test_etl.py:18-21)") {
-    val raw = IngestBatch.parseJson(spark, spark.emptyDataset[String])
     assertThrows[IngestBatch.EmptyBatchException](
-      IngestBatch.requireNonEmpty(raw, "snapshot"))
+      IngestBatch.requireSnapshot(checked(Nil), "snapshot"))
   }
 
   test("missing required columns raise with every missing name (test_etl.py:24-28)") {
-    val raw = IngestBatch.parseJson(spark, Seq("""{"sno":"1","sna":"x"}""").toDS())
     val e = intercept[IngestBatch.MissingColumnsException](
-      IngestBatch.validate(raw, IngestBatch.RequiredInfo))
+      IngestBatch.requireSnapshot(checked(Seq("""{"sno":"1","sna":"x",""" +
+        """"available_rent_bikes":1,"available_return_bikes":2,"srcUpdateTime":"t"}""")),
+        "snapshot"))
     assert(e.missing.toSet === Set("sarea", "latitude", "longitude", "Quantity"))
-  }
-
-  test("parseSnapshot: an empty batch is empty, a batch of {} records is missing columns") {
-    intercept[IngestBatch.EmptyBatchException](
-      IngestBatch.parseSnapshot(spark, spark.emptyDataset[String], "snapshot"))
-    val e = intercept[IngestBatch.MissingColumnsException](
-      IngestBatch.parseSnapshot(spark, Seq("{}", "{}").toDS(), "snapshot"))
-    assert(e.missing === IngestBatch.RequiredSnapshot)
+    // a batch of fieldless records is missing every key, not empty
+    val all = intercept[IngestBatch.MissingColumnsException](
+      IngestBatch.requireSnapshot(checked(Seq("{}", "{}")), "snapshot"))
+    assert(all.missing === IngestBatch.RequiredSnapshot)
   }
 
   /** The tick's parse: declared schema, required keys as columns. */
@@ -70,9 +72,7 @@ class IngestBatchSpec extends SparkSpec {
   }
 
   test("snapshot check: every line counts; a key held as null counts as present") {
-    val parsed = IngestBatch.parseDeclared(Seq(
-      """{"sno":"1","sna":null}""", """{"sno":"2"}""", "not json").toDS())
-    val row = parsed.agg(IngestBatch.SnapshotCheck.head, IngestBatch.SnapshotCheck.tail: _*).head()
+    val row = checked(Seq("""{"sno":"1","sna":null}""", """{"sno":"2"}""", "not json"))
     assert(row.getLong(0) === 3)
     assert(row.getBoolean(1) && row.getBoolean(2) && !row.getBoolean(3))
     val e = intercept[IngestBatch.MissingColumnsException](IngestBatch.requireSnapshot(row, "x"))
