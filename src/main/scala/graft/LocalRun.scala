@@ -117,8 +117,8 @@ object LocalRun {
 
   /** Write `df` as ONE parquet FILE at `dest` (not a directory) — the
     * layout the driver's testdata uses and the file-addressed readers
-    * (DuckDB `read_parquet`, the file-stream sources' staged arrival
-    * days) expect. Spark only writes directories, so this stages to
+    * (DuckDB `read_parquet`, [[graft.streaming.BoundedStream.arrivals]]'
+    * one-file-per-trigger days) expect. Spark only writes directories, so this stages to
     * `<dest>_tmp/`, moves the single part file out, and removes the
     * staging dir. */
   def writeSingleParquet(df: DataFrame, dest: java.nio.file.Path): Unit = {
@@ -133,8 +133,10 @@ object LocalRun {
     java.nio.file.Files.delete(tmp)
   }
 
-  /** Recursive delete for the temp trees the staged-stream queries
-    * create (children before parents; missing files tolerated). */
+  /** Recursive delete of a scratch tree (children before parents;
+    * missing files tolerated): a [[graft.streaming.BoundedStream]]
+    * drain's root, an [[Artifacts]] entry's tree, a scale leg's
+    * inflated dir. */
   def deleteRecursively(root: java.nio.file.Path): Unit = {
     if (java.nio.file.Files.exists(root)) {
       val f = root.toFile

@@ -6,7 +6,8 @@ object Verify {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
     // optional trailing query names → dump only those (dev iteration
-    // with tools/check.py); the driver always runs the full set
+    // with tools/localverify.py's trailing names); a full check runs
+    // the whole set
     val only: Set[String] = args.drop(2).toSet
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = LocalRun.session(cpus.toInt)

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.{Artifacts, Tables}
 import graft.llm.{Dedup, Similarity, TextOps}
 import graft.ops.Sketches
+import graft.streaming.BoundedStream
 
 /** The corpus streams (st6-st18; event streams live in
   * [[IngestQueries]]): each oracle replays the arrival batches one by
@@ -14,7 +15,6 @@ object CorpusStreamQueries extends Q.Registry {
   import Corpus.{LowerWordsSql, truncateLastWord}
   import DedupQueries.{Bands, MinhashK, RowsPerBand, signSqlFor,
     verifiedPairsShared, verifiedPairsSql}
-  import IngestQueries.stageArrivalDays
   import SearchQueries.{persistedInt8Dir, q8of, ss7ChainSql, ss7OracleSql}
 
   /** tx16's word lists (`<p>t`), tokens (`<p>tok`) and 8-grams (`<p>g`)
@@ -129,21 +129,12 @@ object CorpusStreamQueries extends Q.Registry {
         |       doc = group_id AS is_canonical
         |FROM comp ORDER BY doc""".stripMargin
 
-  /** Unbounded file stream over the documents table — the new-batch
-    * axis of the st6 streaming curation query (shared bounded-stream
-    * plumbing: [[IngestQueries.boundedTableStream]]). */
-  private def docsStream(s: SparkSession, d: String): DataFrame =
-    IngestQueries.boundedTableStream(s, d, "documents.parquet")
-      .select(col("doc_id"), col("text"))
-
   /** The two staged arrival days st7 AND st12 replay — day 1: replayed
     * 12-word heads + novel nv_ tails; day 2: day 1's nv_ tails as
     * heads + fresh nw_ tails. ONE definition (r11 review): the same
     * fixture exists as the substrIncrementalSql oracle's nb1/nb2 CTEs,
-    * and a third hand-written copy would triple the drift surface.
-    * Returns (day1, day2, stream schema). */
-  private def substrDedupBatches(docs: DataFrame)
-      : (DataFrame, DataFrame, org.apache.spark.sql.types.StructType) = {
+    * and a third hand-written copy would triple the drift surface. */
+  private def substrDedupBatches(docs: DataFrame): Seq[DataFrame] = {
     val ws = TextOps.words(col("text"))
     val nvTail = transform(slice(ws, 13, 1 << 20), w => concat(lit("nv_"), w))
     val batch1 = docs.filter(col("doc_id") % 50 === 0).select(
@@ -154,10 +145,7 @@ object CorpusStreamQueries extends Q.Registry {
       array_join(concat(nvTail,
         transform(slice(ws, 1, 12), w => concat(lit("nw_"), w))), " ")
         .as("text"))
-    val schema = new org.apache.spark.sql.types.StructType()
-      .add("doc_id", org.apache.spark.sql.types.LongType)
-      .add("text", org.apache.spark.sql.types.StringType)
-    (batch1, batch2, schema)
+    Seq(batch1, batch2)
   }
 
   /** The store `<dir>/base` plus one `<dir>/batch=<b>` per earlier
@@ -167,27 +155,6 @@ object CorpusStreamQueries extends Q.Registry {
                                  batchId: Long, suffix: String = ""): Seq[String] =
     stage.resolve(s"$dir/base$suffix").toString +:
       (0L until batchId).map(i => stage.resolve(s"$dir/batch=$i$suffix").toString)
-
-  /** Replays `days` as a real file stream, one micro-batch per day
-    * handed to `body` with its batch id, checkpointed under `stage`;
-    * the staged files and the checkpoint go once the stream drains. */
-  private[queries] def replayArrivals(s: SparkSession, stage: java.nio.file.Path,
-      days: Seq[DataFrame], prefix: String,
-      schema: org.apache.spark.sql.types.StructType)
-      (body: (DataFrame, Long) => Unit): Unit = {
-    val (arr, inDir) = stageArrivalDays(days, prefix)
-    s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(inDir.toString)
-      .writeStream
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .option("checkpointLocation", stage.resolve("ckpt").toString)
-      .foreachBatch(body)
-      .start()
-      .awaitTermination()
-    graft.LocalRun.deleteRecursively(inDir)
-    graft.LocalRun.deleteRecursively(arr)
-    graft.LocalRun.deleteRecursively(stage.resolve("ckpt"))
-  }
 
   /** st16/st17's planted arrival batches — the embedding analog of
     * dd11/mm10's two-tier replays, derived from the base corpus so the
@@ -334,12 +301,8 @@ object CorpusStreamQueries extends Q.Registry {
       emb.select(col("vec_id"), col("embedding"),
           q8of(col("embedding")).as("q8"))
         .write.mode("overwrite").parquet(stage.resolve("idx/base").toString)
-      val schema = new org.apache.spark.sql.types.StructType()
-        .add("vec_id", org.apache.spark.sql.types.LongType)
-        .add("embedding", org.apache.spark.sql.types.ArrayType(
-          org.apache.spark.sql.types.FloatType))
-      replayArrivals(s, stage, Seq(embBatch1(emb), embBatch2(emb)),
-          "graft_st16_in_", schema) { (b, batchId) =>
+      BoundedStream.foreachBatch(
+          BoundedStream.arrivals(_, Seq(embBatch1(emb), embBatch2(emb)))) { (b, batchId) =>
         val cur = s.read.parquet(storeAsOf(stage, "idx", batchId): _*)
         // the batch is read through four arms (coarse, verify, both
         // self-join sides) + the append — cache the quantized frame
@@ -525,11 +488,8 @@ object CorpusStreamQueries extends Q.Registry {
           "doc_a", "doc_b"),
         stage.resolve("labels"), "base")
       val docs = Tables.documents(s, d)
-      val schema = new org.apache.spark.sql.types.StructType()
-        .add("doc_a", org.apache.spark.sql.types.LongType)
-        .add("doc_b", org.apache.spark.sql.types.LongType)
-      replayArrivals(s, stage, Seq(pairBatch1(docs), pairBatch2(docs)),
-          "graft_st18_in_", schema) { (b, batchId) =>
+      BoundedStream.foreachBatch(
+          BoundedStream.arrivals(_, Seq(pairBatch1(docs), pairBatch2(docs)))) { (b, batchId) =>
         val labelPaths = storeAsOf(stage, "labels", batchId)        // doc-bucketed
         val grpPaths = storeAsOf(stage, "labels", batchId, "ByGrp") // group-bucketed
         // the batch is read through several plan arms — pin it once
@@ -599,8 +559,7 @@ object CorpusStreamQueries extends Q.Registry {
       (s, d) => {
         val emb = Tables.embeddings(s, d)
         val stored = s.read.parquet(persistedInt8Dir(s, d))
-        val qStream = IngestQueries
-          .boundedTableStream(s, d, "embeddings.parquet")
+        val qStream = BoundedStream.table(s, d, "embeddings.parquet")
           .filter(col("vec_id") % 100 === 0)
           .select(col("vec_id").as("q_id"), col("embedding").as("q_vec"))
         // topk/ outlives the returned frame's lazy read: one live stage
@@ -609,24 +568,17 @@ object CorpusStreamQueries extends Q.Registry {
         val stage = Artifacts.replace(Artifacts.Jvm, "", "st15_stage")(
           _.tree(java.nio.file.Files.createTempDirectory("graft_st15_")))
         val outDir = stage.resolve("topk").toString
-        val q = qStream.writeStream
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .option("checkpointLocation", stage.resolve("ckpt").toString)
-          .foreachBatch { (b: org.apache.spark.sql.DataFrame, batchId: Long) =>
-            // batchId-keyed overwrite (the st12 versioned-dir pattern),
-            // NOT append: a micro-batch retry after a partial write
-            // must replace its own directory, never double-append —
-            // ranks are computed before the sink, so duplicated rows
-            // would diverge from the shared ss7 oracle (r13 ADVICE)
-            graft.llm.Similarity.int8RefineTopKStored(stored, "vec_id", "q8",
-                emb.select("vec_id", "embedding"), "embedding",
-                b, "q_id", "q_vec", shortlist = 20, k = 5)
-              .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
-            ()
-          }
-          .start()
-        q.awaitTermination()
-        graft.LocalRun.deleteRecursively(stage.resolve("ckpt"))
+        BoundedStream.foreachBatch(_ => qStream) { (b, batchId) =>
+          // batchId-keyed overwrite (the st12 versioned-dir pattern),
+          // NOT append: a micro-batch retry after a partial write
+          // must replace its own directory, never double-append —
+          // ranks are computed before the sink, so duplicated rows
+          // would diverge from the shared ss7 oracle (r13 ADVICE)
+          graft.llm.Similarity.int8RefineTopKStored(stored, "vec_id", "q8",
+              emb.select("vec_id", "embedding"), "embedding",
+              b, "q_id", "q_vec", shortlist = 20, k = 5)
+            .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
+        }
         s.read.parquet(outDir)
           .select(col("query_id"), col("neighbor_id"),
             Fmt.trunc(col("cos_sim"), 4).as("cos_sim"), col("rank"))
@@ -752,7 +704,8 @@ object CorpusStreamQueries extends Q.Registry {
         "band collisions and applies the signature-agreement " +
         "threshold. Oracle: the vs-existing arm of dd11 in batch.",
       (s, d) => {
-        val newBatch = docsStream(s, d)
+        val newBatch = BoundedStream.table(s, d, "documents.parquet")
+          .select(col("doc_id"), col("text"))
           .filter(col("doc_id") % 50 === 0)
           .select((col("doc_id") + 1000000L).as("doc_id"),
             truncateLastWord(col("text")).as("text"))
@@ -773,7 +726,7 @@ object CorpusStreamQueries extends Q.Registry {
           .select(col("new_doc"), col("matched_doc"),
             Fmt.t6(Dedup.sigSimilarity(col("new_sig"), col("old_sig")))
               .as("sig_sim"))
-        IngestQueries.runToMemory(s, matches, "st6_out_", "append")
+        BoundedStream.toMemory(s, "append")(_ => matches)
           // the same pair can collide in several bands; sig_sim is a pure
           // function of the pair, so max == the value
           .groupBy("new_doc", "matched_doc").agg(max("sig_sim").as("sig_sim"))
@@ -822,16 +775,12 @@ object CorpusStreamQueries extends Q.Registry {
       (s, d) => {
         val k = 8
         val docs = Tables.documents(s, d)
-        val (batch1, batch2, schema) = substrDedupBatches(docs)
-        // stage the two arrival days as single files with pinned
-        // mod-times: the file source takes one file per micro-batch,
-        // oldest first — a real two-trigger replay, not a simulation
-        val (stage, inDir) = stageArrivalDays(Seq(batch1, batch2), "graft_st7_")
-        // the stage root will hold cleaned/, which the returned lazy
-        // frame reads — one live tree per query: registering this run's
-        // root deletes the previous run's tree NOW (its frame is
-        // consumed), and JVM exit sweeps the current one (r11 + r12 ADVICE)
-        Artifacts.replace(Artifacts.Jvm, "", "st7_stage")(_.tree(stage))
+        // the stage root holds cleaned/, which the returned lazy frame
+        // reads — one live tree per query: registering this run's root
+        // deletes the previous run's tree NOW (its frame is consumed),
+        // and JVM exit sweeps the current one (r11 + r12 ADVICE)
+        val stage = Artifacts.replace(Artifacts.Jvm, "", "st7_stage")(
+          _.tree(java.nio.file.Files.createTempDirectory("graft_st7_")))
         // the persisted index: corpus gram counts, built once per
         // (session, dir) — micro-batches join the MATERIALIZED table,
         // never re-explode corpus text (the st6 signature-table note)
@@ -839,30 +788,20 @@ object CorpusStreamQueries extends Q.Registry {
           Dedup.gramCounts(docs, "doc_id", "text", k))
         var table = baseTable
         val outDir = stage.resolve("cleaned").toString
-        val q = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", 1).parquet(inDir.toString)
-          .writeStream
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .option("checkpointLocation", stage.resolve("ckpt").toString)
-          .foreachBatch { (b: DataFrame, _: Long) =>
-            val cleaned = Dedup.duplicateSpansIncremental(
-              table, b, "doc_id", "text", k)
-            cleaned.write.mode("append").parquet(outDir)
-            val advanced = Dedup.advanceGramCounts(
-              table, b, "doc_id", "text", k).cache()
-            advanced.count() // materialize while the batch frame is live
-            if (!(table eq baseTable)) table.unpersist(blocking = false)
-            table = advanced
-            ()
-          }
-          .start()
-        q.awaitTermination()
+        // the two arrival days, one file per micro-batch, oldest first
+        // — a real two-trigger replay, not a simulation
+        BoundedStream.foreachBatch(
+            BoundedStream.arrivals(_, substrDedupBatches(docs))) { (b, _) =>
+          val cleaned = Dedup.duplicateSpansIncremental(
+            table, b, "doc_id", "text", k)
+          cleaned.write.mode("append").parquet(outDir)
+          val advanced = Dedup.advanceGramCounts(
+            table, b, "doc_id", "text", k).cache()
+          advanced.count() // materialize while the batch frame is live
+          if (!(table eq baseTable)) table.unpersist(blocking = false)
+          table = advanced
+        }
         if (!(table eq baseTable)) table.unpersist(blocking = false)
-        // the returned frame reads only cleaned/ — drop the staged
-        // arrival days and checkpoint state so repeated builds (bench
-        // fitmed3 runs, plan audits, verify) don't accumulate /tmp trees
-        graft.LocalRun.deleteRecursively(inDir)
-        graft.LocalRun.deleteRecursively(stage.resolve("ckpt"))
         s.read.parquet(outDir).orderBy("doc_id")
       },
       Some(substrIncrementalSql)),
@@ -886,26 +825,19 @@ object CorpusStreamQueries extends Q.Registry {
       (s, d) => {
         val k = 64
         val docs = Tables.documents(s, d).select("doc_id", "lang", "text")
-        val (stage, inDir) = stageArrivalDays(
-          Seq(docs.filter(col("doc_id") % 2 === 0),
-            docs.filter(col("doc_id") % 2 =!= 0)), "graft_st8_")
-        val agg = s.readStream.schema(docs.schema)
-          .option("maxFilesPerTrigger", 1).parquet(inDir.toString)
-          .select(col("lang"),
-            explode(TextOps.wordShingles(TextOps.words(col("text")), 2))
-              .as("tok"))
-          .groupBy("lang")
-          .agg(Sketches.kmvSketch(Sketches.hash60(col("tok")), k).as("sk"))
-        val out = IngestQueries.runToMemory(s, agg, "st8_out_", "complete")
-          .select(col("lang"),
+        BoundedStream.toMemory(s, "complete") { sc =>
+          BoundedStream.arrivals(sc, Seq(docs.filter(col("doc_id") % 2 === 0),
+              docs.filter(col("doc_id") % 2 =!= 0)))
+            .select(col("lang"),
+              explode(TextOps.wordShingles(TextOps.words(col("text")), 2))
+                .as("tok"))
+            .groupBy("lang")
+            .agg(Sketches.kmvSketch(Sketches.hash60(col("tok")), k).as("sk"))
+        }.select(col("lang"),
             size(col("sk")).as("sk_size"),
             Sketches.sketchChecksum(col("sk")).as("sk_checksum"),
             Fmt.t6(Sketches.kmvEstimate(col("sk"), k)).as("est_distinct"))
           .orderBy("lang")
-        // complete-mode memory sink holds the final table in memory;
-        // the staged arrival days are no longer needed
-        graft.LocalRun.deleteRecursively(stage)
-        out
       },
       Some {
         val h = Sketches.hash60Sql("tok")
@@ -946,24 +878,19 @@ object CorpusStreamQueries extends Q.Registry {
       (s, d) => {
         val k = 32
         val docs = Tables.documents(s, d).select("doc_id", "lang", "n_chars")
-        val (stage, inDir) = stageArrivalDays(
-          Seq(docs.filter(col("doc_id") % 2 === 0),
-            docs.filter(col("doc_id") % 2 =!= 0)), "graft_st9_")
-        val agg = s.readStream.schema(docs.schema)
-          .option("maxFilesPerTrigger", 1).parquet(inDir.toString)
-          .groupBy("lang")
-          .agg(Sketches.sampleSketch(
-            Sketches.hash60(col("doc_id").cast("string")),
-            col("n_chars"), k).as("sample"))
-        val out = IngestQueries.runToMemory(s, agg, "st9_out_", "complete")
-          .select(col("lang"),
+        BoundedStream.toMemory(s, "complete") { sc =>
+          BoundedStream.arrivals(sc, Seq(docs.filter(col("doc_id") % 2 === 0),
+              docs.filter(col("doc_id") % 2 =!= 0)))
+            .groupBy("lang")
+            .agg(Sketches.sampleSketch(
+              Sketches.hash60(col("doc_id").cast("string")),
+              col("n_chars"), k).as("sample"))
+        }.select(col("lang"),
             size(col("sample")).as("sample_size"),
             Sketches.sketchChecksum(col("sample")).as("sample_checksum"),
             Fmt.t6(Sketches.sampleQuantile(col("sample"), 0.5)).as("est_p50"),
             Fmt.t6(Sketches.sampleQuantile(col("sample"), 0.95)).as("est_p95"))
           .orderBy("lang")
-        graft.LocalRun.deleteRecursively(stage)
-        out
       },
       Some {
         val h = Sketches.hash60Sql("CAST(doc_id AS VARCHAR)")
@@ -1005,18 +932,15 @@ object CorpusStreamQueries extends Q.Registry {
         import org.apache.spark.sql.expressions.Window
         val R = 4; val W = 1024
         val docs = Tables.documents(s, d).select("doc_id", "text")
-        val (stage, inDir) = stageArrivalDays(
-          Seq(docs.filter(col("doc_id") % 2 === 0),
-            docs.filter(col("doc_id") % 2 =!= 0)), "graft_st11_")
         val rowIdx = explode(array((0 until R).map(lit): _*)).as("r")
-        val agg = s.readStream.schema(docs.schema)
-          .option("maxFilesPerTrigger", 1).parquet(inDir.toString)
-          .select(explode(TextOps.words(col("text"))).as("tok"))
-          .select(col("tok"), rowIdx)
-          .select(col("r"), Sketches.cmsBucket(col("r"), col("tok"), W).as("bucket"))
-          .groupBy("r", "bucket").agg(count(lit(1)).as("cnt"))
-        val cms = IngestQueries.runToMemory(s, agg, "st11_out_", "complete")
-        graft.LocalRun.deleteRecursively(stage)
+        val cms = BoundedStream.toMemory(s, "complete") { sc =>
+          BoundedStream.arrivals(sc, Seq(docs.filter(col("doc_id") % 2 === 0),
+              docs.filter(col("doc_id") % 2 =!= 0)))
+            .select(explode(TextOps.words(col("text"))).as("tok"))
+            .select(col("tok"), rowIdx)
+            .select(col("r"), Sketches.cmsBucket(col("r"), col("tok"), W).as("bucket"))
+            .groupBy("r", "bucket").agg(count(lit(1)).as("cnt"))
+        }
         // batch rebuild: the merge-identity arm (streamed ≡ batch).
         // cached artifact: the corpus tokenization feeds TWO independent
         // plan arms (batchCms by (r, bucket), exact by tok) with no
@@ -1097,34 +1021,23 @@ object CorpusStreamQueries extends Q.Registry {
       (s, d) => {
         val k = 8
         val docs = Tables.documents(s, d)
-        val (batch1, batch2, schema) = substrDedupBatches(docs)
-        val (stage, inDir) = stageArrivalDays(Seq(batch1, batch2), "graft_st12_")
         // cleaned/ stays readable for the returned lazy frame: one live
         // tree per query, the st7 policy
-        Artifacts.replace(Artifacts.Jvm, "", "st12_stage")(_.tree(stage))
-        val tableDir = stage.resolve("gram_table").toString
+        val stage = Artifacts.replace(Artifacts.Jvm, "", "st12_stage")(
+          _.tree(java.nio.file.Files.createTempDirectory("graft_st12_")))
         val outDir = stage.resolve("cleaned").toString
-        graft.streaming.SubstrDedupStream.initGramTable(
-          tableDir, docs, "doc_id", "text", k)
-        val q = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", 1).parquet(inDir.toString)
-          .writeStream
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .option("checkpointLocation", stage.resolve("ckpt").toString)
-          .foreachBatch { (b: DataFrame, batchId: Long) =>
-            graft.streaming.SubstrDedupStream.step(
-              s, tableDir, outDir, b, batchId, "doc_id", "text", k)
-            ()
-          }
-          .start()
-        q.awaitTermination()
-        // the returned frame reads only cleaned/ (partition-discovered
-        // batch=N dirs); drop the arrival days, checkpoint and the
-        // version chain — per-run scratch, the st7 cleanup note
-        graft.LocalRun.deleteRecursively(inDir)
-        graft.LocalRun.deleteRecursively(stage.resolve("ckpt"))
-        graft.LocalRun.deleteRecursively(
-          java.nio.file.Paths.get(tableDir))
+        // the version chain is per-run scratch: it lives (and goes)
+        // with the stream's own scratch root
+        var tableDir = ""
+        BoundedStream.foreachBatch { sc =>
+          tableDir = sc.root.resolve("gram_table").toString
+          graft.streaming.SubstrDedupStream.initGramTable(
+            tableDir, docs, "doc_id", "text", k)
+          BoundedStream.arrivals(sc, substrDedupBatches(docs))
+        } { (b, batchId) =>
+          graft.streaming.SubstrDedupStream.step(
+            s, tableDir, outDir, b, batchId, "doc_id", "text", k)
+        }
         s.read.parquet(outDir)
           .select("doc_id", "n_tokens", "n_removed_tokens", "clean_text")
           .orderBy("doc_id")

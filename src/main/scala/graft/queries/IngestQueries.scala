@@ -6,6 +6,7 @@ import org.apache.spark.sql.types._
 import graft.Tables
 import graft.ingest.IngestBatch
 import graft.ops.Derive
+import graft.streaming.BoundedStream
 
 /** SURVEY §3.1 ingest pipeline + §2.1 source-shape operators as
   * oracle-backed queries: JSON record batches (S1), dict-of-arrays
@@ -16,43 +17,10 @@ import graft.ops.Derive
 object IngestQueries extends Q.Registry {
   import RelationalQueries.enrSql
 
-  /** Stage DataFrames as single parquet files with pinned, strictly
-    * increasing mod-times under a fresh temp dir: with
-    * `maxFilesPerTrigger=1` the file source takes one per micro-batch,
-    * oldest first — a REAL multi-trigger arrival replay, not a
-    * simulation (st7/st8). Returns (stageRoot, inDir); callers clean
-    * both up via LocalRun.deleteRecursively once the stream is done. */
-  private[queries] def stageArrivalDays(days: Seq[org.apache.spark.sql.DataFrame],
-                                        prefix: String)
-      : (java.nio.file.Path, java.nio.file.Path) = {
-    val stage = java.nio.file.Files.createTempDirectory(prefix)
-    val inDir = java.nio.file.Files.createDirectories(stage.resolve("in"))
-    days.zipWithIndex.foreach { case (df, i) =>
-      val dest = inDir.resolve(s"day${i + 1}.parquet")
-      graft.LocalRun.writeSingleParquet(df, dest)
-      java.nio.file.Files.setLastModifiedTime(dest,
-        java.nio.file.attribute.FileTime.fromMillis(1700000000000L + i * 60000L))
-    }
-    (stage, inDir)
-  }
-
-  /** Bounded file stream over ONE table of the sf dir (the file source
-    * wants a directory; the glob filter narrows it): schema probe +
-    * read-conf guard in one place for every table any stream query
-    * taps (r8 review — events and documents streams each carried a
-    * copy). */
-  private[queries] def boundedTableStream(s: org.apache.spark.sql.SparkSession,
-                                          d: String, file: String)
-      : org.apache.spark.sql.DataFrame = {
-    Tables.ensureReadConfs(s) // the stream's direct reads bypass Tables.load
-    val rawSchema = s.read.parquet(s"$d/$file").schema
-    s.readStream.schema(rawSchema).option("pathGlobFilter", file).parquet(d)
-  }
-
   private def rawEventsStream(s: org.apache.spark.sql.SparkSession, d: String)
       : (org.apache.spark.sql.DataFrame, org.apache.spark.sql.Column) = {
     import org.apache.spark.sql.functions.{col, expr, timestamp_micros}
-    val raw = boundedTableStream(s, d, "events.parquet")
+    val raw = BoundedStream.table(s, d, "events.parquet")
     val tsCol =
       if (raw.schema("ts").dataType == org.apache.spark.sql.types.LongType)
         timestamp_micros(expr("ts div 1000"))
@@ -76,7 +44,7 @@ object IngestQueries extends Q.Registry {
 
   /** Second unbounded source for the st4 stream-stream join: every
     * 83rd event's value read as that tick's weather observation — an
-    * INDEPENDENT readStream over the same file, so the join really
+    * INDEPENDENT stream over the same file, so the join really
     * coordinates two sources. */
   private[graft] def readingsStream(s: org.apache.spark.sql.SparkSession,
                                     d: String): org.apache.spark.sql.DataFrame = {
@@ -128,22 +96,6 @@ object IngestQueries extends Q.Registry {
       Fmt.t6(when(col("n_purchase_after_view") > 0,
         col("lag2").cast("double") / col("n_purchase_after_view") / 3.6e9))
         .as("avg_hours_view_to_purchase"))
-  }
-
-  /** Run a bounded streaming frame to a uniquely-named memory sink and
-    * return the sink table. */
-  private[queries] def runToMemory(s: org.apache.spark.sql.SparkSession,
-                                   df: org.apache.spark.sql.DataFrame, prefix: String,
-                                   mode: String): org.apache.spark.sql.DataFrame = {
-    val sink = prefix + java.util.UUID.randomUUID().toString.replace("-", "")
-    // stateful operators get LocalRun.StreamStatePartitions state
-    // stores, a property of the session the stream clones at start()
-    df.writeStream.format("memory").queryName(sink)
-      .outputMode(mode)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-      .awaitTermination()
-    s.table(sink)
   }
 
   val all: Seq[Q] = Seq(
@@ -256,7 +208,7 @@ object IngestQueries extends Q.Registry {
         import org.apache.spark.sql.functions.{count, lit}
         val facts = eventsStream(s, d).select("station_no", "record_time")
         val deduped = graft.streaming.MicroBatchIngest.dedupWithinWatermark(facts)
-        runToMemory(s, deduped, "st1_out_", "append")
+        BoundedStream.toMemory(s, "append")(_ => deduped)
           .groupBy("station_no").agg(count(lit(1)).as("n_dedup"))
           .orderBy("station_no")
       },
@@ -273,7 +225,7 @@ object IngestQueries extends Q.Registry {
       (s, d) => {
         import org.apache.spark.sql.functions.col
         val agg = graft.streaming.MicroBatchIngest.hourlyWindowStats(eventsStream(s, d))
-        runToMemory(s, agg, "st2_out_", "complete")
+        BoundedStream.toMemory(s, "complete")(_ => agg)
           .select(
             col("window.start").as("window_start"),
             col("station_no"),
@@ -300,7 +252,7 @@ object IngestQueries extends Q.Registry {
           .toDF("station_no", "n_cum")
         // max over the per-batch emissions = the final running total
         // (robust to the source splitting the run into several batches)
-        runToMemory(s, counted, "st3_out_", "append")
+        BoundedStream.toMemory(s, "append")(_ => counted)
           .groupBy("station_no").agg(max("n_cum").as("n_events"))
           .orderBy("station_no")
       },
@@ -341,21 +293,13 @@ object IngestQueries extends Q.Registry {
         // LocalRun.StreamStatePartitions state stores per join side; each
         // batch arrives hash-partitioned by the join key, so the partial
         // aggregate groups by that key and needs no shuffle
-        joined.writeStream
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .option("checkpointLocation", stage.resolve("ckpt").toString)
-          .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
-            b.groupBy("hour_window")
-              .agg(count(lit(1)).as("n"),
-                sum("bikes_available").as("sum_bikes"),
-                sum("temperature").as("sum_temp"))
-              .write.mode("append").parquet(outDir)
-            ()
-          }
-          .start()
-          .awaitTermination()
-        // the checkpoint state is per-run scratch (the st7 cleanup note)
-        graft.LocalRun.deleteRecursively(stage.resolve("ckpt"))
+        BoundedStream.foreachBatch(_ => joined) { (b, _) =>
+          b.groupBy("hour_window")
+            .agg(count(lit(1)).as("n"),
+              sum("bikes_available").as("sum_bikes"),
+              sum("temperature").as("sum_temp"))
+            .write.mode("append").parquet(outDir)
+        }
         s.read.parquet(outDir)
           .groupBy(col("hour_window.start").as("hour_start"))
           .agg(sum("n").as("n_pairs"),
@@ -408,24 +352,19 @@ object IngestQueries extends Q.Registry {
         val day3 = s.range(1).select(lit(-1L).as("user_id"),
           timestamp_micros(lit(hi + 30L * 24 * 3600 * 1000000L)).as("ts"),
           lit("flush").as("event_type"))
-        val (stage, inDir) = stageArrivalDays(
-          Seq(day1, day2, day3), "graft_st10_")
-        val agg = s.readStream.schema(day1.schema)
-          .option("maxFilesPerTrigger", 1).parquet(inDir.toString)
-          .withWatermark("ts", "1 hour")
-          .groupBy(col("user_id"), session_window(col("ts"), "6 hours"))
-          .agg(count(lit(1)).as("n_events"),
-            sum((col("event_type") === "purchase").cast("long"))
-              .as("n_purchases"))
-        val out = runToMemory(s, agg, "st10_out_", "append")
-          .filter(col("user_id") =!= -1L)
+        BoundedStream.toMemory(s, "append") { sc =>
+          BoundedStream.arrivals(sc, Seq(day1, day2, day3))
+            .withWatermark("ts", "1 hour")
+            .groupBy(col("user_id"), session_window(col("ts"), "6 hours"))
+            .agg(count(lit(1)).as("n_events"),
+              sum((col("event_type") === "purchase").cast("long"))
+                .as("n_purchases"))
+        }.filter(col("user_id") =!= -1L)
           .select(col("user_id"),
             col("session_window.start").as("session_start"),
             col("session_window.end").as("session_end"),
             col("n_events"), col("n_purchases"))
           .orderBy("user_id", "session_start")
-        graft.LocalRun.deleteRecursively(stage)
-        out
       },
       Some(
         """WITH sv AS (
@@ -477,18 +416,13 @@ object IngestQueries extends Q.Registry {
         val cutUs = mm.getLong(0) + (mm.getLong(1) - mm.getLong(0)) / 2
         val day1 = ev.filter(unix_micros(col("ts")) <= cutUs)
         val day2 = ev.filter(unix_micros(col("ts")) > cutUs)
-        val (stage, inDir) = stageArrivalDays(
-          Seq(day1, day2), "graft_st13_")
-        val src = s.readStream.schema(day1.schema)
-          .option("maxFilesPerTrigger", 1).parquet(inDir.toString)
-        val emits = graft.streaming.FunnelStream
-          .stageTimes(src, "user_id", "ts", "event_type",
-            Seq("click", "view", "purchase"), windowHours = 24)
-          .toDF("user_id", "t")
-        val sink = runToMemory(s, emits, "st13_out_", "append")
-        val roll = funnelAnchorRollup(sink)
-        graft.LocalRun.deleteRecursively(stage)
-        roll
+        funnelAnchorRollup(BoundedStream.toMemory(s, "append") { sc =>
+          graft.streaming.FunnelStream
+            .stageTimes(BoundedStream.arrivals(sc, Seq(day1, day2)),
+              "user_id", "ts", "event_type",
+              Seq("click", "view", "purchase"), windowHours = 24)
+            .toDF("user_id", "t")
+        })
       },
       Some(RelationalQueries.funnel3OracleSql)),
 
@@ -527,23 +461,19 @@ object IngestQueries extends Q.Registry {
         def sentinel(us: Long) = s.range(1).select(
           lit(-777L).as("user_id"), timestamp_micros(lit(us)).as("ts"),
           lit("noise").as("event_type"))
-        val (stage, inDir) = stageArrivalDays(
-          Seq(ev.filter(unix_micros(col("ts")) > cutUs),   // day 2 FIRST
-            ev.filter(unix_micros(col("ts")) <= cutUs),    // then day 1
+        val sink = BoundedStream.toMemory(s, "append") { sc =>
+          val days = Seq(ev.filter(unix_micros(col("ts")) > cutUs), // day 2 FIRST
+            ev.filter(unix_micros(col("ts")) <= cutUs),              // then day 1
             sentinel(sent1Us),  // advances the watermark past hi
-            sentinel(sent2Us)), // the trigger whose timeouts flush
-          "graft_st14_")
-        val src = s.readStream.schema(ev.schema)
-          .option("maxFilesPerTrigger", 1).parquet(inDir.toString)
-        val emits = graft.streaming.FunnelStream
-          .stageTimesBuffered(src, "user_id", "ts", "event_type",
-            Seq("click", "view", "purchase"), windowHours = 24,
-            delayThreshold = s"$delaySec seconds")
-          .toDF("user_id", "t")
-        val sink = runToMemory(s, emits, "st14_out_", "append")
-        val roll = funnelAnchorRollup(sink.filter(col("user_id") >= 0))
-        graft.LocalRun.deleteRecursively(stage)
-        roll
+            sentinel(sent2Us))  // the trigger whose timeouts flush
+          graft.streaming.FunnelStream
+            .stageTimesBuffered(BoundedStream.arrivals(sc, days),
+              "user_id", "ts", "event_type",
+              Seq("click", "view", "purchase"), windowHours = 24,
+              delayThreshold = s"$delaySec seconds")
+            .toDF("user_id", "t")
+        }
+        funnelAnchorRollup(sink.filter(col("user_id") >= 0))
       },
       Some(RelationalQueries.funnel3OracleSql)),
 

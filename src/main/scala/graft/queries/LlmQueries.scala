@@ -6,13 +6,14 @@ import org.apache.spark.sql.functions._
 import graft.{Artifacts, Tables}
 import graft.llm.{Dedup, LangModel, Multimodal, Packing, Repetition, Sampling, Similarity, TextOps}
 import graft.ops.Sketches
+import graft.streaming.BoundedStream
 
 /** The composed curation chains (llm), each oracle restating its chain
   * stage by stage. No other registry reads this one. */
 object LlmQueries extends Q.Registry {
   import Corpus.{LowerWordsSql, corpus, corpusSql}
   import CorpusStreamQueries.{EmbTau, EmbTauQ, gateTerms, qzOver,
-    replayArrivals, storeAsOf, substrCoverageLeg, substrGramCtes}
+    storeAsOf, substrCoverageLeg, substrGramCtes}
   import DedupQueries.{semDedupCoreSql, semanticDupsFrame}
   import MultimodalQueries.imageHashes
   import SearchQueries.q8of
@@ -464,12 +465,8 @@ object LlmQueries extends Q.Registry {
       // the replay a no-op (the durable-state form of the same guard
       // is st12's batchId-keyed versioned table).
       var lastAdvanced = -1L
-      val schema = new org.apache.spark.sql.types.StructType()
-        .add("doc_id", org.apache.spark.sql.types.LongType)
-        .add("src_id", org.apache.spark.sql.types.LongType)
-        .add("text", org.apache.spark.sql.types.StringType)
-      replayArrivals(s, stage, Seq(curBatch1(docs), curBatch2(docs)),
-          "graft_llm8_in_", schema) { (b, batchId) =>
+      BoundedStream.foreachBatch(
+          BoundedStream.arrivals(_, Seq(curBatch1(docs), curBatch2(docs)))) { (b, batchId) =>
         val bc = b.cache(); bc.count()
         try {
           // stage 1: incremental exact-substring dedup (st7's step)

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.{Artifacts, Tables}
 import graft.ml.{GramOls, LinearScore, Lstm, Models}
 import graft.ops.{Derive, Windows}
+import graft.streaming.BoundedStream
 
 /** SURVEY §2.10 ML layer (X10-X13, X15) + J6 as registered queries.
   *
@@ -559,7 +560,7 @@ object MlQueries extends Q.Registry {
           col("event_id"),
           Fmt.t6(p).as("rate_pred"),
           Derive.clampRoundNonNeg(p * col("total_spaces")).as("bikes_pred"))
-        IngestQueries.runToMemory(s, scored, "st5_out_", "append")
+        BoundedStream.toMemory(s, "append")(_ => scored)
           .orderBy("event_id")
       },
       oracleScore(M3F).map { ls =>

@@ -2,9 +2,13 @@
 """Local replica of the driver's correctness gate: run graft.Verify at a
 given SF into an outDir, then execute each oracle_sql.json entry in
 DuckDB over the same parquet tables and compare (rows, schema columns,
-values after sorting columns by name and rows by all columns).
+values after sorting columns by name and rows by all columns; values
+compare by `values_equal`).
 
-Usage: python3 tools/localverify.py [sfDir] [outDir] [--skip-spark]
+Usage: python3 tools/localverify.py [sfDir] [outDir] [query...] [--skip-spark]
+
+Trailing query names restrict both the Spark dump and the comparison to
+those queries. --skip-spark reuses the dump already in outDir.
 """
 import json
 import math
@@ -18,9 +22,9 @@ import pandas as pd
 TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
 
 
-def run_spark(sf_dir: str, out_dir: str) -> None:
+def run_spark(sf_dir: str, out_dir: str, names: list) -> None:
     subprocess.run(
-        ["sbt", f'runMain graft.Verify {sf_dir} {out_dir}'],
+        ["sbt", " ".join(["runMain graft.Verify", sf_dir, out_dir, *names])],
         check=True, cwd=Path(__file__).resolve().parent.parent,
         stdout=subprocess.DEVNULL, stderr=subprocess.DEVNULL)
 
@@ -35,6 +39,9 @@ def canon(df: pd.DataFrame) -> pd.DataFrame:
 
 
 def values_equal(a, b) -> bool:
+    """None and NaN are one null. Once either side is a float, both
+    compare as floats (-0.0 == 0.0, 1 == 1.0, and a numeric string equals
+    its value); anything else compares by ==."""
     if a is None or b is None or (isinstance(a, float) and math.isnan(a)):
         an = a is None or (isinstance(a, float) and math.isnan(a))
         bn = b is None or (isinstance(b, float) and math.isnan(b))
@@ -53,15 +60,18 @@ def values_equal(a, b) -> bool:
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     out_dir = sys.argv[2] if len(sys.argv) > 2 else "/tmp/graft_verify"
+    names = [a for a in sys.argv[3:] if a != "--skip-spark"]
     if "--skip-spark" not in sys.argv:
         print(f"[localverify] running graft.Verify {sf_dir} -> {out_dir}")
-        run_spark(sf_dir, out_dir)
+        run_spark(sf_dir, out_dir, names)
 
     con = duckdb.connect()
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')")
 
     oracle = json.loads(Path(out_dir, "oracle_sql.json").read_text())
+    if names:
+        oracle = {n: sql for n, sql in oracle.items() if n in names}
     failures = []
     for name, sql in sorted(oracle.items()):
         spark_path = Path(out_dir, name)
